@@ -665,8 +665,9 @@ def test_svd_compressed_fused_tree_tsqr_path(spark):
 
 
 def test_transpose_matvec_fused_matches_join(spark, rng):
-    """Fused (broadcast-Y + in-task generation) vs join path, including
-    the absent-Y-block ≡ zero convention both must honor."""
+    """Seeded A (key rows, blocks regenerated in-task) vs materialized A
+    through the same broadcast-Y join, including the absent-Y-block ≡ zero
+    convention both must honor."""
     from pyspark.sql import functions as F
 
     a = BlockMatrix.random(spark, 1200, 300, 256, 128, seed=5)
@@ -682,10 +683,17 @@ def test_transpose_matvec_fused_matches_join(spark, rng):
     assert np.abs(got - a.to_numpy().T @ yn).max() < 1e-10
 
 
-def test_tsqr_fused_matches_materialized(spark):
-    """Seed-generated inputs take the in-task-generation TSQR stage-1
-    branch; Q and R must match the materialized-scan branch exactly."""
-    a = BlockMatrix.random(spark, 8192, 32, 1024, 32, seed=5)
+@pytest.mark.parametrize(
+    "n, c, br",
+    [(8192, 32, 1024), (1600, 8, 16)],  # 100 block rows > TSQR_TREE_FANOUT
+    ids=["direct", "tree"],
+)
+def test_tsqr_fused_matches_materialized(spark, n, c, br):
+    """A seed-generated input regenerates its blocks in-task (stage 1 and
+    the Q stage's redone block QR); Q and R must match the materialized
+    input's persisted-Q1 path exactly — on the direct merge and on the
+    distributed tree merge."""
+    a = BlockMatrix.random(spark, n, c, br, c, seed=5)
     unfused = BlockMatrix(a.df, a.n_rows, a.n_cols, a.block_rows, a.block_cols)
     qf, rf = a.tsqr()
     qu, ru = unfused.tsqr()
@@ -729,17 +737,55 @@ def _run_past_gate_checks(spark, rng, cholesky_blocked):
     assert np.abs(ln @ ln.T - spd).max() < 1e-9
 
 
-def test_transpose_matvec_fused_cap_fallback(spark, rng, monkeypatch):
-    """A seed-generated A whose Y exceeds TMV_FUSED_Y_CAP must take the
-    equi-join path and agree with the fused branch."""
+def test_gen_block_has_one_call_site():
+    """Seeded blocks are regenerated in exactly one place, the block
+    resolver: every kernel reads one source, so no kernel can carry a
+    seeded twin of its materialized loop."""
+    import ast
+    import inspect
+
     import wukong_spark.blockmatrix as bmod
 
-    a = BlockMatrix.random(spark, 600, 90, 128, 45, seed=23)
-    y = BlockMatrix.from_numpy(spark, rng.standard_normal((600, 2)), 128, 2)
-    fused = a.transpose_matvec(y)
-    monkeypatch.setattr(bmod, "TMV_FUSED_Y_CAP", 0)
-    joined = a.transpose_matvec(y)
-    assert np.abs(fused - joined).max() < 1e-12
+    callers: list[str] = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                visit(child, scope + [child.name])
+                continue
+            if isinstance(child, ast.Name) and child.id == "_gen_block":
+                callers.append(".".join(scope))
+            visit(child, scope)
+
+    visit(ast.parse(inspect.getsource(bmod)), [])
+    assert callers == ["_Layout.resolve"]
+
+
+def test_sketch_project_collects_per_block_column(spark, monkeypatch):
+    """The fused sketch's Z = AᵀY partials reduce executor-side: on a tall
+    seeded grid the driver receives grid_cols Z rows per pass, never one
+    per block, and σ still matches the materialized path."""
+    a = BlockMatrix.random(spark, 1280, 40, 20, 20, seed=29)  # 64×2 blocks
+    # same blocks, fewer partitions: keeps the 128-block reference quick
+    unfused = BlockMatrix(a.df.coalesce(4), a.n_rows, a.n_cols, 20, 20)
+    _, s_u, _ = unfused.svd_compressed(k=3, seed=2, n_iter=1)
+    log: list[tuple[tuple, int]] = []
+    DataFrame = type(a.df)  # the concrete class (pyspark.sql.DataFrame is abstract)
+    real = DataFrame.collect
+
+    def counting(self):
+        rows = real(self)
+        log.append((tuple(self.columns), len(rows)))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", counting)
+    u, s_f, _ = a.svd_compressed(k=3, seed=2, n_iter=1)
+    monkeypatch.undo()
+    u.release()
+    z_rows = [nrows for cols, nrows in log if cols == ("bj", "z")]
+    assert z_rows == [a.grid_cols, a.grid_cols]  # n_iter + 1 passes
+    assert max(nrows for _, nrows in log) < a.grid_rows
+    assert np.abs(np.asarray(s_f) - np.asarray(s_u)).max() < 1e-9
 
 
 def test_zip_fused_matches_join(spark, rng):

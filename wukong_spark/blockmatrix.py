@@ -20,6 +20,15 @@ Spark-first design (NOT a translation of Dask's task graphs):
 - Block generation is *deterministic per block id* regardless of
   partitioning or executor count (`np.random.Generator(PCG64(seed + bid))`),
   mirroring how dask seeds chunked RandomState.
+- ONE block source: every kernel reads ``_source(bm)`` — ``bm.df`` for a
+  materialized matrix, or, for a seed-generated one, ``(bi, bj, data)``
+  KEY rows from ``spark.range`` with ``data`` NULL — and turns each Arrow
+  row into an ndarray through the one resolver ``_Layout.resolve``: a
+  payload becomes a zero-copy buffer view, a NULL regenerates the block
+  from (seed, block id) inside the consuming task.  Each kernel is written
+  once; seeded inputs fuse generation into their consumers by
+  construction (dask's blockwise fusion of ``da.random``), so their
+  payloads never cross the JVM↔Python boundary.
 - GEMM is the classic SUMMA join: A ⋈ B on the contraction index, per-pair
   ``np.dot`` partials, shuffle to (bi, bj), in-order accumulation →
   deterministic bitwise-stable sums.
@@ -59,12 +68,10 @@ BLOCK_SCHEMA = StructType(
 
 
 def _gen_block(seed: int, bid: int, r: int, c: int) -> "np.ndarray":
-    """THE canonical seeded block generator: every fused consumer (matmul
-    tiles, gramian, sketch, transpose_matvec, tsqr stage 1, elementwise
-    zips) and :meth:`BlockMatrix.random` itself MUST generate through this
-    one function — fusion correctness is bitwise identity with random(),
-    and a drifting inlined copy would silently produce wrong fused
-    results.  bid = bi * grid_cols + bj.
+    """THE canonical seeded block generator, called only by the block
+    resolver (:meth:`_Layout.resolve`) — so :meth:`BlockMatrix.random`'s
+    payloads and every kernel that reads a seeded source regenerate the
+    same bits, and no inlined copy can drift.  bid = bi * grid_cols + bj.
 
     The fill is CHUNKED through the generator (bitwise identical to a
     one-shot ``rng.random((r, c))`` — the PCG64 double stream is
@@ -138,6 +145,149 @@ def _gen_parts(spark, nblk: int) -> int:
     par = spark.sparkContext.defaultParallelism
     return max(1, min(nblk, max(GEN_PART_CAP_FLOOR, 2 * par)))
 
+
+@dataclass(frozen=True)
+class _Layout:
+    """Block geometry (and generation seed) of one matrix — the picklable
+    part of a BlockMatrix that executor closures capture."""
+
+    n: int
+    m: int
+    br: int
+    bc: int
+    seed: int | None = None
+
+    def shape(self, bi: int, bj: int) -> tuple[int, int]:
+        return min(self.br, self.n - bi * self.br), min(self.bc, self.m - bj * self.bc)
+
+    def resolve(self, cell, bi: int, bj: int) -> np.ndarray:
+        """THE block resolver: an Arrow binary cell → block (bi, bj) as an
+        ndarray — a zero-copy view of a payload, or, for a NULL (or None)
+        cell of a seeded source, the block regenerated from (seed, bid)."""
+        r, c = self.shape(bi, bj)
+        if cell is not None and cell.is_valid:
+            return np.frombuffer(cell.as_buffer(), dtype=np.float64).reshape(r, c)
+        return _gen_block(self.seed, bi * _grid(self.m, self.bc) + bj, r, c)
+
+    def blocks(self, rb) -> Iterator:
+        """(bi, bj, block) for each row of an Arrow batch, in row order."""
+        bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
+        for i in range(rb.num_rows):
+            bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
+            yield bi, bj, self.resolve(d_c[i], bi, bj)
+
+
+def _key_rows(spark, gr: int, gc: int) -> DataFrame:
+    """``(bi, bj, data)`` rows of a gr×gc grid with ``data`` NULL — the
+    source of a seeded matrix, one partition per block up to _gen_parts."""
+    nblk = gr * gc
+    return spark.range(0, nblk, 1, _gen_parts(spark, nblk)).select(
+        (F.col("id") / gc).cast("int").alias("bi"),
+        (F.col("id") % gc).cast("int").alias("bj"),
+        F.lit(None).cast("binary").alias("data"),
+    )
+
+
+def _source(bm: "BlockMatrix") -> DataFrame:
+    """THE block source every kernel reads: ``bm.df``, or key rows for a
+    seed-generated matrix, whose blocks the resolver regenerates inside
+    the consuming task (the O(matrix) payloads are never shipped)."""
+    if bm.gen_seed is None:
+        return bm.df
+    return _key_rows(bm.df.sparkSession, bm.grid_rows, bm.grid_cols)
+
+
+def _blockwise(src: DataFrame, g: _Layout, fn) -> DataFrame:
+    """The one Arrow loop of every blockwise map: ``fn(bi, bj, block)``
+    returns ``(out_bi, out_bj, out_block)`` for each source block."""
+
+    def run(batches) -> Iterator:
+        import pyarrow as pa
+
+        schema = _pa_block_schema(pa)
+        for rb in batches:
+            out: dict[str, list] = {"bi": [], "bj": [], "data": []}
+            for bi, bj, blk in g.blocks(rb):
+                obi, obj, res = fn(bi, bj, blk)
+                out["bi"].append(obi)
+                out["bj"].append(obj)
+                out["data"].append(np.ascontiguousarray(res).tobytes())
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+    return src.mapInArrow(run, BLOCK_SCHEMA)
+
+
+def _piece_rows(src: DataFrame, g: _Layout, pieces) -> DataFrame:
+    """Map side of every re-blocking: ``pieces(bi, bj, block)`` yields
+    ``(obi, obj, r0, c0, piece)`` — destination block, in-block offset and
+    a sub-array — for each source block; rows carry the piece's extent and
+    bytes for :meth:`BlockMatrix._stitch_pieces`."""
+
+    def run(batches) -> Iterator:
+        import pyarrow as pa
+
+        ints = ["obi", "obj", "r0", "c0", "nr", "nc"]
+        schema = pa.schema([(k, pa.int32()) for k in ints] + [("p", pa.binary())])
+        for rb in batches:
+            out: dict[str, list] = {k: [] for k in schema.names}
+            for bi, bj, blk in g.blocks(rb):
+                for obi, obj, r0, c0, piece in pieces(bi, bj, blk):
+                    row = (obi, obj, r0, c0, *piece.shape)
+                    for k, v in zip(ints, row):
+                        out[k].append(v)
+                    out["p"].append(np.ascontiguousarray(piece).tobytes())
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+    return src.mapInArrow(
+        run, "obi int, obj int, r0 int, c0 int, nr int, nc int, p binary"
+    )
+
+
+def _ordered_sum(pdf: pd.DataFrame) -> bytes:
+    """Copy-then-add one group's ``p`` partials in ascending ``k`` — the
+    accumulation order every partial-sum reduction here shares, so fused
+    and materialized paths add the same doubles in the same order."""
+    total = None
+    for buf in pdf.sort_values("k")["p"]:
+        b = np.frombuffer(buf)
+        total = b.copy() if total is None else total + b
+    return total.tobytes()
+
+
+def _sum_partials(partials: DataFrame, m: int, bc: int, p: int) -> np.ndarray:
+    """Reduce ``(bj, k, p)`` partials — c×p slices of an m×p result —
+    executor-side per bj (:func:`_ordered_sum`); the driver receives one
+    row per block column and stitches the result."""
+
+    def acc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"bj": [key[0]], "z": [_ordered_sum(pdf)]})
+
+    rows = partials.groupBy("bj").applyInPandas(acc, "bj int, z binary").collect()
+    out = np.zeros((m, p))
+    for row in rows:
+        c = min(bc, m - row.bj * bc)
+        out[row.bj * bc : row.bj * bc + c, :] = np.frombuffer(row.z).reshape(c, p)
+    return out
+
+
+def _stack_qr(pieces, c: int, canonical: bool = True):
+    """QR of the key-ordered vertical stack of R pieces ``(key, bytes)`` —
+    the merge of every TSQR level.  ``canonical`` flips signs so diag(R) ≥
+    0 (and the matching Q columns).  Returns ({key: Q rows}, R)."""
+    pieces = sorted(pieces, key=lambda kv: kv[0])
+    stack = [np.frombuffer(b).reshape(-1, c) for _, b in pieces]
+    q, r = np.linalg.qr(np.vstack(stack), mode="reduced")
+    if canonical:
+        signs = np.sign(np.diag(r))
+        signs[signs == 0] = 1.0
+        r, q = r * signs[:, None], q * signs[None, :]
+    slices, off = {}, 0
+    for (key, _), s in zip(pieces, stack):
+        slices[key] = q[off : off + s.shape[0], :]
+        off += s.shape[0]
+    return slices, r
+
+
 #: per-tile buffer cap for GEMM output tiles (accumulator + stitched
 #: k-superchunk operands each stay under this)
 GEMM_TILE_MEM_CAP = 256 * 1024 * 1024
@@ -148,12 +298,6 @@ GEMM_TILE_MEM_CAP = 256 * 1024 * 1024
 #: patch it down and exercise the at-scale fallback branches on small
 #: inputs.
 BROADCAST_CAP = 256 * 1024 * 1024
-
-#: largest Y a fused (seed-generated A) transpose_matvec ships as an
-#: sc.broadcast dict; larger Y falls back to the equi-join path.  Separate
-#: (and smaller) than BROADCAST_CAP because the dict is also pickled into
-#: the driver heap; patchable so tests can drive the fallback.
-TMV_FUSED_Y_CAP = 64 * 1024 * 1024
 
 
 def _gemm_tile_factor(gi: int, gj: int, br: int, bc: int, parallelism: int) -> int:
@@ -192,8 +336,8 @@ class BlockMatrix:
     block_rows: int
     block_cols: int
     #: set ONLY by :meth:`random` — blocks are a pure function of
-    #: (gen_seed, bi, bj), which lets consumers (GEMM) fuse generation
-    #: into their own stages instead of shuffling the 8 MB payloads
+    #: (gen_seed, bi, bj), so :func:`_source` serves key rows and every
+    #: kernel regenerates blocks in-task instead of shipping the payloads
     #: (dask's blockwise fusion of ``da.random`` into consumers).  Any
     #: transformation constructs a new BlockMatrix without it, so the
     #: fusion can never observe stale data.
@@ -208,10 +352,14 @@ class BlockMatrix:
     def grid_cols(self) -> int:
         return _grid(self.n_cols, self.block_cols)
 
+    @property
+    def layout(self) -> _Layout:
+        return _Layout(
+            self.n_rows, self.n_cols, self.block_rows, self.block_cols, self.gen_seed
+        )
+
     def block_shape(self, bi: int, bj: int) -> tuple[int, int]:
-        r = min(self.block_rows, self.n_rows - bi * self.block_rows)
-        c = min(self.block_cols, self.n_cols - bj * self.block_cols)
-        return r, c
+        return self.layout.shape(bi, bj)
 
     # -- constructors -----------------------------------------------------
     @staticmethod
@@ -228,34 +376,14 @@ class BlockMatrix:
         Deterministic per block id — independent of partitioning, executor
         count, and scheduling order, so results are reproducible on any
         cluster size (the property dask gets from chunked RandomState).
+
+        ``df`` materializes the payloads (the identity map over the key
+        rows); kernels read the key rows themselves (:func:`_source`).
         """
-        nbr, nbc = _grid(n_rows, block_rows), _grid(n_cols, block_cols)
-
-        def gen(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                id_c = rb.column("id")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bid = id_c[i].as_py()
-                    bi, bj = bid // nbc, bid % nbc
-                    r = min(block_rows, n_rows - bi * block_rows)
-                    c = min(block_cols, n_cols - bj * block_cols)
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append(_gen_block(seed, bid, r, c).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        # one block per row, partition count set at range creation — no
-        # repartition shuffle before generation
-        df = spark.range(0, nbr * nbc, 1, _gen_parts(spark, nbr * nbc)).mapInArrow(
-            gen, BLOCK_SCHEMA
-        )
-        return BlockMatrix(
-            df, n_rows, n_cols, block_rows, block_cols, gen_seed=seed
-        )
+        g = _Layout(n_rows, n_cols, block_rows, block_cols, seed)
+        keys = _key_rows(spark, _grid(n_rows, block_rows), _grid(n_cols, block_cols))
+        df = _blockwise(keys, g, lambda bi, bj, blk: (bi, bj, blk))
+        return BlockMatrix(df, n_rows, n_cols, block_rows, block_cols, gen_seed=seed)
 
     @staticmethod
     def from_numpy(
@@ -383,36 +511,22 @@ class BlockMatrix:
         )
 
     # -- elementwise ------------------------------------------------------
+    def _blockwise(self, fn, n: int, m: int, br: int, bc: int) -> "BlockMatrix":
+        """Blockwise map over this matrix's source (see :func:`_blockwise`)
+        into an n×m matrix blocked br×bc."""
+        return BlockMatrix(_blockwise(_source(self), self.layout, fn), n, m, br, bc)
+
     def _map_blocks(
         self, fn: Callable[[np.ndarray], np.ndarray], out_cols: int | None = None
     ) -> "BlockMatrix":
         """Blockwise map.  ``out_cols`` declares a column-count change
         (e.g. projecting p→k columns); requires a one-block-wide matrix."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
         if out_cols is not None:
             assert self.grid_cols == 1, "out_cols only for one-block-wide matrices"
-
-        def run(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append(np.ascontiguousarray(fn(blk)).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        new_m = m if out_cols is None else out_cols
-        new_bc = bc if out_cols is None else out_cols
-        return BlockMatrix(
-            self.df.mapInArrow(run, BLOCK_SCHEMA), n, new_m, br, new_bc
+        m = self.n_cols if out_cols is None else out_cols
+        bc = self.block_cols if out_cols is None else out_cols
+        return self._blockwise(
+            lambda bi, bj, blk: (bi, bj, fn(blk)), self.n_rows, m, self.block_rows, bc
         )
 
     def scale(self, alpha: float) -> "BlockMatrix":
@@ -427,76 +541,49 @@ class BlockMatrix:
     ) -> "BlockMatrix":
         assert (self.n_rows, self.n_cols) == (other.n_rows, other.n_cols)
         assert (self.block_rows, self.block_cols) == (other.block_rows, other.block_cols)
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-
-        # fused generation (gramian pattern): when one side is
-        # seed-generated, regenerate its block from (seed, bid) inside the
-        # zip task instead of equi-joining the two block streams — the
-        # residual checks (X − A for generated A) lose their only shuffle.
-        # Semantics match the inner join exactly: a generated side has
-        # every block of the grid, so no pair is ever dropped.  When both
-        # sides are generated, the self side still scans (executing its
-        # generation plan) — one fused side already removes the join.
-        def _gen_zip(scan: "BlockMatrix", seed: int, gcols: int, gen_is_self: bool):
-            def run(batches) -> Iterator:
-                import pyarrow as pa
-
-                schema = _pa_block_schema(pa)
-                for rb in batches:
-                    bi_c, bj_c, d_c = (
-                        rb.column("bi"), rb.column("bj"), rb.column("data")
-                    )
-                    out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                    for i in range(rb.num_rows):
-                        bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                        r = min(br, n - bi * br)
-                        c = min(bc, m - bj * bc)
-                        scanned = np.frombuffer(
-                            d_c[i].as_buffer(), dtype=np.float64
-                        ).reshape(r, c)
-                        gen = _gen_block(seed, bi * gcols + bj, r, c)
-                        x, y = (gen, scanned) if gen_is_self else (scanned, gen)
-                        out["bi"].append(bi)
-                        out["bj"].append(bj)
-                        out["data"].append(np.ascontiguousarray(fn(x, y)).tobytes())
-                    yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-            return BlockMatrix(scan.df.mapInArrow(run, BLOCK_SCHEMA), n, m, br, bc)
-
-        if other.gen_seed is not None:
-            return _gen_zip(self, other.gen_seed, other.grid_cols, gen_is_self=False)
-        if self.gen_seed is not None:
-            return _gen_zip(other, self.gen_seed, self.grid_cols, gen_is_self=True)
-        joined = self.df.alias("a").join(
-            other.df.alias("b"),
-            (F.col("a.bi") == F.col("b.bi")) & (F.col("a.bj") == F.col("b.bj")),
-        ).select(
-            F.col("a.bi").alias("bi"),
-            F.col("a.bj").alias("bj"),
-            F.col("a.data").alias("da"),
-            F.col("b.data").alias("db"),
-        )
+        ga, gb = self.layout, other.layout
+        if self.gen_seed is None and other.gen_seed is None:
+            pairs = self.df.alias("a").join(
+                other.df.alias("b"),
+                (F.col("a.bi") == F.col("b.bi")) & (F.col("a.bj") == F.col("b.bj")),
+            ).select(
+                F.col("a.bi").alias("bi"),
+                F.col("a.bj").alias("bj"),
+                F.col("a.data").alias("data"),
+                F.col("b.data").alias("db"),
+            )
+        else:
+            # a seeded side has every block of the grid and resolves from a
+            # NULL cell, so no join: scan the other side's source (key rows
+            # when both are seeded) — the residual checks (X − A for
+            # generated A) lose their only shuffle
+            scan = other if self.gen_seed is not None else self
+            null = F.lit(None).cast("binary")
+            pairs = _source(scan).select(
+                "bi",
+                "bj",
+                (F.col("data") if scan is self else null).alias("data"),
+                (F.col("data") if scan is other else null).alias("db"),
+            )
 
         def run(batches) -> Iterator:
             import pyarrow as pa
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                da_c, db_c = rb.column("da"), rb.column("db")
+                db_c = rb.column("db")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    x = np.frombuffer(da_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    y = np.frombuffer(db_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for i, (bi, bj, x) in enumerate(ga.blocks(rb)):
+                    y = gb.resolve(db_c[i], bi, bj)
                     out["bi"].append(bi)
                     out["bj"].append(bj)
                     out["data"].append(np.ascontiguousarray(fn(x, y)).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        return BlockMatrix(joined.mapInArrow(run, BLOCK_SCHEMA), n, m, br, bc)
+        return BlockMatrix(
+            pairs.mapInArrow(run, BLOCK_SCHEMA),
+            self.n_rows, self.n_cols, self.block_rows, self.block_cols,
+        )
 
     def add(self, other: "BlockMatrix") -> "BlockMatrix":
         return self._zip_blocks(other, np.add)
@@ -509,153 +596,83 @@ class BlockMatrix:
         return self._zip_blocks(other, np.multiply)
 
     def transpose(self) -> "BlockMatrix":
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-
-        def run(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    out["bi"].append(bj)
-                    out["bj"].append(bi)
-                    out["data"].append(np.ascontiguousarray(blk.T).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        return BlockMatrix(self.df.mapInArrow(run, BLOCK_SCHEMA), m, n, bc, br)
+        return self._blockwise(
+            lambda bi, bj, blk: (bj, bi, blk.T),
+            self.n_cols, self.n_rows, self.block_cols, self.block_rows,
+        )
 
     # -- reductions -------------------------------------------------------
-    def frobenius_norm(self) -> float:
-        """‖A‖_F via per-block partial sums + Spark agg (tree reduction)."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
+    def _reduce_blocks(self, stat: Callable[[np.ndarray], float], agg):
+        """One float per block (``stat``), combined by a Spark aggregate."""
+        g = self.layout
 
-        def sq(batches) -> Iterator:
+        def part(batches) -> Iterator:
             import pyarrow as pa
 
+            schema = pa.schema([("v", pa.float64())])
             for rb in batches:
-                d_c = rb.column("data")
-                vals = []
-                for i in range(rb.num_rows):
-                    v = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64)
-                    vals.append(float(v @ v))
-                yield pa.RecordBatch.from_pydict(
-                    {"ss": vals}, schema=pa.schema([("ss", pa.float64())])
-                )
+                vals = [float(stat(blk)) for _, _, blk in g.blocks(rb)]
+                yield pa.RecordBatch.from_pydict({"v": vals}, schema=schema)
 
-        part = self.df.mapInArrow(sq, "ss double")
-        total = part.agg(F.sum("ss")).collect()[0][0]
-        return math.sqrt(total)
+        return _source(self).mapInArrow(part, "v double").agg(agg("v")).collect()[0][0]
+
+    def frobenius_norm(self) -> float:
+        """‖A‖_F via per-block partial sums + Spark agg (tree reduction)."""
+
+        def sq(blk: np.ndarray) -> float:
+            v = blk.ravel()
+            return v @ v
+
+        return math.sqrt(self._reduce_blocks(sq, F.sum))
 
     def max_abs(self) -> float:
         """‖A‖_max (largest |entry|) — per-block partial max + Spark agg.
 
         The distributed check primitive: ‖L·Lᵀ−A‖_max / ‖Q·R−A‖_max style
         residuals never materialize O(matrix) on the driver."""
+        out = self._reduce_blocks(lambda blk: np.abs(blk).max(), F.max)
+        return float(out) if out is not None else 0.0
 
-        def mx(batches) -> Iterator:
+    def _axis_sums(self, axis: int) -> np.ndarray:
+        """Column (axis=0) or row (axis=1) sums: per-block partials, one
+        merge per block column (row), driver assembly."""
+        g = self.layout
+
+        def part(batches) -> Iterator:
             import pyarrow as pa
 
+            schema = pa.schema([("k", pa.int32()), ("partial", pa.binary())])
             for rb in batches:
-                d_c = rb.column("data")
-                vals = []
-                for i in range(rb.num_rows):
-                    v = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64)
-                    vals.append(float(np.abs(v).max()))
-                yield pa.RecordBatch.from_pydict(
-                    {"m": vals}, schema=pa.schema([("m", pa.float64())])
-                )
+                out: dict[str, list] = {"k": [], "partial": []}
+                for bi, bj, blk in g.blocks(rb):
+                    out["k"].append(bj if axis == 0 else bi)
+                    out["partial"].append(blk.sum(axis=axis).tobytes())
+                yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        part = self.df.mapInArrow(mx, "m double")
-        out = part.agg(F.max("m")).collect()[0][0]
-        return float(out) if out is not None else 0.0
+        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            total = np.sum([np.frombuffer(p) for p in pdf["partial"]], axis=0)
+            return pd.DataFrame({"k": [key[0]], "partial": [total.tobytes()]})
+
+        merged = (
+            _source(self).mapInArrow(part, "k int, partial binary")
+            .groupBy("k")
+            .applyInPandas(merge, "k int, partial binary")
+            .collect()
+        )
+        size, bs = (g.m, g.bc) if axis == 0 else (g.n, g.br)
+        out = np.zeros(size)
+        for row in merged:
+            v = np.frombuffer(row.partial)
+            out[row.k * bs : row.k * bs + len(v)] = v
+        return out
 
     def col_sums(self) -> np.ndarray:
         """Column sums (axis=0 reduction): per-block partial → driver combine."""
-        bc, m = self.block_cols, self.n_cols
-        br, n = self.block_rows, self.n_rows
-
-        def part(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = pa.schema([("bj", pa.int32()), ("partial", pa.binary())])
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bj": [], "partial": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    s = (
-                        np.frombuffer(d_c[i].as_buffer(), dtype=np.float64)
-                        .reshape(r, c)
-                        .sum(axis=0)
-                    )
-                    out["bj"].append(bj)
-                    out["partial"].append(s.tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.sum([np.frombuffer(p) for p in pdf["partial"]], axis=0)
-            return pd.DataFrame({"bj": [key[0]], "partial": [total.tobytes()]})
-
-        merged = (
-            self.df.mapInArrow(part, "bj int, partial binary")
-            .groupBy("bj")
-            .applyInPandas(merge, "bj int, partial binary")
-            .collect()
-        )
-        out = np.zeros(m)
-        for row in merged:
-            c = min(bc, m - row.bj * bc)
-            out[row.bj * bc : row.bj * bc + c] = np.frombuffer(row.partial)
-        return out
+        return self._axis_sums(0)
 
     def row_sums(self) -> np.ndarray:
         """Row sums (axis=1 reduction): per-block partial → driver combine."""
-        bc, m = self.block_cols, self.n_cols
-        br, n = self.block_rows, self.n_rows
-
-        def part(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = pa.schema([("bi", pa.int32()), ("partial", pa.binary())])
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "partial": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    s = (
-                        np.frombuffer(d_c[i].as_buffer(), dtype=np.float64)
-                        .reshape(r, c)
-                        .sum(axis=1)
-                    )
-                    out["bi"].append(bi)
-                    out["partial"].append(s.tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.sum([np.frombuffer(p) for p in pdf["partial"]], axis=0)
-            return pd.DataFrame({"bi": [key[0]], "partial": [total.tobytes()]})
-
-        merged = (
-            self.df.mapInArrow(part, "bi int, partial binary")
-            .groupBy("bi")
-            .applyInPandas(merge, "bi int, partial binary")
-            .collect()
-        )
-        out = np.zeros(n)
-        for row in merged:
-            r = min(br, n - row.bi * br)
-            out[row.bi * br : row.bi * br + r] = np.frombuffer(row.partial)
-        return out
+        return self._axis_sums(1)
 
     def sum(self) -> float:
         """Global sum — reference ``x.sum()`` (test_collections.py:92-94)."""
@@ -694,62 +711,24 @@ class BlockMatrix:
         Scale: `vec` ships once in the task closure (length-n driver array
         — fine for the tall-skinny shapes this layer targets; a huge n
         would instead join a (bi, slice) table)."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
+        br = self.block_rows
 
-        def run(batches) -> Iterator:
-            import pyarrow as pa
+        def f(bi, bj, blk):
+            return bi, bj, fn(blk, vec[bi * br : bi * br + blk.shape[0]][:, None])
 
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    vslice = vec[bi * br : bi * br + r]
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append(
-                        np.ascontiguousarray(fn(blk, vslice[:, None])).tobytes()
-                    )
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        return BlockMatrix(
-            self.df.mapInArrow(run, BLOCK_SCHEMA), n, m, br, bc
-        )
+        return self._blockwise(f, self.n_rows, self.n_cols, br, self.block_cols)
 
     def map_with_col_vector(
         self, vec: np.ndarray, fn: Callable[[np.ndarray, np.ndarray], np.ndarray]
     ) -> "BlockMatrix":
         """Broadcasting against a per-COLUMN vector (length n_cols):
         `x - x.mean(axis=0)` / feature standardization."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
+        bc = self.block_cols
 
-        def run(batches) -> Iterator:
-            import pyarrow as pa
+        def f(bi, bj, blk):
+            return bi, bj, fn(blk, vec[bj * bc : bj * bc + blk.shape[1]][None, :])
 
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    vslice = vec[bj * bc : bj * bc + c]
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append(
-                        np.ascontiguousarray(fn(blk, vslice[None, :])).tobytes()
-                    )
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        return BlockMatrix(
-            self.df.mapInArrow(run, BLOCK_SCHEMA), n, m, br, bc
-        )
+        return self._blockwise(f, self.n_rows, self.n_cols, self.block_rows, bc)
 
     # -- GEMM (replicate + cogroup-by-output-tile) -------------------------
     def matmul(self, other: "BlockMatrix", emit=None):
@@ -828,35 +807,16 @@ class BlockMatrix:
         si_n = (gi + f - 1) // f
         sj_n = (gj + f - 1) // f
 
-        gk = A.grid_cols  # contraction-dimension grid extent
-        spark = A.df.sparkSession
-        a_seed, b_seed = A.gen_seed, B.gen_seed
+        ga, gb = A.layout, B.layout
 
-        # Seed-generated operands ship KEY ROWS ONLY through the shuffle
-        # (data = NULL) and are regenerated inside gemm_tiles post-sort —
-        # the blockwise fusion dask applies to da.random consumers
-        # (reference workload semantics, README.md:250-271).  At the
-        # reference's 10,000²/1,000-block GEMM this removes ~8 GB of
-        # shuffle payload per generated side and all operand
-        # materialization; regeneration costs O(replication · gen), which
-        # is pure per-core CPU with no I/O.
-        if a_seed is not None:
-            a_rep = (
-                spark.range(0, gi * gk, 1, _gen_parts(spark, gi * gk))
-                .select(
-                    (F.col("id") / gk).cast("int").alias("r"),
-                    (F.col("id") % gk).cast("int").alias("k"),
-                )
-                .select(
-                    (F.col("r") / f).cast("int").alias("si"),
-                    F.explode(F.sequence(F.lit(0), F.lit(sj_n - 1))).alias("sj"),
-                    "r",
-                    "k",
-                    F.lit(0).alias("side"),
-                    F.lit(None).cast("binary").alias("data"),
-                )
-            )
-        else:
+        def rep(bm: "BlockMatrix") -> DataFrame:
+            # Seed-generated operands ship KEY ROWS ONLY through the
+            # shuffle (their source's data is NULL) and are regenerated
+            # inside gemm_tiles post-sort — the blockwise fusion dask
+            # applies to da.random consumers (README.md:250-271).  At the
+            # reference's 10,000²/1,000-block GEMM this removes ~8 GB of
+            # shuffle payload per generated side.
+            #
             # r18 (guide §2 / VERDICT r17 #7): a df-backed operand can
             # carry far more partitions than blocks (e.g. a factorization
             # result assembled from per-step checkpoints — 129 partitions
@@ -864,45 +824,27 @@ class BlockMatrix:
             # map task here.  Cap the map width at the block count; a
             # narrow coalesce, no shuffle.  At scale blocks ≫ partitions,
             # so this never fires.
-            a_df = A.df
-            if a_df.rdd.getNumPartitions() > gi * gk:
-                a_df = a_df.coalesce(gi * gk)
-            a_rep = a_df.select(
-                (F.col("bi") / f).cast("int").alias("si"),
-                F.explode(F.sequence(F.lit(0), F.lit(sj_n - 1))).alias("sj"),
-                F.col("bi").alias("r"),
-                F.col("bj").alias("k"),
-                F.lit(0).alias("side"),
-                F.col("data"),
-            )
-        if b_seed is not None:
-            b_rep = (
-                spark.range(0, gk * gj, 1, _gen_parts(spark, gk * gj))
-                .select(
-                    (F.col("id") / gj).cast("int").alias("k"),
-                    (F.col("id") % gj).cast("int").alias("r"),
-                )
-                .select(
-                    F.explode(F.sequence(F.lit(0), F.lit(si_n - 1))).alias("si"),
-                    (F.col("r") / f).cast("int").alias("sj"),
-                    "r",
-                    "k",
-                    F.lit(1).alias("side"),
-                    F.lit(None).cast("binary").alias("data"),
-                )
-            )
-        else:
-            b_df = B.df
-            if b_df.rdd.getNumPartitions() > gk * gj:
-                b_df = b_df.coalesce(gk * gj)  # see a_rep note
-            b_rep = b_df.select(
-                F.explode(F.sequence(F.lit(0), F.lit(si_n - 1))).alias("si"),
-                (F.col("bj") / f).cast("int").alias("sj"),
-                F.col("bi").alias("k"),
-                F.col("bj").alias("r"),
-                F.lit(1).alias("side"),
-                F.col("data"),
-            ).select("si", "sj", "r", "k", "side", "data")
+            src = _source(bm)
+            if src.rdd.getNumPartitions() > bm.grid_rows * bm.grid_cols:
+                src = src.coalesce(bm.grid_rows * bm.grid_cols)
+            return src
+
+        a_rep = rep(A).select(
+            (F.col("bi") / f).cast("int").alias("si"),
+            F.explode(F.sequence(F.lit(0), F.lit(sj_n - 1))).alias("sj"),
+            F.col("bi").alias("r"),
+            F.col("bj").alias("k"),
+            F.lit(0).alias("side"),
+            F.col("data"),
+        )
+        b_rep = rep(B).select(
+            F.explode(F.sequence(F.lit(0), F.lit(si_n - 1))).alias("si"),
+            (F.col("bj") / f).cast("int").alias("sj"),
+            F.col("bj").alias("r"),
+            F.col("bi").alias("k"),
+            F.lit(1).alias("side"),
+            F.col("data"),
+        )
         both = a_rep.unionByName(b_rep)
 
         def gemm_tiles(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -1023,29 +965,9 @@ class BlockMatrix:
                         sk_cur = k // f
                     r = r_c[i].as_py()
                     if side_c[i].as_py() == 0:
-                        rr = min(br, n - r * br)
-                        kk = min(kbs, kdim - k * kbs)
-                        if d_c[i].is_valid:
-                            abuf[(r, k)] = np.frombuffer(
-                                d_c[i].as_buffer(), dtype=np.float64
-                            ).reshape(rr, kk)
-                        else:
-                            # fused seed-generation: identical values to
-                            # BlockMatrix.random's gen (pure fn of seed+bid)
-                            abuf[(r, k)] = _gen_block(
-                                a_seed, r * gk + k, rr, kk
-                            )
+                        abuf[(r, k)] = ga.resolve(d_c[i], r, k)
                     else:
-                        kk = min(kbs, kdim - k * kbs)
-                        cc = min(bc, m - r * bc)
-                        if d_c[i].is_valid:
-                            bbuf[(r, k)] = np.frombuffer(
-                                d_c[i].as_buffer(), dtype=np.float64
-                            ).reshape(kk, cc)
-                        else:
-                            bbuf[(r, k)] = _gen_block(
-                                b_seed, k * gj + r, kk, cc
-                            )
+                        bbuf[(r, k)] = gb.resolve(d_c[i], k, r)
             if cur is not None:
                 flush_superchunk()
                 yield emit_tile()
@@ -1101,13 +1023,10 @@ class BlockMatrix:
         (g + g.T)/2 instead of asserting bitwise symmetry.
         """
         c_total = self.n_cols
-        br, n = self.block_rows, self.n_rows
         assert self.grid_cols == 1, "gramian: matrix must be one block wide"
-        seed = self.gen_seed
-        if seed is not None:
-            n_parts = _gen_parts(self.df.sparkSession, self.grid_rows)
-        else:
-            n_parts = max(1, self.df.rdd.getNumPartitions())
+        g = self.layout
+        src = _source(self)
+        n_parts = max(1, src.rdd.getNumPartitions())
         n_groups = max(1, int(n_parts**0.5))
 
         def part(batches) -> Iterator:
@@ -1115,49 +1034,12 @@ class BlockMatrix:
 
             schema = pa.schema([("g", pa.int32()), ("gram", pa.binary())])
             for rb in batches:
-                bi_c, d_c = rb.column("bi"), rb.column("data")
                 # one partial per (arrow batch, level-1 group)
                 totals: dict[int, np.ndarray] = {}
-                for i in range(rb.num_rows):
-                    bi = bi_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(
-                        r, c_total
-                    )
-                    g = blk.T @ blk
+                for bi, _, blk in g.blocks(rb):
+                    gm = blk.T @ blk
                     key = bi % n_groups
-                    totals[key] = g if key not in totals else totals[key] + g
-                if totals:
-                    iu = _triu(c_total)
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "g": list(totals),
-                            "gram": [t[iu].tobytes() for t in totals.values()],
-                        },
-                        schema=schema,
-                    )
-
-        def part_gen(batches) -> Iterator:
-            # fused generation (VERDICT r5 #3): blocks are a pure function
-            # of (gen_seed, bid) — regenerate INSIDE the gramian stage and
-            # reduce immediately, so the O(matrix) block payloads never
-            # cross the JVM↔Python boundary at all (the unfused path ships
-            # them twice: generator stage out, gramian stage in).  Must
-            # generate exactly as random() does: rng(seed + bid), grid_cols
-            # == 1 so bid == bi and the block spans all n_cols.
-            import pyarrow as pa
-
-            schema = pa.schema([("g", pa.int32()), ("gram", pa.binary())])
-            for rb in batches:
-                id_c = rb.column("id")
-                totals: dict[int, np.ndarray] = {}
-                for i in range(rb.num_rows):
-                    bi = id_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    blk = _gen_block(seed, bi, r, c_total)  # grid_cols == 1
-                    g = blk.T @ blk
-                    key = bi % n_groups
-                    totals[key] = g if key not in totals else totals[key] + g
+                    totals[key] = gm if key not in totals else totals[key] + gm
                 if totals:
                     iu = _triu(c_total)
                     yield pa.RecordBatch.from_pydict(
@@ -1172,13 +1054,7 @@ class BlockMatrix:
             total = np.sum([np.frombuffer(p) for p in pdf["gram"]], axis=0)
             return pd.DataFrame({"g": [int(key[0])], "gram": [total.tobytes()]})
 
-        if seed is not None:
-            gr = self.grid_rows
-            src = self.df.sparkSession.range(0, gr, 1, n_parts).mapInArrow(
-                part_gen, "g int, gram binary"
-            )
-        else:
-            src = self.df.mapInArrow(part, "g int, gram binary")
+        src = src.mapInArrow(part, "g int, gram binary")
         tri_bytes = c_total * (c_total + 1) * 4  # c(c+1)/2 doubles
         if n_parts <= GRAMIAN_DIRECT_PARTS and n_parts * tri_bytes <= 64 << 20:
             # small-input fast path (r9): few task partials AND bounded
@@ -1219,9 +1095,39 @@ class BlockMatrix:
 
         Returns (Q as BlockMatrix, R as numpy (c×c)).
         """
+        return self._tsqr(check=False)
+
+    def tsqr_check(self) -> tuple[np.ndarray, float, float]:
+        """TSQR with fused quality verification: returns
+        ``(R, orth_err, recon_err)`` where orth_err = ‖QᵀQ − I‖∞ and
+        recon_err = max|Q·R − A| — WITHOUT ever materializing Q.
+
+        Two distributed jobs: stage 1 (per-block QR → R1s to the driver)
+        and one verification pass that forms each Qᵢ exactly as tsqr()'s
+        Q stage does and accumulates the QᵀQ partial AND the reconstruction
+        residual together.  For a seeded input that pass regenerates the
+        block and redoes its local QR (bitwise-identical), so nothing is
+        persisted (r7: this replaced a 4-job persist+gramian+subtract
+        composition whose cache-read pass alone cost 77 s of executor time
+        at the 262144×128 bench shape); a materialized input reads its
+        persisted Q1 store and equi-joins A on bi."""
+        return self._tsqr(check=True)
+
+    def _tsqr(self, check: bool):
+        """tsqr() (check=False) and tsqr_check() (check=True): one stage 1,
+        one merge (direct or tree), one Q stage that either emits Qᵢ blocks
+        or folds them into verification partials."""
         c = self.n_cols
-        br, n = self.block_rows, self.n_rows
         assert self.grid_cols == 1, "tsqr: matrix must be one block wide"
+        g = self.layout
+        src = _source(self)
+        # The one source-dependent choice: a materialized input keeps its
+        # per-block Q1 persisted (Q's backing store; q.release() frees
+        # it).  A seeded input keeps nothing: the Q stage regenerates the
+        # block and redoes its QR in-task (~100 ms for an 8192×128 block),
+        # which beats writing + re-reading a 256 MB Q1 cache store (r7
+        # A/B — regeneration beats materialization for seeded inputs).
+        keep_q1 = self.gen_seed is None
 
         def local_qr(batches) -> Iterator:
             import pyarrow as pa
@@ -1230,281 +1136,123 @@ class BlockMatrix:
                 [("bi", pa.int32()), ("q1", pa.binary()), ("r1", pa.binary())]
             )
             for rb in batches:
-                bi_c, d_c = rb.column("bi"), rb.column("data")
                 out: dict[str, list] = {"bi": [], "q1": [], "r1": []}
-                for i in range(rb.num_rows):
-                    bi = bi_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for bi, _, blk in g.blocks(rb):
                     q1, r1 = np.linalg.qr(blk, mode="reduced")
                     out["bi"].append(bi)
-                    out["q1"].append(np.ascontiguousarray(q1).tobytes())
-                    out["r1"].append(np.ascontiguousarray(r1).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        gseed = self.gen_seed
-
-        def local_r_gen(batches) -> Iterator:
-            # fused generation (gramian pattern): regenerate each block from
-            # (seed, bid) inside the per-block QR stage — grid_cols == 1 so
-            # bid == bi; only the small c×c R1 is emitted.  Q1 is NOT kept:
-            # emit_q regenerates the block and redoes its QR in-task (~100 ms
-            # for an 8192×128 block), which beats writing + re-reading a
-            # 256 MB Q1 cache store (r7 A/B; same lesson as the r6 gramian
-            # fusion — regeneration beats materialization for seeded inputs)
-            import pyarrow as pa
-
-            schema = pa.schema([("bi", pa.int32()), ("r1", pa.binary())])
-            for rb in batches:
-                id_c = rb.column("id")
-                out: dict[str, list] = {"bi": [], "r1": []}
-                for i in range(rb.num_rows):
-                    bi = id_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    blk = _gen_block(gseed, bi, r, c)  # grid_cols == 1
-                    _, r1 = np.linalg.qr(blk, mode="reduced")
-                    out["bi"].append(bi)
-                    out["r1"].append(np.ascontiguousarray(r1).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        if gseed is not None:
-            gr = self.grid_rows
-            stage1 = self.df.sparkSession.range(
-                0, gr, 1, _gen_parts(self.df.sparkSession, gr)
-            ).mapInArrow(
-                local_r_gen, "bi int, r1 binary"
-            )
-            # no persist: each consumer (the R collect below, or lvl2 in the
-            # tree path, and emit_q) regenerates independently
-        else:
-            stage1 = self.df.mapInArrow(
-                local_qr, "bi int, q1 binary, r1 binary"
-            ).persist()
-        if self.grid_rows > TSQR_TREE_FANOUT:
-            return self._tsqr_tree(stage1)
-        r_rows = stage1.select("bi", "r1").collect()
-        r_rows.sort(key=lambda x: x.bi)
-        # per-block R1 has min(r_i, c) rows; track offsets into the stack
-        offsets: dict[int, tuple[int, int]] = {}
-        pieces = []
-        off = 0
-        for row in r_rows:
-            ki = np.frombuffer(row.r1).size // c
-            offsets[row.bi] = (off, ki)
-            pieces.append(np.frombuffer(row.r1).reshape(ki, c))
-            off += ki
-        q2, r_final = np.linalg.qr(np.vstack(pieces), mode="reduced")
-        # canonicalize: non-negative diagonal of R (flip matching Q2 columns)
-        signs = np.sign(np.diag(r_final))
-        signs[signs == 0] = 1.0
-        r_final = r_final * signs[:, None]
-        q2 = q2 * signs[None, :]
-        q2_slices = {bi: q2[o : o + k, :] for bi, (o, k) in offsets.items()}
-
-        def emit_q(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, q1_c = rb.column("bi"), rb.column("q1")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi = bi_c[i].as_py()
-                    sl = q2_slices[bi]
-                    q1 = np.frombuffer(q1_c[i].as_buffer(), dtype=np.float64).reshape(
-                        -1, sl.shape[0]
+                    out["q1"].append(
+                        np.ascontiguousarray(q1).tobytes() if keep_q1 else None
                     )
-                    out["bi"].append(bi)
-                    out["bj"].append(0)
-                    out["data"].append(np.dot(q1, sl).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        def emit_q_gen(batches) -> Iterator:
-            # fused tail: regenerate the block and redo its per-block QR
-            # in-task (bitwise-identical to stage 1: same bytes through the
-            # same LAPACK), then apply the broadcast Q2 slice — zero reads,
-            # zero shuffle, no cache store
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                id_c = rb.column("id")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi = id_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    q1, _ = np.linalg.qr(_gen_block(gseed, bi, r, c), mode="reduced")
-                    out["bi"].append(bi)
-                    out["bj"].append(0)
-                    out["data"].append(np.dot(q1, q2_slices[bi]).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        if gseed is not None:
-            qdf = self.df.sparkSession.range(
-                0, self.grid_rows, 1, _gen_parts(self.df.sparkSession, self.grid_rows)
-            ).mapInArrow(
-                emit_q_gen, BLOCK_SCHEMA
-            )
-            q = BlockMatrix(qdf, n, c, br, c)
-            q._cached_deps = []  # nothing persisted — release() is a no-op
-            return q, r_final
-        qdf = stage1.select("bi", "q1").mapInArrow(emit_q, BLOCK_SCHEMA)
-        q = BlockMatrix(qdf, n, c, br, c)
-        # stage1 stays persisted (Q's backing store); q.release() frees it
-        # once the caller is done — unpersisting is safe any time (persist
-        # does not truncate lineage; later reads just recompute)
-        q._cached_deps = [stage1]
-        return q, r_final
-
-    def tsqr_check(self) -> tuple[np.ndarray, float, float]:
-        """TSQR with fused quality verification: returns
-        ``(R, orth_err, recon_err)`` where orth_err = ‖QᵀQ − I‖∞ and
-        recon_err = max|Q·R − A| — WITHOUT ever materializing Q.
-
-        For seeded direct-path inputs this is TWO distributed stages
-        total: stage 1 (per-block QR → c×c R1s to the driver) and one
-        verification pass that regenerates each block, redoes its local
-        QR (bitwise-identical), forms Qᵢ = Q1ᵢ·Q2ᵢ in-task, and
-        accumulates the QᵀQ partial AND the reconstruction residual
-        together — no 256 MB Q store, no second read (r7: this replaced
-        a 4-job persist+gramian+subtract composition whose cache-read
-        pass alone cost 77 s of executor time at the 262144×128 bench
-        shape).  Unseeded or tree-sized inputs use a fused fallback (r9):
-        tsqr(), then ONE verification job that reads Q exactly once and
-        accumulates gram partial + residual together (seeded inputs
-        regenerate A in-task; unseeded equi-join A on bi), same
-        contract."""
-        c = self.n_cols
-        br, n = self.block_rows, self.n_rows
-        assert self.grid_cols == 1, "tsqr_check: matrix must be one block wide"
-        gseed = self.gen_seed
-        if gseed is None or self.grid_rows > TSQR_TREE_FANOUT:
-            # fused fallback (r9): after tsqr(), ONE verification job reads
-            # Q exactly once and accumulates the QᵀQ gram partial AND the
-            # reconstruction residual together per block — A regenerates
-            # in-task for seeded tree-sized inputs (zero shuffle) or
-            # equi-joins on bi otherwise.  Replaces the 4-job persist +
-            # gramian + subtract + max composition that read Q twice.
-            q, r = self.tsqr()
-            if gseed is not None:
-                src = q.df.select("bi", F.col("data").alias("qd"))
-            else:
-                src = q.df.alias("q").join(
-                    self.df.alias("a"), F.col("q.bi") == F.col("a.bi")
-                ).select(
-                    F.col("q.bi").alias("bi"),
-                    F.col("q.data").alias("qd"),
-                    F.col("a.data").alias("ad"),
-                )
-
-            def fused_verify(batches) -> Iterator:
-                import pyarrow as pa
-
-                schema = pa.schema([("g", pa.binary()), ("m", pa.float64())])
-                for rb in batches:
-                    bi_c, qd_c = rb.column("bi"), rb.column("qd")
-                    ad_c = rb.column("ad") if "ad" in rb.schema.names else None
-                    gram = np.zeros((c, c))
-                    mx = 0.0
-                    got = False
-                    for i in range(rb.num_rows):
-                        bi = bi_c[i].as_py()
-                        rr = min(br, n - bi * br)
-                        qblk = np.frombuffer(
-                            qd_c[i].as_buffer(), dtype=np.float64
-                        ).reshape(rr, c)
-                        if ad_c is None:
-                            ablk = _gen_block(gseed, bi, rr, c)
-                        else:
-                            ablk = np.frombuffer(
-                                ad_c[i].as_buffer(), dtype=np.float64
-                            ).reshape(rr, c)
-                        gram += qblk.T @ qblk
-                        mx = max(mx, float(np.abs(qblk @ r - ablk).max()))
-                        got = True
-                    if got:
-                        yield pa.RecordBatch.from_pydict(
-                            {"g": [gram.tobytes()], "m": [mx]}, schema=schema
-                        )
-
-            parts = src.mapInArrow(fused_verify, "g binary, m double").collect()
-            q.release()
-            gram = np.zeros((c, c))
-            recon = 0.0
-            for row in parts:
-                gram += np.frombuffer(row.g).reshape(c, c)
-                recon = max(recon, row.m)
-            orth = float(np.abs(gram - np.eye(c)).max())
-            return r, orth, recon
-
-        gr = self.grid_rows
-        spark = self.df.sparkSession
-
-        def local_r_gen(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = pa.schema([("bi", pa.int32()), ("r1", pa.binary())])
-            for rb in batches:
-                id_c = rb.column("id")
-                out: dict[str, list] = {"bi": [], "r1": []}
-                for i in range(rb.num_rows):
-                    bi = id_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    _, r1 = np.linalg.qr(_gen_block(gseed, bi, r, c), mode="reduced")
-                    out["bi"].append(bi)
                     out["r1"].append(np.ascontiguousarray(r1).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        r_rows = (
-            spark.range(0, gr, 1, _gen_parts(spark, gr))
-            .mapInArrow(local_r_gen, "bi int, r1 binary")
-            .collect()
-        )
-        r_rows.sort(key=lambda x: x.bi)
-        offsets: dict[int, tuple[int, int]] = {}
-        pieces, off = [], 0
-        for row in r_rows:
-            ki = np.frombuffer(row.r1).size // c
-            offsets[row.bi] = (off, ki)
-            pieces.append(np.frombuffer(row.r1).reshape(ki, c))
-            off += ki
-        q2, r_final = np.linalg.qr(np.vstack(pieces), mode="reduced")
-        signs = np.sign(np.diag(r_final))
-        signs[signs == 0] = 1.0
-        r_final = r_final * signs[:, None]
-        q2 = q2 * signs[None, :]
-        q2_slices = {bi: q2[o : o + k, :] for bi, (o, k) in offsets.items()}
+        stage1 = src.mapInArrow(local_qr, "bi int, q1 binary, r1 binary")
+        deps: list[DataFrame] = []
+        if keep_q1:
+            stage1 = stage1.persist()
+            deps.append(stage1)
+            rows = stage1.select("bi", "q1")
+            if check:
+                rows = rows.join(src.select("bi", "data"), "bi")
+        else:
+            rows = src.select("bi", "data")
 
-        def verify(batches) -> Iterator:
-            # one fused pass per block: regen A, redo QR, Q = Q1·slice,
-            # then gram partial (QᵀQ) + residual max together
+        tree = self.grid_rows > TSQR_TREE_FANOUT
+        if tree:
+            # one distributed group-merge level (fanout TSQR_TREE_FANOUT),
+            # then the driver QR over the grid_rows/fanout group R2s:
+            # Qᵢ = Q1ᵢ · Q2ᵢ · Q3_group(i)
+            def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+                q2s, r2g = _stack_qr(zip(pdf["bi"], pdf["r1"]), c, canonical=False)
+                gid = int(key[0])
+                out = [
+                    (int(bi), gid, np.ascontiguousarray(q2).tobytes(), None)
+                    for bi, q2 in q2s.items()
+                ]
+                # one marker row per group carries the group R2 to the driver
+                out.append((-1, gid, None, np.ascontiguousarray(r2g).tobytes()))
+                return pd.DataFrame(out, columns=["bi", "gid", "q2", "r2"])
+
+            lvl2 = (
+                stage1.select("bi", "r1")
+                .withColumn("gid", (F.col("bi") / TSQR_TREE_FANOUT).cast("int"))
+                .groupBy("gid")
+                .applyInPandas(merge_group, "bi int, gid int, q2 binary, r2 binary")
+                .persist()
+            )
+            deps.append(lvl2)
+            r2_rows = lvl2.filter(F.col("bi") == -1).select("gid", "r2").collect()
+            slices, r_final = _stack_qr([(x.gid, x.r2) for x in r2_rows], c)
+            members = lvl2.filter(F.col("bi") >= 0).select("bi", "gid", "q2")
+            # a seeded source's rows carry no payload (data is NULL for
+            # every bi), so the member rows alone feed the Q stage — no join
+            rows = (
+                rows.join(members, "bi")
+                if keep_q1
+                else members.withColumn("data", F.lit(None).cast("binary"))
+            )
+        else:
+            r1_rows = stage1.select("bi", "r1").collect()
+            slices, r_final = _stack_qr([(x.bi, x.r1) for x in r1_rows], c)
+
+        def q_stage(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = pa.schema([("g", pa.binary()), ("m", pa.float64())])
             for rb in batches:
-                id_c = rb.column("id")
+                bi_c = rb.column("bi")
+                q1_c = rb.column("q1") if keep_q1 else None
+                a_c = rb.column("data") if "data" in rb.schema.names else None
+                gid_c, q2_c = (rb.column("gid"), rb.column("q2")) if tree else (None, None)
+                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
                 gram = np.zeros((c, c))
                 mx = 0.0
-                got = False
                 for i in range(rb.num_rows):
-                    bi = id_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    a = _gen_block(gseed, bi, r, c)
-                    q1, _ = np.linalg.qr(a, mode="reduced")
-                    qblk = q1 @ q2_slices[bi]
-                    gram += qblk.T @ qblk
-                    mx = max(mx, float(np.abs(qblk @ r_final - a).max()))
-                    got = True
-                if got:
+                    bi = bi_c[i].as_py()
+                    if tree:
+                        g3 = slices[gid_c[i].as_py()]
+                        tail = np.dot(
+                            np.frombuffer(q2_c[i].as_buffer(), dtype=np.float64)
+                            .reshape(-1, g3.shape[0]),
+                            g3,
+                        )
+                    else:
+                        tail = slices[bi]
+                    a = g.resolve(a_c[i], bi, 0) if a_c is not None else None
+                    if keep_q1:
+                        q1 = np.frombuffer(
+                            q1_c[i].as_buffer(), dtype=np.float64
+                        ).reshape(-1, tail.shape[0])
+                    else:
+                        q1, _ = np.linalg.qr(a, mode="reduced")
+                    qblk = np.dot(q1, tail)
+                    if check:
+                        gram += qblk.T @ qblk
+                        mx = max(mx, float(np.abs(qblk @ r_final - a).max()))
+                    else:
+                        out["bi"].append(bi)
+                        out["bj"].append(0)
+                        out["data"].append(qblk.tobytes())
+                if not check:
+                    yield pa.RecordBatch.from_pydict(out, schema=_pa_block_schema(pa))
+                elif rb.num_rows:
                     yield pa.RecordBatch.from_pydict(
-                        {"g": [gram.tobytes()], "m": [mx]}, schema=schema
+                        {"g": [gram.tobytes()], "m": [mx]},
+                        schema=pa.schema([("g", pa.binary()), ("m", pa.float64())]),
                     )
 
-        parts = (
-            spark.range(0, gr, 1, _gen_parts(spark, gr))
-            .mapInArrow(verify, "g binary, m double")
-            .collect()
-        )
+        if not check:
+            q = BlockMatrix(
+                rows.mapInArrow(q_stage, BLOCK_SCHEMA),
+                self.n_rows, c, self.block_rows, c,
+            )
+            # q.release() frees Q's backing stores once the caller is done —
+            # unpersisting is safe any time (persist does not truncate
+            # lineage; later reads just recompute)
+            q._cached_deps = deps
+            return q, r_final
+        parts = rows.mapInArrow(q_stage, "g binary, m double").collect()
+        for df in deps:
+            df.unpersist()
         gram = np.zeros((c, c))
         recon = 0.0
         for row in parts:
@@ -1512,106 +1260,6 @@ class BlockMatrix:
             recon = max(recon, row.m)
         orth = float(np.abs(gram - np.eye(c)).max())
         return r_final, orth, recon
-
-    def _tsqr_tree(
-        self, stage1: DataFrame
-    ) -> tuple["BlockMatrix", np.ndarray]:
-        """Tree-merge tail of tsqr() for large grid_rows: one distributed
-        group-merge level (fanout = TSQR_TREE_FANOUT), then the driver QR
-        over grid_rows/fanout group R2s.  Qᵢ = Q1ᵢ · Q2ᵢ · Q3_group(i)."""
-        c = self.n_cols
-        br, n = self.block_rows, self.n_rows
-        g = TSQR_TREE_FANOUT
-
-        def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("bi")
-            pieces, offs, off = [], [], 0
-            for r1 in pdf["r1"]:
-                ki = np.frombuffer(r1).size // c
-                offs.append((off, ki))
-                pieces.append(np.frombuffer(r1).reshape(ki, c))
-                off += ki
-            q2g, r2g = np.linalg.qr(np.vstack(pieces), mode="reduced")
-            out = [
-                (
-                    int(bi),
-                    int(key[0]),
-                    np.ascontiguousarray(q2g[o : o + k, :]).tobytes(),
-                    None,
-                )
-                for (o, k), bi in zip(offs, pdf["bi"])
-            ]
-            # one marker row per group carries the group R2 to the driver
-            out.append((-1, int(key[0]), None, np.ascontiguousarray(r2g).tobytes()))
-            return pd.DataFrame(out, columns=["bi", "gid", "q2", "r2"])
-
-        lvl2 = (
-            stage1.select("bi", "r1")
-            .withColumn("gid", (F.col("bi") / g).cast("int"))
-            .groupBy("gid")
-            .applyInPandas(merge_group, "bi int, gid int, q2 binary, r2 binary")
-            .persist()
-        )
-        r2_rows = lvl2.filter(F.col("bi") == -1).select("gid", "r2").collect()
-        r2_rows.sort(key=lambda x: x.gid)
-        offsets: dict[int, tuple[int, int]] = {}
-        pieces, off = [], 0
-        for row in r2_rows:
-            kg = np.frombuffer(row.r2).size // c
-            offsets[row.gid] = (off, kg)
-            pieces.append(np.frombuffer(row.r2).reshape(kg, c))
-            off += kg
-        q3, r_final = np.linalg.qr(np.vstack(pieces), mode="reduced")
-        signs = np.sign(np.diag(r_final))
-        signs[signs == 0] = 1.0
-        r_final = r_final * signs[:, None]
-        q3 = q3 * signs[None, :]
-        q3_slices = {gid: q3[o : o + k, :] for gid, (o, k) in offsets.items()}
-
-        members = lvl2.filter(F.col("bi") >= 0).select("bi", "gid", "q2")
-        gseed = self.gen_seed
-
-        def emit_q(batches) -> Iterator:
-            # fused variant: q1 is regenerated in-task from (seed, bi) —
-            # the rb carries no q1 column, only (bi, gid, q2)
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c = rb.column("bi")
-                gid_c, q2_c = rb.column("gid"), rb.column("q2")
-                q1_c = rb.column("q1") if gseed is None else None
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi = bi_c[i].as_py()
-                    g3 = q3_slices[gid_c[i].as_py()]
-                    q2 = np.frombuffer(q2_c[i].as_buffer(), dtype=np.float64).reshape(
-                        -1, g3.shape[0]
-                    )
-                    if gseed is None:
-                        q1 = np.frombuffer(
-                            q1_c[i].as_buffer(), dtype=np.float64
-                        ).reshape(-1, q2.shape[0])
-                    else:
-                        r = min(br, n - bi * br)
-                        q1, _ = np.linalg.qr(
-                            _gen_block(gseed, bi, r, c), mode="reduced"
-                        )
-                    out["bi"].append(bi)
-                    out["bj"].append(0)
-                    out["data"].append(np.dot(q1, np.dot(q2, g3)).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        if gseed is not None:
-            qdf = members.mapInArrow(emit_q, BLOCK_SCHEMA)
-            q = BlockMatrix(qdf, n, c, br, c)
-            q._cached_deps = [lvl2]  # stage1 was never persisted (fused)
-            return q, r_final
-        joined = stage1.select("bi", "q1").join(members, "bi")
-        qdf = joined.mapInArrow(emit_q, BLOCK_SCHEMA)
-        q = BlockMatrix(qdf, n, c, br, c)
-        q._cached_deps = [stage1, lvl2]  # freed by q.release()
-        return q, r_final
 
     def reblock_single_column(self) -> "BlockMatrix":
         """Horizontal re-block: stitch each block row's column blocks into
@@ -1654,62 +1302,31 @@ class BlockMatrix:
         in-block offsets; payloads are contiguous copies of sub-slices,
         so the downstream stitch is pure byte placement — re-chunking is
         bitwise-exact data movement, never recomputation."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
+        br, bc = self.block_rows, self.block_cols
 
-        def part(batches) -> Iterator:
-            import pyarrow as pa
+        def pieces(bi, bj, blk):
+            r, c = blk.shape
+            gr0, gc0 = row_off + bi * br, col_off + bj * bc
+            lo_r, hi_r = max(gr0, 0), gr0 + r
+            lo_c, hi_c = max(gc0, 0), gc0 + c
+            if clip_rows is not None:
+                hi_r = min(hi_r, clip_rows)
+            if clip_cols is not None:
+                hi_c = min(hi_c, clip_cols)
+            if hi_r <= lo_r or hi_c <= lo_c:
+                return
+            for obi in range(lo_r // tbr, (hi_r - 1) // tbr + 1):
+                rs = max(lo_r, obi * tbr)
+                re = min(hi_r, (obi + 1) * tbr)
+                for obj in range(lo_c // tbc, (hi_c - 1) // tbc + 1):
+                    cs = max(lo_c, obj * tbc)
+                    ce = min(hi_c, (obj + 1) * tbc)
+                    yield (
+                        obi, obj, rs - obi * tbr, cs - obj * tbc,
+                        blk[rs - gr0 : re - gr0, cs - gc0 : ce - gc0],
+                    )
 
-            schema = pa.schema(
-                [
-                    ("obi", pa.int32()),
-                    ("obj", pa.int32()),
-                    ("r0", pa.int32()),
-                    ("c0", pa.int32()),
-                    ("nr", pa.int32()),
-                    ("nc", pa.int32()),
-                    ("p", pa.binary()),
-                ]
-            )
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {
-                    "obi": [], "obj": [], "r0": [], "c0": [], "nr": [], "nc": [], "p": []
-                }
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    gr0, gc0 = row_off + bi * br, col_off + bj * bc
-                    lo_r, hi_r = max(gr0, 0), gr0 + r
-                    lo_c, hi_c = max(gc0, 0), gc0 + c
-                    if clip_rows is not None:
-                        hi_r = min(hi_r, clip_rows)
-                    if clip_cols is not None:
-                        hi_c = min(hi_c, clip_cols)
-                    if hi_r <= lo_r or hi_c <= lo_c:
-                        continue
-                    for obi in range(lo_r // tbr, (hi_r - 1) // tbr + 1):
-                        rs = max(lo_r, obi * tbr)
-                        re = min(hi_r, (obi + 1) * tbr)
-                        for obj in range(lo_c // tbc, (hi_c - 1) // tbc + 1):
-                            cs = max(lo_c, obj * tbc)
-                            ce = min(hi_c, (obj + 1) * tbc)
-                            piece = np.ascontiguousarray(
-                                blk[rs - gr0 : re - gr0, cs - gc0 : ce - gc0]
-                            )
-                            out["obi"].append(obi)
-                            out["obj"].append(obj)
-                            out["r0"].append(rs - obi * tbr)
-                            out["c0"].append(cs - obj * tbc)
-                            out["nr"].append(re - rs)
-                            out["nc"].append(ce - cs)
-                            out["p"].append(piece.tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        return self.df.mapInArrow(
-            part, "obi int, obj int, r0 int, c0 int, nr int, nc int, p binary"
-        )
+        return _piece_rows(_source(self), self.layout, pieces)
 
     @staticmethod
     def _stitch_pieces(
@@ -1843,48 +1460,15 @@ class BlockMatrix:
             t += length
         sc = self.df.sparkSession.sparkContext
         bc_runs = sc.broadcast(runs_by_src)
-        n, n_rows_in = self.n_cols, self.n_rows
 
-        def part(batches) -> Iterator:
-            import pyarrow as pa
+        def run_pieces(bi, bj, blk):
+            for lr0, dst0, ln in bc_runs.value[bi]:
+                obi = dst0 // br
+                yield obi, bj, dst0 - obi * br, 0, blk[lr0 : lr0 + ln, :]
 
-            schema = pa.schema(
-                [
-                    ("obi", pa.int32()), ("obj", pa.int32()),
-                    ("r0", pa.int32()), ("c0", pa.int32()),
-                    ("nr", pa.int32()), ("nc", pa.int32()),
-                    ("p", pa.binary()),
-                ]
-            )
-            runs = bc_runs.value
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {
-                    "obi": [], "obj": [], "r0": [], "c0": [], "nr": [], "nc": [], "p": []
-                }
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    if bi not in runs:
-                        continue
-                    r = min(br, n_rows_in - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(
-                        d_c[i].as_buffer(), dtype=np.float64
-                    ).reshape(r, c)
-                    for lr0, dst0, ln in runs[bi]:
-                        piece = np.ascontiguousarray(blk[lr0 : lr0 + ln, :])
-                        out["obi"].append(dst0 // br)
-                        out["obj"].append(bj)
-                        out["r0"].append(dst0 - (dst0 // br) * br)
-                        out["c0"].append(0)
-                        out["nr"].append(ln)
-                        out["nc"].append(c)
-                        out["p"].append(piece.tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        pieces = self.df.mapInArrow(
-            part, "obi int, obj int, r0 int, c0 int, nr int, nc int, p binary"
-        )
+        # source blocks no run reads are pruned JVM-side, never decoded
+        src = _source(self).filter(F.col("bi").isin(list(runs_by_src)))
+        pieces = _piece_rows(src, self.layout, run_pieces)
         return BlockMatrix._stitch_pieces(pieces, n_out, m, br, bc)
 
     def compress_rows(self, mask) -> "BlockMatrix":
@@ -1940,45 +1524,10 @@ class BlockMatrix:
         local pass is the offsets table — grid_rows × n_cols doubles,
         ~10⁻⁵ of the matrix."""
         br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-
-        def local(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append(np.ascontiguousarray(np.cumsum(blk, axis=0)).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        partial = self.df.mapInArrow(local, BLOCK_SCHEMA)
-
-        def totals(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = pa.schema(
-                [("bi", pa.int32()), ("bj", pa.int32()), ("tot", pa.binary())]
-            )
-            for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
-                out: dict[str, list] = {"bi": [], "bj": [], "tot": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["tot"].append(np.ascontiguousarray(blk.sum(axis=0)).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
+        src, g = _source(self), self.layout
+        partial = _blockwise(src, g, lambda bi, bj, b: (bi, bj, np.cumsum(b, axis=0)))
+        # per-block column totals (a 1×c row each)
+        totals = _blockwise(src, g, lambda bi, bj, b: (bi, bj, b.sum(axis=0)))
         grid_rows = self.grid_rows
 
         def offsets(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2002,7 +1551,7 @@ class BlockMatrix:
             return pd.DataFrame(rows)
 
         off_all = (
-            self.df.mapInArrow(totals, "bi int, bj int, tot binary")
+            totals.withColumnRenamed("data", "tot")
             .groupBy("bj")
             .applyInPandas(
                 offsets, "bi int, bj int, off binary, present boolean, nz boolean"
@@ -2054,19 +1603,16 @@ class BlockMatrix:
             .mapInArrow(tile_off, BLOCK_SCHEMA)
         )
 
+        g_part = _Layout(n, m, br, bc)
+
         def add_off(batches) -> Iterator:
             import pyarrow as pa
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                d_c, o_c = rb.column("data"), rb.column("off")
+                o_c = rb.column("off")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for i, (bi, bj, blk) in enumerate(g_part.blocks(rb)):
                     offv = np.frombuffer(o_c[i].as_buffer(), dtype=np.float64)
                     out["bi"].append(bi)
                     out["bj"].append(bj)
@@ -2135,7 +1681,7 @@ class BlockMatrix:
         """
         assert 0 < depth <= self.block_rows, "depth must be ≤ block_rows (one-neighbor halo)"
         br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-        gr = self.grid_rows
+        gr, g = self.grid_rows, self.layout
 
         def emit(batches) -> Iterator:
             import pyarrow as pa
@@ -2149,17 +1695,12 @@ class BlockMatrix:
                 ]
             )
             for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                 out: dict[str, list] = {"tbi": [], "bj": [], "role": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for bi, bj, blk in g.blocks(rb):
                     out["tbi"].append(bi)
                     out["bj"].append(bj)
                     out["role"].append(0)  # core
-                    out["data"].append(d_c[i].as_py())
+                    out["data"].append(blk.tobytes())
                     if bi + 1 < gr:  # this block's tail = below-neighbor's top halo
                         out["tbi"].append(bi + 1)
                         out["bj"].append(bj)
@@ -2226,7 +1767,7 @@ class BlockMatrix:
             )
 
         out_df = (
-            self.df.mapInArrow(emit, "tbi int, bj int, role int, data binary")
+            _source(self).mapInArrow(emit, "tbi int, bj int, role int, data binary")
             .groupBy("tbi", "bj")
             .applyInPandas(assemble, BLOCK_SCHEMA)
         )
@@ -2249,21 +1790,17 @@ class BlockMatrix:
         square/rectangular main-diagonal case) — the usual post-factorization
         probe (diag(R), diag(AᵀA)).  Blocks off the diagonal band are
         pruned JVM-SIDE; the driver receives O(min(n,m)) doubles."""
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-        k = min(n, m)
+        br, bc, g = self.block_rows, self.block_cols, self.layout
+        k = min(self.n_rows, self.n_cols)
 
         def part(batches) -> Iterator:
             import pyarrow as pa
 
             schema = pa.schema([("g0", pa.int64()), ("v", pa.binary())])
             for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                 out: dict[str, list] = {"g0": [], "v": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for bi, bj, blk in g.blocks(rb):
+                    r, c = blk.shape
                     r0, c0 = bi * br, bj * bc
                     lo = max(r0, c0)
                     hi = min(r0 + r, c0 + c, k)
@@ -2278,7 +1815,7 @@ class BlockMatrix:
 
         # JVM-side band pruning: a block intersects the diagonal iff its
         # row and column ranges overlap
-        banded = self.df.filter(
+        banded = _source(self).filter(
             (F.col("bi") * br < (F.col("bj") + 1) * bc)
             & (F.col("bj") * bc < (F.col("bi") + 1) * br)
         )
@@ -2301,6 +1838,7 @@ class BlockMatrix:
 
     def _arg_reduce(self, take_max: bool) -> tuple[int, int]:
         br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
+        g = self.layout
 
         def part(batches) -> Iterator:
             import pyarrow as pa
@@ -2309,13 +1847,9 @@ class BlockMatrix:
                 [("r", pa.int64()), ("c", pa.int64()), ("v", pa.float64())]
             )
             for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                 out: dict[str, list] = {"r": [], "c": [], "v": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
+                for bi, bj, blk in g.blocks(rb):
+                    c = blk.shape[1]
                     flat = int(np.argmax(blk) if take_max else np.argmin(blk))
                     out["r"].append(bi * br + flat // c)
                     out["c"].append(bj * bc + flat % c)
@@ -2326,7 +1860,7 @@ class BlockMatrix:
             raise ValueError("argmax/argmin of an empty matrix")
         cands = [
             (row.r, row.c, row.v)
-            for row in self.df.mapInArrow(part, "r long, c long, v double").collect()
+            for row in _source(self).mapInArrow(part, "r long, c long, v double").collect()
         ]
         # absent blocks ≡ zero (the convention to_numpy/matmul/cumsum honor):
         # the FIRST absent block's origin is the lowest-flat-index zero
@@ -2436,15 +1970,14 @@ class BlockMatrix:
         # persist across gramian + U projection; released before return —
         # U is lazy, so callers that materialize U later re-run the input
         # lineage (deterministic); persist the input themselves to avoid it.
-        # SEED-GENERATED inputs skip the persist entirely (VERDICT r5 #3,
-        # same fusion contract as matmul): their df IS the lazy generation
-        # plan, and since callers that only need σ never materialize the
-        # lazy U, the whole factorization is ONE pass — the gramian
-        # consumes generated blocks in-task and A never materializes.
-        # A/B at the 200000×1000/6250 ref dims (interleaved, 4 passes):
-        # fused 3.9-9.4 s vs persist 4.9-26.3 s, plus zero cache footprint.
-        fused = self.gen_seed is not None
-        if not fused:
+        # SEED-GENERATED inputs have nothing to persist (VERDICT r5 #3): the
+        # kernels read key rows, never df, so callers that only need σ run
+        # the whole factorization as ONE pass — the gramian regenerates
+        # blocks in-task and A never materializes.  A/B at the
+        # 200000×1000/6250 ref dims (interleaved, 4 passes): fused
+        # 3.9-9.4 s vs persist 4.9-26.3 s, plus zero cache footprint.
+        persisted = self.gen_seed is None
+        if persisted:
             self.df.persist()
         g = self.gramian()
         evals, evecs = np.linalg.eigh(g)
@@ -2454,7 +1987,7 @@ class BlockMatrix:
         inv_s = np.where(s > 1e-12, 1.0 / s, 0.0)
         proj = evecs * inv_s[None, :]
         u = self._map_blocks(lambda b: b @ proj)
-        if not fused:
+        if persisted:
             self.df.unpersist()
         return u, s, evecs.T
 
@@ -2479,9 +2012,9 @@ class BlockMatrix:
         # A is read by the sketch, every power iteration, and the final
         # projection (~2+2·n_iter jobs) — persist once instead of re-running
         # its lineage (e.g. the random generator) per job.  SEED-GENERATED
-        # inputs skip the persist: sketch and transpose_matvec both fuse
-        # generation in-task (gramian pattern), so A's payloads never cross
-        # the JVM↔Python boundary at all.  (An earlier persist-skip WITHOUT
+        # inputs skip the persist: every kernel reads their key rows and
+        # regenerates blocks in-task, so A's payloads never cross the
+        # JVM↔Python boundary at all.  (An earlier persist-skip WITHOUT
         # in-task fusion measured SLOWER than persist — 4.7-13.5 s vs
         # 3.8-6.9 s at the 10000²/1000 ref dims — because each pass still
         # shipped 800 MB through the JVM twice; fused measures below both.)
@@ -2490,17 +2023,8 @@ class BlockMatrix:
             self.df.persist()
 
         def sketch(mat: "BlockMatrix", w: np.ndarray) -> "BlockMatrix":
-            """Y = mat @ w with w broadcast to every block; sum over bj.
-
-            Seed-generated `mat` fuses generation into the sketch stage
-            (VERDICT r5 #3, the gramian pattern): blocks regenerate from
-            (seed, bid) inside the partial-product task, so the O(matrix)
-            payloads never cross the JVM↔Python boundary."""
-            br = mat.block_rows
-            n, m = mat.n_rows, mat.n_cols
-            bc = mat.block_cols
-            gseed = mat.gen_seed
-            nbc = mat.grid_cols
+            """Y = mat @ w with w broadcast to every block; sum over bj."""
+            g, bc = mat.layout, mat.block_cols
 
             def part(batches) -> Iterator:
                 import pyarrow as pa
@@ -2509,60 +2033,23 @@ class BlockMatrix:
                     [("bi", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
                 )
                 for rb in batches:
-                    bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                     out: dict[str, list] = {"bi": [], "k": [], "p": []}
-                    for i in range(rb.num_rows):
-                        bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                        r = min(br, n - bi * br)
-                        c = min(bc, m - bj * bc)
-                        blk = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                        wj = w[bj * bc : bj * bc + c, :]
+                    for bi, bj, blk in g.blocks(rb):
                         out["bi"].append(bi)
                         out["k"].append(bj)
-                        out["p"].append(np.dot(blk, wj).tobytes())
+                        out["p"].append(
+                            np.dot(blk, w[bj * bc : bj * bc + blk.shape[1], :]).tobytes()
+                        )
                     yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-            def part_gen(batches) -> Iterator:
-                import pyarrow as pa
-
-                schema = pa.schema(
-                    [("bi", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
-                )
-                for rb in batches:
-                    id_c = rb.column("id")
-                    out: dict[str, list] = {"bi": [], "k": [], "p": []}
-                    for i in range(rb.num_rows):
-                        bid = id_c[i].as_py()
-                        bi, bj = bid // nbc, bid % nbc
-                        r = min(br, n - bi * br)
-                        c = min(bc, m - bj * bc)
-                        blk = _gen_block(gseed, bid, r, c)
-                        wj = w[bj * bc : bj * bc + c, :]
-                        out["bi"].append(bi)
-                        out["k"].append(bj)
-                        out["p"].append(np.dot(blk, wj).tobytes())
-                    yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-            if gseed is not None:
-                nblk = mat.grid_rows * nbc
-                partials = mat.df.sparkSession.range(
-                    0, nblk, 1, _gen_parts(mat.df.sparkSession, nblk)
-                ).mapInArrow(part_gen, "bi int, k int, p binary")
-            else:
-                partials = mat.df.mapInArrow(part, "bi int, k int, p binary")
 
             def acc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("k")
-                total = None
-                for buf in pdf["p"]:
-                    b = np.frombuffer(buf)
-                    total = b.copy() if total is None else total + b
                 return pd.DataFrame(
-                    {"bi": [key[0]], "bj": [0], "data": [total.tobytes()]}
+                    {"bi": [key[0]], "bj": [0], "data": [_ordered_sum(pdf)]}
                 )
 
+            partials = _source(mat).mapInArrow(part, "bi int, k int, p binary")
             ydf = partials.groupBy("bi").applyInPandas(acc, BLOCK_SCHEMA)
-            return BlockMatrix(ydf, n, w.shape[1], br, w.shape[1])
+            return BlockMatrix(ydf, mat.n_rows, w.shape[1], mat.block_rows, w.shape[1])
 
         if fused:
             # r18 (VERDICT r17 Next #6): ONE generation pass per sketch.
@@ -2629,19 +2116,20 @@ class BlockMatrix:
         seed-generated A (r18, VERDICT r17 Next #6 — svd_compressed's
         sketch + projection used to regenerate every block of A twice).
 
-        One task per block-row: generate row i's blocks ONCE (ascending
+        One task per block-row: resolve row i's blocks ONCE (ascending
         bj), fold Yᵢ = Σⱼ Aᵢⱼ·Wⱼ in that same order — bit-identical to the
         unfused sketch's sorted-k applyInPandas accumulator — then emit
         the projection partials AᵢⱼᵀYᵢ from the still-held buffers.  The
-        driver sums Z partials per column-block in bi-ascending order,
-        copy-then-add, exactly transpose_matvec's acc arithmetic.
+        Z partials reduce executor-side through transpose_matvec's
+        accumulator (:func:`_sum_partials`: bi-ascending copy-then-add per
+        column block), so the driver receives grid_cols rows, not one per
+        block.
 
         want_y=False (intermediate power iterations: only Z feeds the
-        next driver-side QR) skips emitting Y, so the pass is collect-only
-        with nothing persisted.  want_y=True persists the combined output
-        (two readers: the Z collect and tsqr's stage 1 over Y); the
-        returned Y carries the persist handle in _cached_deps for
-        release().
+        next driver-side QR) skips emitting Y, so nothing is persisted.
+        want_y=True persists the combined output (two readers: the Z
+        reduction and tsqr's stage 1 over Y); the returned Y carries the
+        persist handle in _cached_deps for release().
 
         Per-task memory holds one block-row of A (grid_cols blocks,
         ≤ 80 MB at the declared workloads); a cluster-scale row wider than
@@ -2649,12 +2137,11 @@ class BlockMatrix:
         count is grid_rows either way, which at scale dwarfs the core
         count (fewer, fatter tasks also amortize the ~0.3 s Python task
         round-trip that dominates these small-block stages locally).
+        The whole-row task is why this reads key ids, not _source rows.
         """
-        br, bc = self.block_rows, self.block_cols
-        n, m = self.n_rows, self.n_cols
-        gr, nbc = self.grid_rows, self.grid_cols
-        gseed = self.gen_seed
-        assert gseed is not None
+        assert self.gen_seed is not None
+        g = self.layout
+        gr, nbc, bc = self.grid_rows, self.grid_cols, self.block_cols
         p = w.shape[1]
 
         def row_pass(batches) -> Iterator:
@@ -2669,20 +2156,14 @@ class BlockMatrix:
                 ]
             )
             for rb in batches:
-                id_c = rb.column("id")
                 out: dict[str, list] = {"kind": [], "i": [], "j": [], "data": []}
-                for t in range(rb.num_rows):
-                    bi = id_c[t].as_py()
-                    r = min(br, n - bi * br)
-                    blks = []
+                for bi in rb.column("id").to_pylist():
+                    blks = [g.resolve(None, bi, bj) for bj in range(nbc)]
                     total = None
-                    for bj in range(nbc):
-                        c = min(bc, m - bj * bc)
-                        blk = _gen_block(gseed, bi * nbc + bj, r, c)
-                        blks.append(blk)
-                        part = np.dot(blk, w[bj * bc : bj * bc + c, :]).ravel()
+                    for bj, blk in enumerate(blks):
+                        part = np.dot(blk, w[bj * bc : bj * bc + blk.shape[1], :]).ravel()
                         total = part.copy() if total is None else total + part
-                    y_bi = total.reshape(r, p)
+                    y_bi = total.reshape(blks[0].shape[0], p)
                     if want_y:
                         out["kind"].append(0)
                         out["i"].append(bi)
@@ -2701,41 +2182,46 @@ class BlockMatrix:
         ).mapInArrow(row_pass, "kind int, i int, j int, data binary")
         if want_y:
             fdf = fdf.persist()
-        z_rows = fdf.filter(F.col("kind") == 1).select("i", "j", "data").collect()
-        by_col: dict[int, list] = {}
-        for row in z_rows:
-            by_col.setdefault(row.i, []).append(row)
-        z = np.zeros((m, p))
-        for bj, rows in by_col.items():
-            rows.sort(key=lambda r_: r_.j)
-            total = None
-            for row in rows:
-                buf = np.frombuffer(bytes(row.data))
-                total = buf.copy() if total is None else total + buf
-            c = min(bc, m - bj * bc)
-            z[bj * bc : bj * bc + c, :] = total.reshape(c, p)
+        zparts = fdf.filter(F.col("kind") == 1).select(
+            F.col("i").alias("bj"), F.col("j").alias("k"), F.col("data").alias("p")
+        )
+        z = _sum_partials(zparts, self.n_cols, bc, p)
         if not want_y:
             return None, z
         ydf = fdf.filter(F.col("kind") == 0).select(
             F.col("i").alias("bi"), F.col("j").alias("bj"), "data"
         )
-        y = BlockMatrix(ydf, n, p, br, p)
+        y = BlockMatrix(ydf, self.n_rows, p, self.block_rows, p)
         y._cached_deps = [fdf]
         return y, z
 
     def transpose_matvec(self, other: "BlockMatrix") -> np.ndarray:
         """Aᵀ·Y for conformable tall-skinny Y (few cols) → small driver array.
 
-        Computed as a single joined pass: per (bi) pair AᵢᵀYᵢ, summed by
-        Spark agg — never materializes Aᵀ.
+        Computed as a single joined pass: per (bi) pair AᵢᵀYᵢ, summed
+        executor-side per block column (:func:`_sum_partials`) — never
+        materializes Aᵀ.  Y is n×p with small p: it is broadcast when it
+        fits, so the heavy AᵢᵀYᵢ stage runs map-side at A's source
+        parallelism (the bi join key has only grid_rows distinct values; a
+        shuffle join would cap the stage at that).  An absent Y block
+        drops its pairs from the inner join — zero contribution, the
+        absent-block ≡ zero convention.
         """
         assert self.n_rows == other.n_rows and self.block_rows == other.block_rows
         assert other.grid_cols == 1, "transpose_matvec: Y must be one block wide"
         p = other.n_cols
-        m = self.n_cols
-        br = self.block_rows
-        bc = self.block_cols
-        n = self.n_rows
+        ga, gy = self.layout, other.layout
+        ydf = _source(other)
+        if other.n_rows * p * 8 <= BROADCAST_CAP:
+            ydf = F.broadcast(ydf)
+        joined = _source(self).alias("a").join(
+            ydf.alias("y"), F.col("a.bi") == F.col("y.bi")
+        ).select(
+            F.col("a.bi").alias("bi"),
+            F.col("a.bj").alias("bj"),
+            F.col("a.data").alias("data"),
+            F.col("y.data").alias("dy"),
+        )
 
         def part(batches) -> Iterator:
             import pyarrow as pa
@@ -2744,105 +2230,17 @@ class BlockMatrix:
                 [("bj", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
             )
             for rb in batches:
-                bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                da_c, dy_c = rb.column("da"), rb.column("dy")
+                dy_c = rb.column("dy")
                 out: dict[str, list] = {"bj": [], "k": [], "p": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    r = min(br, n - bi * br)
-                    c = min(bc, m - bj * bc)
-                    a = np.frombuffer(da_c[i].as_buffer(), dtype=np.float64).reshape(r, c)
-                    yv = np.frombuffer(dy_c[i].as_buffer(), dtype=np.float64).reshape(r, p)
+                for i, (bi, bj, a) in enumerate(ga.blocks(rb)):
+                    yv = gy.resolve(dy_c[i], bi, 0)
                     out["bj"].append(bj)
                     out["k"].append(bi)
                     out["p"].append(np.dot(a.T, yv).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        def acc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("k")
-            total = None
-            for buf in pdf["p"]:
-                b = np.frombuffer(buf)
-                total = b.copy() if total is None else total + b
-            return pd.DataFrame({"bj": [key[0]], "z": [total.tobytes()]})
-
-        gseed = self.gen_seed
-        nbc = self.grid_cols
-        y_bytes = other.n_rows * p * 8
-        if gseed is not None and y_bytes <= TMV_FUSED_Y_CAP:
-            # fused generation (VERDICT r5 #3, gramian pattern): regenerate
-            # A's blocks from (seed, bid) inside the AᵀY stage; Y is small
-            # (≤64 MB gate) so it ships once as an sc.broadcast dict — the
-            # equi-join and A's O(matrix) JVM↔Python crossings disappear
-            sc = self.df.sparkSession.sparkContext
-            ymap = sc.broadcast(
-                {r_.bi: bytes(r_.data) for r_ in other.df.collect()}
-            )
-
-            def part_gen(batches) -> Iterator:
-                import pyarrow as pa
-
-                schema = pa.schema(
-                    [("bj", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
-                )
-                ym = ymap.value
-                for rb in batches:
-                    id_c = rb.column("id")
-                    out: dict[str, list] = {"bj": [], "k": [], "p": []}
-                    for i in range(rb.num_rows):
-                        bid = id_c[i].as_py()
-                        bi, bj = bid // nbc, bid % nbc
-                        ybuf = ym.get(bi)
-                        if ybuf is None:
-                            # absent Y block ≡ zero (the codebase-wide
-                            # convention; the unfused inner join drops the
-                            # pair the same way) — zero contribution
-                            continue
-                        r = min(br, n - bi * br)
-                        c = min(bc, m - bj * bc)
-                        a = _gen_block(gseed, bid, r, c)
-                        yv = np.frombuffer(ybuf, dtype=np.float64).reshape(r, p)
-                        out["bj"].append(bj)
-                        out["k"].append(bi)
-                        out["p"].append(np.dot(a.T, yv).tobytes())
-                    if out["bj"]:
-                        yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-            nblk = self.grid_rows * nbc
-            partials = self.df.sparkSession.range(
-                0, nblk, 1, _gen_parts(self.df.sparkSession, nblk)
-            ).mapInArrow(part_gen, "bj int, k int, p binary")
-            rows = (
-                partials.groupBy("bj").applyInPandas(acc, "bj int, z binary").collect()
-            )
-            ymap.unpersist()
-        else:
-            # Y is n×p with small p — broadcast it when it fits so the
-            # heavy AᵢᵀYᵢ stage runs map-side at A's scan parallelism (the
-            # bi join key has only grid_rows distinct values; a shuffle
-            # join would cap the stage at that)
-            ydf = other.df
-            if y_bytes <= BROADCAST_CAP:
-                ydf = F.broadcast(ydf)
-            joined = self.df.alias("a").join(
-                ydf.alias("y"), F.col("a.bi") == F.col("y.bi")
-            ).select(
-                F.col("a.bi").alias("bi"),
-                F.col("a.bj").alias("bj"),
-                F.col("a.data").alias("da"),
-                F.col("y.data").alias("dy"),
-            )
-            rows = (
-                joined.mapInArrow(part, "bj int, k int, p binary")
-                .groupBy("bj")
-                .applyInPandas(acc, "bj int, z binary")
-                .collect()
-            )
-        out = np.zeros((m, p))
-        for row in rows:
-            c = min(bc, m - row.bj * bc)
-            out[row.bj * bc : row.bj * bc + c, :] = np.frombuffer(row.z).reshape(c, p)
-        return out
+        partials = joined.mapInArrow(part, "bj int, k int, p binary")
+        return _sum_partials(partials, self.n_cols, self.block_cols, p)
 
     def lstsq(self, b: "BlockMatrix") -> np.ndarray:
         """Least-squares solve argmin_X ‖A·X − B‖_F for tall-skinny A —
@@ -2885,6 +2283,7 @@ class BlockMatrix:
         bs, n = self.block_rows, self.n_rows
         gr = self.grid_rows
         sc = self.df.sparkSession.sparkContext
+        src, g = _source(self), self.layout
         k = b.shape[1] if b.ndim == 2 else 1
         b2 = b.reshape(n, k).astype(np.float64)
         x = np.zeros((n, k))
@@ -2894,11 +2293,11 @@ class BlockMatrix:
         for i in order:
             ri = min(bs, n - i * bs)
             if not transpose:
-                band = self.df.filter(
+                band = src.filter(
                     (F.col("bi") == i) & (F.col("bj").isin(solved) | (F.col("bj") == i))
                 )
             else:  # Lᵀ_ij = (L_ji)ᵀ — read column i of the stored blocks
-                band = self.df.filter(
+                band = src.filter(
                     (F.col("bj") == i) & (F.col("bi").isin(solved) | (F.col("bi") == i))
                 )
             bc = sc.broadcast(
@@ -2912,21 +2311,12 @@ class BlockMatrix:
                 schema = pa.schema([("kind", pa.int32()), ("p", pa.binary())])
                 xs = _bc.value
                 for rb in batches:
-                    bi_c, bj_c, d_c = (
-                        rb.column("bi"), rb.column("bj"), rb.column("data")
-                    )
                     acc = None
                     diag = None
-                    for q_ in range(rb.num_rows):
-                        bi, bj = bi_c[q_].as_py(), bj_c[q_].as_py()
+                    for bi, bj, blk in g.blocks(rb):
                         if bi == _i and bj == _i:
-                            diag = d_c[q_].as_py()
+                            diag = blk.tobytes()
                             continue
-                        r = min(bs, n - bi * bs)
-                        c = min(bs, n - bj * bs)
-                        blk = np.frombuffer(
-                            d_c[q_].as_buffer(), dtype=np.float64
-                        ).reshape(r, c)
                         contrib = blk.T @ xs[bi] if _tr else blk @ xs[bj]
                         acc = contrib if acc is None else acc + contrib
                     out: dict[str, list] = {"kind": [], "p": []}
@@ -3054,6 +2444,7 @@ def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
     spark = a.df.sparkSession
     n, bs = a.n_rows, a.block_rows
     nb = a.grid_rows
+    g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
     # only the lower triangle participates (A symmetric).  r17 opt round
     # (guide §1.2: the step loop is latency-bound, not work-bound — each
     # driver round trip is a whole job): every trailing/panel checkpoint
@@ -3105,14 +2496,8 @@ def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, d_c = rb.column("bi"), rb.column("data")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi = bi_c[i].as_py()
-                    ri = min(bs, n - bi * bs)
-                    aij = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(
-                        ri, _w.shape[0]
-                    )
+                for bi, _, aij in g.blocks(rb):
                     out["bi"].append(bi)
                     out["bj"].append(_j)
                     out["data"].append(np.dot(aij, _w).tobytes())
@@ -3147,16 +2532,9 @@ def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
                 schema = _pa_block_schema(pa)
                 pmap = _bc.value
                 for rb in batches:
-                    bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                    d_c = rb.column("data")
                     out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                    for i in range(rb.num_rows):
-                        bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                        ri = min(bs, n - bi * bs)
-                        rk = min(bs, n - bj * bs)
-                        aik = np.frombuffer(
-                            d_c[i].as_buffer(), dtype=np.float64
-                        ).reshape(ri, rk)
+                    for bi, bj, aik in g.blocks(rb):
+                        ri, rk = aik.shape
                         lij = np.frombuffer(pmap[bi], dtype=np.float64).reshape(ri, -1)
                         lkj = np.frombuffer(pmap[bj], dtype=np.float64).reshape(rk, -1)
                         out["bi"].append(bi)
@@ -3187,17 +2565,10 @@ def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                d_c = rb.column("data")
                 dli_c, dlk_c = rb.column("dli"), rb.column("dlk")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    ri = min(bs, n - bi * bs)
-                    rk = min(bs, n - bj * bs)
-                    aik = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(
-                        ri, rk
-                    )
+                for i, (bi, bj, aik) in enumerate(g.blocks(rb)):
+                    ri, rk = aik.shape
                     lij = np.frombuffer(dli_c[i].as_buffer(), dtype=np.float64).reshape(
                         ri, -1
                     )
@@ -3297,6 +2668,7 @@ def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
     spark = a.df.sparkSession
     n, bs = a.n_rows, a.block_rows
     nb = a.grid_rows
+    g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
     # lazy checkpoints throughout, exactly as cholesky_blocked (r17 opt
     # round): each is materialized by the step's own unavoidable action
     # (diag collect / panel broadcast collect), folding the per-step job
@@ -3336,15 +2708,8 @@ def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    ri = min(bs, n - bi * bs)
-                    ci = min(bs, n - bj * bs)
-                    blk = np.frombuffer(
-                        d_c[i].as_buffer(), dtype=np.float64
-                    ).reshape(ri, ci)
+                for bi, bj, blk in g.blocks(rb):
                     out["bi"].append(bi)
                     out["bj"].append(bj)
                     if bj == _j:  # column panel: L_ij = A_ij U_jj^-1
@@ -3384,16 +2749,9 @@ def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
                 schema = _pa_block_schema(pa)
                 pm = _bc.value
                 for rb in batches:
-                    bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                    d_c = rb.column("data")
                     out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                    for i in range(rb.num_rows):
-                        bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                        ri = min(bs, n - bi * bs)
-                        rk = min(bs, n - bj * bs)
-                        aik = np.frombuffer(
-                            d_c[i].as_buffer(), dtype=np.float64
-                        ).reshape(ri, rk)
+                    for bi, bj, aik in g.blocks(rb):
+                        ri, rk = aik.shape
                         lij = np.frombuffer(
                             pm[("L", bi)], dtype=np.float64
                         ).reshape(ri, -1)
@@ -3422,17 +2780,10 @@ def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
 
             schema = _pa_block_schema(pa)
             for rb in batches:
-                bi_c, bj_c = rb.column("bi"), rb.column("bj")
-                d_c = rb.column("data")
                 dl_c, du_c = rb.column("dl"), rb.column("du")
                 out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i in range(rb.num_rows):
-                    bi, bj = bi_c[i].as_py(), bj_c[i].as_py()
-                    ri = min(bs, n - bi * bs)
-                    rk = min(bs, n - bj * bs)
-                    aik = np.frombuffer(d_c[i].as_buffer(), dtype=np.float64).reshape(
-                        ri, rk
-                    )
+                for i, (bi, bj, aik) in enumerate(g.blocks(rb)):
+                    ri, rk = aik.shape
                     lij = np.frombuffer(dl_c[i].as_buffer(), dtype=np.float64).reshape(
                         ri, -1
                     )
