@@ -694,7 +694,8 @@ def test_tsqr_fused_matches_materialized(spark, n, c, br):
     input's persisted-Q1 path exactly — on the direct merge and on the
     distributed tree merge."""
     a = BlockMatrix.random(spark, n, c, br, c, seed=5)
-    unfused = BlockMatrix(a.df, a.n_rows, a.n_cols, a.block_rows, a.block_cols)
+    # same blocks in at most 8 partitions: keeps the 100-block case quick
+    unfused = BlockMatrix(a.df.coalesce(8), a.n_rows, a.n_cols, br, c)
     qf, rf = a.tsqr()
     qu, ru = unfused.tsqr()
     assert np.abs(rf - ru).max() < 1e-11
