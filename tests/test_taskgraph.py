@@ -438,6 +438,26 @@ def test_upload_file_module_importable_in_tasks(client, tmp_path):
     assert client.submit(read_value, pure=False).result(60) == 1234
 
 
+def test_upload_file_zip_package_importable_in_tasks(client, tmp_path):
+    """A .zip package shipped with upload_file imports in tasks: workers
+    keep picking up archives added after they started."""
+    import zipfile
+
+    archive = tmp_path / "wukong_uploaded_pkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("wukong_uploaded_pkg/__init__.py", "VALUE = 5678\n")
+    client.upload_file(str(archive))
+
+    def read_value():
+        import wukong_uploaded_pkg
+
+        return wukong_uploaded_pkg.VALUE, wukong_uploaded_pkg.__file__
+
+    value, path = client.submit(read_value, pure=False).result(60)
+    assert value == 5678
+    assert "wukong_uploaded_pkg.zip" in path
+
+
 def test_run_on_every_slot(client):
     import os
 

@@ -14,8 +14,17 @@ Layers (SURVEY.md §7):
   plans        — physical-plan introspection (the 100 TB discipline checks)
 """
 
-from wukong_spark._alloc import tune_arrow_pool, tune_blas, tune_malloc
+from wukong_spark._alloc import (
+    tune_arrow_pool,
+    tune_blas,
+    tune_malloc,
+    use_installed_pyspark,
+)
 
+# before the first pyspark import (session, below): in a Python worker
+# daemon, import the installed pyspark rather than Spark's bundled zip
+# (see _alloc.py, last section)
+use_installed_pyspark()
 # before any numpy/pyarrow work or JVM launch (see _alloc.py): malloc
 # thresholds, single-threaded OpenBLAS, glibc-backed Arrow pool
 tune_malloc()

@@ -1,4 +1,6 @@
-"""Runtime tuning for hosts with a slow kernel memory path (r17 opt round).
+"""Runtime tuning for hosts with a slow kernel memory path (r17 opt round),
+plus the Python workers' import path (``use_installed_pyspark``, last
+section).
 
 Three independent pathologies measured on this host, each fixed here (or
 in ``session.get_spark`` for the JVM side); every knob is standard
@@ -64,6 +66,8 @@ from __future__ import annotations
 
 import ctypes
 import os
+import re
+import sys
 
 _M_TRIM_THRESHOLD = -1
 _M_MMAP_THRESHOLD = -3
@@ -196,3 +200,112 @@ def tune_arrow_pool() -> None:
             pa.set_memory_pool(pa.system_memory_pool())
     except Exception:
         pass
+
+
+# -- Spark's bundled archives on the Python worker path -------------------
+#
+# Spark starts its Python worker daemon with three archives at the front of
+# PYTHONPATH ($SPARK_HOME/python/lib/pyspark.zip, py4j-*-src.zip and the
+# spark-core jar: PythonUtils.sparkPythonPath), so workers import pyspark
+# from the zip.  pyspark's worker calls importlib.invalidate_caches() at
+# the start of EVERY task (worker_util.setup_spark_files), and on Python
+# 3.11 a zipimporter's invalidate_caches() re-reads the archive's whole
+# central directory in pure Python — once per cached importer, i.e. for
+# each pyspark subpackage imported from the 1,328-entry zip and twice for
+# the 5,359-entry jar.  Measured on a 4-core host: 200-350 ms of every
+# Python task, before any user code runs.  When the same pyspark release
+# is installed in a directory on the path, the daemon
+# (wukong_spark._pydaemon, set by get_spark) imports that copy instead and
+# its forked workers inherit the archive-free path.
+
+_SPARK_ARCHIVE = re.compile(
+    r"^(?:(?P<pyspark>pyspark\.zip)|(?P<py4j>py4j-.*-src\.zip)"
+    r"|(?P<jar>spark-core_.*\.jar))$"
+)
+
+
+def _archive_kind(entry: str) -> str | None:
+    """"pyspark", "py4j" or "jar" for one of Spark's own archives, else
+    None (directories and user archives)."""
+    m = _SPARK_ARCHIVE.match(os.path.basename(entry))
+    return m.lastgroup if m else None
+
+
+def spark_archives_to_drop(
+    path: list[str],
+    installed: dict[str, bytes | None],
+    bundled: dict[str, bytes | None],
+) -> list[str]:
+    """The entries of ``path`` to take off so an installed pyspark is used.
+
+    ``installed``/``bundled`` map "pyspark" and "py4j" to the bytes of
+    ``<pkg>/version.py`` of the copy a directory on the path provides and
+    of the copy in Spark's archive (None when absent).  Nothing is dropped
+    unless the installed pyspark is byte-for-byte the bundled release; the
+    py4j zip is dropped only when its installed copy matches as well.
+    Only Spark's own archives are ever returned, never a user's."""
+
+    def same(pkg: str) -> bool:
+        return installed.get(pkg) is not None and installed[pkg] == bundled.get(pkg)
+
+    if not same("pyspark"):
+        return []
+    py4j_ok = same("py4j")
+    return [
+        p
+        for p in path
+        if (kind := _archive_kind(p)) is not None and (kind != "py4j" or py4j_ok)
+    ]
+
+
+def _installed_version(dirs: list[str], pkg: str) -> bytes | None:
+    """``pkg/version.py`` of the copy the first providing directory holds."""
+    for d in dirs:
+        root = os.path.join(d or os.curdir, pkg)
+        if os.path.isfile(os.path.join(root, "__init__.py")):
+            try:
+                with open(os.path.join(root, "version.py"), "rb") as f:
+                    return f.read()
+            except OSError:
+                return None
+    return None
+
+
+def _bundled_version(archive: str | None, pkg: str) -> bytes | None:
+    if archive is None:
+        return None
+    import zipfile
+
+    try:
+        with zipfile.ZipFile(archive) as z:
+            return z.read(f"{pkg}/version.py")
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+
+
+def use_installed_pyspark() -> None:
+    """Take Spark's bundled archives off ``sys.path`` (module doc, last
+    section) before pyspark is first imported.  A no-op once pyspark is
+    imported, and in any process whose path carries no pyspark.zip — a
+    driver started with plain ``python`` or pytest."""
+    if "pyspark" in sys.modules:
+        return
+    archives: dict[str, str] = {}
+    for p in sys.path:
+        kind = _archive_kind(p)
+        if kind is not None:
+            archives.setdefault(kind, p)
+    if "pyspark" not in archives:
+        return
+    dirs = [p for p in sys.path if os.path.isdir(p or os.curdir)]
+    pkgs = ("pyspark", "py4j")
+    drop = spark_archives_to_drop(
+        sys.path,
+        {pkg: _installed_version(dirs, pkg) for pkg in pkgs},
+        {pkg: _bundled_version(archives.get(pkg), pkg) for pkg in pkgs},
+    )
+    for archive in drop:
+        sys.path.remove(archive)
+        for key in list(sys.path_importer_cache):
+            if key == archive or key.startswith(archive + os.sep):
+                del sys.path_importer_cache[key]

@@ -72,6 +72,26 @@ def _jvm_tuning_on() -> bool:
     return os.environ.get("WUKONG_JVM_TUNING", "1") != "0"
 
 
+def _daemon_importable() -> bool:
+    """Whether a local Python worker can import ``wukong_spark._pydaemon``.
+
+    A local-mode worker daemon runs in the driver's working directory with
+    the driver's PYTHONPATH and site-packages, so it sees this package when
+    the package's parent directory is one of those.  A driver that found
+    the package only through its own ``sys.path`` edits keeps pyspark's
+    stock daemon."""
+    import site
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(p and os.path.abspath(p) == root for p in seen)
+
+
 def get_spark(
     app_name: str = "wukong-spark",
     master: str | None = None,
@@ -101,6 +121,12 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
+    if _daemon_importable():
+        # workers import the installed pyspark instead of Spark's bundled
+        # zip: ~270 ms less per Python task (see _alloc.py, last section)
+        builder = builder.config(
+            "spark.python.daemon.module", "wukong_spark._pydaemon"
+        )
     if os.environ.get("WUKONG_NO_ALLOC_TUNING", "") != "1":
         # Python workers must inherit the large-alloc malloc thresholds
         # (wukong_spark/_alloc.py): local mode inherits our env through
