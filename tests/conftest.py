@@ -6,7 +6,7 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wukong_spark.session import TABLES, get_spark  # noqa: E402
 

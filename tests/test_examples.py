@@ -4,11 +4,13 @@ the shared test session."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/examples")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "examples"))
 
 import array_ops  # noqa: E402
 import asof_alignment  # noqa: E402

@@ -505,10 +505,23 @@ def test_als_never_collects_factors(spark, monkeypatch):
     the fit is a bounded scalar (objective legs), never O(n_entities)
     factor rows.  The r10 variant collected all 300 entity factors per
     half-step; this pins the regression shut by recording the row count
-    of every collect() the fit issues."""
+    of every collect() the fit issues.
+
+    It also pins the fit's job count at the benchmark's shape (100×50,
+    rank 8, iters=0): V₀'s checkpoint (the distinct item ids' exchange,
+    then the checkpoint), ONE user half-step that regenerates V₀'s rows
+    instead of joining them and emits the objective legs (exchange,
+    checkpoint), and ONE sum job for both objectives — 5 jobs, where
+    measuring each objective by its own ratings ⋈ U ⋈ V query took 26 —
+    and that releasing the returned frames leaves no persistent RDD the
+    fit made."""
+    import time
+
+    import numpy as np
     from pyspark.sql import functions as F
 
     from wukong_spark.mlops import als_fit
+    from wukong_spark.session import release_checkpoint
 
     n_users, n_items = 120, 60
     ratings = spark.range(0, n_users * 6, 1, 4).select(
@@ -541,6 +554,32 @@ def test_als_never_collects_factors(spark, monkeypatch):
         b <= a + 1e-9 for a, b in zip(objs, objs[1:])
     )
     ratings.unpersist()
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (u, int(it), float(rng.standard_normal()))
+        for u in range(100)
+        for it in rng.choice(50, 10, replace=False)
+    ]
+    ratings = spark.createDataFrame(rows, "user_id long, item_id long, rating double")
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    group = f"als-jobs-{time.time_ns()}"
+    sc.setJobGroup(group, "als_fit job count")
+    try:
+        u_df, v_df, objs = als_fit(ratings, n_factors=8, reg=0.1, iters=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 5, f"als_fit ran {len(jobs)} jobs"
+    assert len(objs) == 2 and objs[1] <= objs[0]
+    release_checkpoint(u_df)
+    release_checkpoint(v_df)
+    assert persistent() <= before
 
 
 def test_pagerank_bucketed_edge_join_no_edge_exchange(spark):

@@ -664,6 +664,20 @@ def test_release_checkpoint_frees_persistent_rdd(spark):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_release_checkpoint_through_projection_only(spark):
+    """A column projection of a checkpoint (how als_fit returns U and V)
+    frees the checkpoint; a filter view over it does not."""
+    from wukong_spark.session import release_checkpoint
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    df = spark.range(1000).selectExpr("id", "id * 2 AS y").localCheckpoint(eager=True)
+    release_checkpoint(df.filter("y > 10").select("id"))
+    assert jsc.getPersistentRDDs().size() == before + 1
+    release_checkpoint(df.select("y").withColumnRenamed("y", "z"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_executor_listener_pruned_after_resolve(client):
     """Memoized pure Futures outlive their followers — the attempt listener
     must be removed once the follower resolves, or repeated submits of the

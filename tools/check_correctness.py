@@ -10,13 +10,14 @@ and prints a per-query verdict.  Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wukong_spark.queries import load_all  # noqa: E402
 from wukong_spark.session import (  # noqa: E402

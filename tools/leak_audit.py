@@ -17,10 +17,11 @@ Exit 0 iff every entry leaks nothing.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def persistent_rdd_ids(spark) -> set[int]:

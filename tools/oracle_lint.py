@@ -21,12 +21,13 @@ Exit status 1 if any oracle is flagged.
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 TABLES = [

@@ -688,26 +688,28 @@ def _gen_ratings(spark: SparkSession, n_users: int, n_items: int):
 )
 def ml_als_check(spark: SparkSession, sf_dir: str):
     """Distributed ALS collaborative filtering contract (r10, de-
-    bottlenecked r11 per VERDICT r10 #1): fit 3 alternating iterations
+    bottlenecked r11 per VERDICT r10 #1): fit 2 alternating iterations
     over a seeded low-rank ratings table with CO-PARTITIONED factor
     DataFrames (`mlops.als_fit`: per-entity exact normal-equation
-    solves via applyInPandas; the other side's factor ROWS join in by
-    entity key — no full-matrix broadcast, and ZERO O(n_entities)
-    driver collects, pinned by tests/test_plan_shape.py::
-    test_als_never_collects_factors), then verify with INDEPENDENT
-    passes (the ml_logreg_check pattern):
+    solves, one batched numpy solve per Arrow batch in mapInArrow; the
+    other side's factor ROWS join in by entity key — no full-matrix
+    broadcast, and ZERO O(n_entities) driver collects, pinned by
+    tests/test_plan_shape.py::test_als_never_collects_factors), then
+    verify with INDEPENDENT passes (the ml_logreg_check pattern):
 
     - user_grad_zero: after the closing user half-step, every user's
       regularized gradient (V_SᵀV_S + λI)u − V_Sᵀr — recomputed from
       the ratings in a fresh grouped join pass, not the solver's
       buffers — has ‖·‖∞ < 1e-8;
-    - objective_monotonic: the full objective, re-measured over the
-      ratings after every iteration (JVM-side zip_with/aggregate dot
-      products), never increases (the ALS guarantee — each half-step
-      is an exact argmin);
+    - objective_monotonic: the full objective after every iteration
+      never increases (the ALS guarantee — each half-step is an exact
+      argmin).  The fit reads each value from the per-entity SSE and
+      ‖f‖² legs its solves emit, summed JVM-side over the two current
+      factor checkpoints; tests/test_als.py pins every value against a
+      ratings ⋈ U ⋈ V recompute;
     - beats_mean_baseline: final SSE < Σ(r − r̄)², with the SSE summed
       inside the same numpy grad pass (independent of the fit's own
-      JVM objective path) and the baseline recomputed in-plan;
+      objective legs) and the baseline recomputed in-plan;
     - n_users/n_items: distinct-entity counts of the factor SHARDS —
       every observed entity must carry a factor row.
 

@@ -334,9 +334,17 @@ def release_checkpoint(df: DataFrame) -> None:
     LogicalRDD leaf — `DataFrame.unpersist()` cannot find it, and
     `queryExecution().toRdd()` returns a DERIVED wrapper RDD whose
     unpersist is a no-op (verified against getPersistentRDDs).  Only the
-    analyzed plan's own `.rdd()` is the registered persistent RDD."""
+    analyzed plan's own `.rdd()` is the registered persistent RDD.
+
+    A column projection of a checkpoint (`ck.select(...)`, as `als_fit`
+    returns its factors) frees the checkpoint it reads, like the
+    checkpoint itself would; a frame whose plan does more than project
+    (a filter, a join) is left alone."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getSimpleName() == "Project":
+            plan = plan.child()
+        plan.rdd().unpersist(False)
     except Exception:
         pass  # best-effort: GC reclaims it eventually
 
