@@ -335,16 +335,28 @@ def test_tsqr_direct_fused_seeded_edge_block(spark, rng):
     assert np.allclose(qn @ r, a, atol=1e-10)
 
 
-def test_qr_square_reference_shape(spark, rng):
+@pytest.mark.parametrize("seeded", [False, True], ids=["numpy", "seeded"])
+def test_qr_square_reference_shape(spark, rng, seeded):
     """General multi-block-column QR at the reference's own example shape —
-    128×128 with 16×16 chunks (docs/examples/examples.rst:62-70)."""
-    a = rng.random((128, 128))
-    m = BlockMatrix.from_numpy(spark, a, 16, 16)
+    128×128 with 16×16 chunks (docs/examples/examples.rst:62-70).  A
+    seeded input re-blocks from regenerated blocks; its factors must match
+    a materialized copy's within 1e-11 (value-equal inputs may still take
+    alignment-dependent BLAS paths)."""
+    if seeded:
+        m = BlockMatrix.random(spark, 128, 128, 16, 16, seed=3)
+        a = m.to_numpy()
+    else:
+        a = rng.random((128, 128))
+        m = BlockMatrix.from_numpy(spark, a, 16, 16)
     q, r = m.qr()
     qn = q.to_numpy()
     assert np.allclose(qn.T @ qn, np.eye(128), atol=1e-9)
     assert np.allclose(qn @ r, a, atol=1e-9)
     assert np.allclose(r, np.triu(r), atol=1e-9)
+    if seeded:
+        qu, ru = BlockMatrix(m.df, 128, 128, 16, 16).qr()
+        assert np.abs(r - ru).max() < 1e-11
+        assert np.abs(qn - qu.to_numpy()).max() < 1e-11
 
 
 def test_qr_tall_multi_panel_edge(spark, rng):
@@ -630,6 +642,23 @@ def test_gramian_fused_matches_materialized(spark):
     # alignment-dependent BLAS kernel paths (arrow buffer view vs fresh
     # allocation); recipe drift would show up orders of magnitude larger
     assert np.abs(a.gramian() - unfused.gramian()).max() < 1e-9
+
+
+def test_gramian_tree_matches_direct(spark, monkeypatch):
+    """Past GRAMIAN_DIRECT_PARTS the task partials merge through the
+    level-1 grouped reduce before the driver sums the group totals; it
+    must agree with the direct collect on seeded and materialized input."""
+    import wukong_spark.blockmatrix as bmod
+
+    seeded = BlockMatrix.random(spark, 1200, 24, 100, 24, seed=13)  # 12 blocks
+    materialized = BlockMatrix(seeded.df, 1200, 24, 100, 24)
+    for a in (seeded, materialized):
+        assert bmod._source(a).rdd.getNumPartitions() >= 9  # ≥ 3 level-1 groups
+        direct = a.gramian()
+        with monkeypatch.context() as mp:
+            mp.setattr(bmod, "GRAMIAN_DIRECT_PARTS", 0)
+            tree = a.gramian()
+        assert np.abs(tree - direct).max() < 1e-9
 
 
 def test_svd_compressed_fused_matches_materialized(spark):

@@ -136,3 +136,54 @@ def test_spgemm_zero_operand(spark):
     c = sa.matmul(sb)
     assert c.df.count() == 0
     assert (c.to_dense().to_numpy() == 0).all()
+
+
+def test_key_ordered_merges_ignore_arrival_order():
+    """The grouped merges add partials in key order, so every arrival order
+    of the same partials gives bitwise-equal output.  Spark-free: the
+    per-group functions take the Arrow table a reducer receives, and the
+    partials (1e16, 1, −1e16) make a float sum order-sensitive."""
+    import itertools
+
+    import pyarrow as pa
+
+    from wukong_spark.blockmatrix import _ordered_sum
+    from wukong_spark.sparse import _spgemm_merge
+
+    parts = {0: [1e16, 3.0], 1: [1.0, 1e-3], 2: [-1e16, 7.0]}  # k -> partial
+    sums, naive, spgemm = set(), set(), set()
+    for perm in itertools.permutations(parts):
+        vals = [np.array(parts[k]) for k in perm]
+        keys = pa.array(perm, pa.int32())
+        t = pa.table({"k": keys, "p": [v.tobytes() for v in vals]})
+        sums.add(_ordered_sum(t, "k", "p"))
+        naive.add(sum(vals[1:], vals[0].copy()).tobytes())
+        # the same partials as COO products: cells (0, 0) and (1, 2)
+        coo = pa.table(
+            {
+                "k": keys,
+                "rows": [np.array([0, 1], np.int32).tobytes()] * 3,
+                "cols": [np.array([0, 2], np.int32).tobytes()] * 3,
+                "vals": [v.tobytes() for v in vals],
+            }
+        )
+        spgemm.add(b"".join(a.tobytes() for a in _spgemm_merge(coo, 4)))
+    assert len(naive) > 1  # arrival order would change the last bits
+    assert len(sums) == 1 and len(spgemm) == 1
+    assert np.frombuffer(sums.pop()).tolist() == [0.0, 10.001]
+
+
+def test_block_layer_imports_no_pandas():
+    """The block layer's kernels are Arrow-only: importing it (sparse
+    imports blockmatrix) in a fresh interpreter leaves pandas unloaded."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "import sys, wukong_spark.sparse; print('pandas' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        timeout=120, check=True,
+    )
+    assert out.stdout.strip() == "False"

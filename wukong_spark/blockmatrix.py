@@ -14,9 +14,11 @@ Spark-first design (NOT a translation of Dask's task graphs):
 - A distributed matrix is a DataFrame of blocks
   ``(bi int, bj int, data binary)`` — ``data`` is the row-major float64
   buffer of block (bi, bj).  Binary payloads move through Arrow batches;
-  per-block math is numpy inside ``mapInPandas``/``applyInPandas`` (the
-  sanctioned Python escape hatch — per-element Column math would be
-  absurd here, per-block BLAS is the right granularity).
+  per-block math is numpy inside ``mapInArrow`` and, where a shuffle
+  gathers one output's inputs, grouped ``applyInArrow`` (the sanctioned
+  Python escape hatch — per-element Column math would be absurd here,
+  per-block BLAS is the right granularity).  No kernel builds a pandas
+  frame.
 - Block generation is *deterministic per block id* regardless of
   partitioning or executor count (`np.random.Generator(PCG64(seed + bid))`),
   mirroring how dask seeds chunked RandomState.
@@ -48,7 +50,6 @@ from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -116,6 +117,20 @@ def _pa_block_schema(pa):
     (mapInArrow outputs must carry exact int32 types; from_pydict would
     otherwise infer int64 and the JVM reader rejects the column)."""
     return pa.schema([("bi", pa.int32()), ("bj", pa.int32()), ("data", pa.binary())])
+
+
+def _pa_schema(ddl: str):
+    """Arrow schema of a flat DDL string such as ``"bj int, z binary"`` —
+    the exact types an Arrow kernel's output must carry (the JVM reader
+    and the grouped-map result check reject an inferred int64 for
+    ``int``), so each kernel states its output schema once."""
+    import pyarrow as pa
+
+    types = {
+        "int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
+        "binary": pa.binary(), "boolean": pa.bool_(),
+    }
+    return pa.schema([(n, types[t]) for n, t in (c.split() for c in ddl.split(","))])
 
 
 #: above this many block rows, TSQR merges R factors through a distributed
@@ -243,31 +258,58 @@ def _piece_rows(src: DataFrame, g: _Layout, pieces) -> DataFrame:
     )
 
 
-def _ordered_sum(pdf: pd.DataFrame) -> bytes:
-    """Copy-then-add one group's ``p`` partials in ascending ``k`` — the
-    accumulation order every partial-sum reduction here shares, so fused
-    and materialized paths add the same doubles in the same order."""
+def _ordered_sum(t, order: str, col: str) -> bytes:
+    """Copy-then-add one group's ``col`` partials (an Arrow table) in
+    ascending ``order`` — the accumulation order every partial-sum merge
+    shares, so a sum never depends on shuffle arrival order (a retried or
+    re-fetched task adds the same doubles in the same order) and fused and
+    materialized paths agree."""
+    parts = t.column(col)
     total = None
-    for buf in pdf.sort_values("k")["p"]:
-        b = np.frombuffer(buf)
+    for i in np.argsort(t.column(order).to_numpy(), kind="stable"):
+        b = np.frombuffer(parts[i].as_buffer(), dtype=np.float64)
         total = b.copy() if total is None else total + b
     return total.tobytes()
 
 
+def _sum_by_key(partials: DataFrame, key: str, order: str, col: str) -> DataFrame:
+    """THE block-partial merge: one ``(key, col)`` row per ``key``, whose
+    float64 ``col`` partials are summed by :func:`_ordered_sum`.  Each
+    partial reaches the reducer as its own Arrow row; a ``collect_list``
+    cell would hold the whole group, and a large gramian group outgrows
+    the JVM Arrow reader's per-cell ceiling."""
+    ddl = f"{key} int, {col} binary"
+
+    def merge(k, t):
+        import pyarrow as pa
+
+        out = {key: [k[0].as_py()], col: [_ordered_sum(t, order, col)]}
+        return pa.Table.from_pydict(out, schema=_pa_schema(ddl))
+
+    return partials.groupBy(key).applyInArrow(merge, ddl)
+
+
 def _sum_partials(partials: DataFrame, m: int, bc: int, p: int) -> np.ndarray:
-    """Reduce ``(bj, k, p)`` partials — c×p slices of an m×p result —
-    executor-side per bj (:func:`_ordered_sum`); the driver receives one
-    row per block column and stitches the result."""
-
-    def acc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"bj": [key[0]], "z": [_ordered_sum(pdf)]})
-
-    rows = partials.groupBy("bj").applyInPandas(acc, "bj int, z binary").collect()
+    """Reduce ``(bj, k, z)`` partials — c×p slices of an m×p result, or
+    length-c slices of a length-m vector for p=1 — executor-side per bj in
+    ascending k (:func:`_sum_by_key`); the driver receives one row per
+    block column and stitches the result."""
     out = np.zeros((m, p))
-    for row in rows:
+    for row in _sum_by_key(partials, "bj", "k", "z").collect():
         c = min(bc, m - row.bj * bc)
         out[row.bj * bc : row.bj * bc + c, :] = np.frombuffer(row.z).reshape(c, p)
     return out
+
+
+def _block_table(bi: int, bj: int, blk: np.ndarray):
+    """One-row BLOCK_SCHEMA Arrow table: the result of a grouped kernel
+    that assembles one output block."""
+    import pyarrow as pa
+
+    return pa.Table.from_pydict(
+        {"bi": [bi], "bj": [bj], "data": [np.ascontiguousarray(blk).tobytes()]},
+        schema=_pa_block_schema(pa),
+    )
 
 
 def _stack_qr(pieces, c: int, canonical: bool = True):
@@ -635,36 +677,25 @@ class BlockMatrix:
 
     def _axis_sums(self, axis: int) -> np.ndarray:
         """Column (axis=0) or row (axis=1) sums: per-block partials, one
-        merge per block column (row), driver assembly."""
-        g = self.layout
+        merge per block column (row) in ascending block row (column)
+        order, driver assembly."""
+        g, ddl = self.layout, "bj int, k int, z binary"
 
         def part(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = pa.schema([("k", pa.int32()), ("partial", pa.binary())])
+            schema = _pa_schema(ddl)
             for rb in batches:
-                out: dict[str, list] = {"k": [], "partial": []}
+                out: dict[str, list] = {"bj": [], "k": [], "z": []}
                 for bi, bj, blk in g.blocks(rb):
-                    out["k"].append(bj if axis == 0 else bi)
-                    out["partial"].append(blk.sum(axis=axis).tobytes())
+                    out["bj"].append(bj if axis == 0 else bi)
+                    out["k"].append(bi if axis == 0 else bj)
+                    out["z"].append(blk.sum(axis=axis).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.sum([np.frombuffer(p) for p in pdf["partial"]], axis=0)
-            return pd.DataFrame({"k": [key[0]], "partial": [total.tobytes()]})
-
-        merged = (
-            _source(self).mapInArrow(part, "k int, partial binary")
-            .groupBy("k")
-            .applyInPandas(merge, "k int, partial binary")
-            .collect()
-        )
+        partials = _source(self).mapInArrow(part, ddl)
         size, bs = (g.m, g.bc) if axis == 0 else (g.n, g.br)
-        out = np.zeros(size)
-        for row in merged:
-            v = np.frombuffer(row.partial)
-            out[row.k * bs : row.k * bs + len(v)] = v
-        return out
+        return _sum_partials(partials, size, bs, 1).ravel()
 
     def col_sums(self) -> np.ndarray:
         """Column sums (axis=0 reduction): per-block partial → driver combine."""
@@ -766,8 +797,8 @@ class BlockMatrix:
         Measured dead ends at reference dims (do not relearn): join-on-k
         SUMMA (grid_k join keys → 10× under-parallelism + partials through
         Arrow twice, 119 s), broadcast of an 800 MB operand (driver
-        funnel, 188 s), shuffle_hash hint (hash-relation OOM), pandas
-        applyInPandas instead of mapInArrow (bytes-object copies of the
+        funnel, 188 s), shuffle_hash hint (hash-relation OOM), a pandas
+        grouped map instead of mapInArrow (bytes-object copies of the
         whole 16 GB stream), f=3 tiles (under-parallel + 1 GB/task
         buffers, 58 s), spark.local.dir on tmpfs (no gain — page cache
         already absorbs shuffle files).
@@ -1028,13 +1059,15 @@ class BlockMatrix:
         src = _source(self)
         n_parts = max(1, src.rdd.getNumPartitions())
         n_groups = max(1, int(n_parts**0.5))
+        ddl = "g int, o int, gram binary"
 
         def part(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = pa.schema([("g", pa.int32()), ("gram", pa.binary())])
+            schema = _pa_schema(ddl)
             for rb in batches:
-                # one partial per (arrow batch, level-1 group)
+                # one partial per (arrow batch, level-1 group), ordered in
+                # its group by the batch's first bi (unique per batch)
                 totals: dict[int, np.ndarray] = {}
                 for bi, _, blk in g.blocks(rb):
                     gm = blk.T @ blk
@@ -1045,31 +1078,27 @@ class BlockMatrix:
                     yield pa.RecordBatch.from_pydict(
                         {
                             "g": list(totals),
+                            "o": [rb.column("bi")[0].as_py()] * len(totals),
                             "gram": [t[iu].tobytes() for t in totals.values()],
                         },
                         schema=schema,
                     )
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.sum([np.frombuffer(p) for p in pdf["gram"]], axis=0)
-            return pd.DataFrame({"g": [int(key[0])], "gram": [total.tobytes()]})
-
-        src = src.mapInArrow(part, "g int, gram binary")
+        src = src.mapInArrow(part, ddl)
         tri_bytes = c_total * (c_total + 1) * 4  # c(c+1)/2 doubles
         if n_parts <= GRAMIAN_DIRECT_PARTS and n_parts * tri_bytes <= 64 << 20:
             # small-input fast path (r9): few task partials AND bounded
             # driver traffic (≤ 64 MB of c² buffers) — collecting them
             # directly keeps a 1-stage plan (no level-1 exchange), the
-            # latency floor for the sub-second sigma/check queries.  Sort
-            # by group key so the float accumulation order is
-            # deterministic.
-            rows = sorted(src.collect(), key=lambda row: row.g)
+            # latency floor for the sub-second sigma/check queries.
+            rows = src.collect()
         else:
             # level 1: ~√(n_partials) parallel reducers; level 2: driver
             # sums the ≤ n_groups group totals (n_groups·c² doubles) — no
             # reducer ever reads more than ~√(n_partials)·c² doubles
-            lvl1 = src.groupBy("g").applyInPandas(merge, "g int, gram binary")
-            rows = lvl1.collect()
+            rows = _sum_by_key(src, "g", "o", "gram").collect()
+        # sort by group key so the float accumulation order is deterministic
+        rows.sort(key=lambda row: row.g)
         tri = np.sum([np.frombuffer(row.gram) for row in rows], axis=0)
         # mirror the summed packed triangle back to a full symmetric matrix
         iu = _triu(c_total)
@@ -1089,7 +1118,8 @@ class BlockMatrix:
 
         When grid_rows exceeds TSQR_TREE_FANOUT an extra DISTRIBUTED merge
         level runs first: groups of ≤fanout R1s stack-and-QR on executors
-        (applyInPandas per group), only the per-group R2s reach the driver —
+        (one grouped applyInArrow call per group), only the per-group R2s
+        reach the driver —
         driver memory drops from O(grid_rows·c²) to O(grid_rows/fanout·c²),
         and Qᵢ composes as Q1ᵢ·Q2-slice·Q3-slice (VERDICT r1 fix #4).
 
@@ -1162,22 +1192,30 @@ class BlockMatrix:
             # one distributed group-merge level (fanout TSQR_TREE_FANOUT),
             # then the driver QR over the grid_rows/fanout group R2s:
             # Qᵢ = Q1ᵢ · Q2ᵢ · Q3_group(i)
-            def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                q2s, r2g = _stack_qr(zip(pdf["bi"], pdf["r1"]), c, canonical=False)
-                gid = int(key[0])
-                out = [
-                    (int(bi), gid, np.ascontiguousarray(q2).tobytes(), None)
-                    for bi, q2 in q2s.items()
-                ]
-                # one marker row per group carries the group R2 to the driver
-                out.append((-1, gid, None, np.ascontiguousarray(r2g).tobytes()))
-                return pd.DataFrame(out, columns=["bi", "gid", "q2", "r2"])
+            ddl = "bi int, gid int, q2 binary, r2 binary"
+
+            def merge_group(key, t):
+                import pyarrow as pa
+
+                pieces = zip(t.column("bi").to_pylist(), t.column("r1").to_pylist())
+                q2s, r2g = _stack_qr(pieces, c, canonical=False)
+                nq = len(q2s)
+                # one marker row (bi -1) per group carries the group R2 to
+                # the driver
+                out = {
+                    "bi": list(q2s) + [-1],
+                    "gid": [key[0].as_py()] * (nq + 1),
+                    "q2": [np.ascontiguousarray(q).tobytes() for q in q2s.values()]
+                    + [None],
+                    "r2": [None] * nq + [np.ascontiguousarray(r2g).tobytes()],
+                }
+                return pa.Table.from_pydict(out, schema=_pa_schema(ddl))
 
             lvl2 = (
                 stage1.select("bi", "r1")
                 .withColumn("gid", (F.col("bi") / TSQR_TREE_FANOUT).cast("int"))
                 .groupBy("gid")
-                .applyInPandas(merge_group, "bi int, gid int, q2 binary, r2 binary")
+                .applyInArrow(merge_group, ddl)
                 .persist()
             )
             deps.append(lvl2)
@@ -1262,27 +1300,13 @@ class BlockMatrix:
         return r_final, orth, recon
 
     def reblock_single_column(self) -> "BlockMatrix":
-        """Horizontal re-block: stitch each block row's column blocks into
-        ONE wide block (bi, 0, [A_i0 | A_i1 | …]).  One shuffle on bi;
-        a matrix that is already one block wide passes through untouched."""
+        """Horizontal re-block to ONE block column: each block row's column
+        blocks become one wide block (bi, 0, [A_i0 | A_i1 | …]) — a
+        :meth:`rechunk`, so a seeded input re-blocks from regenerated
+        blocks; a matrix that is already one block wide passes through."""
         if self.grid_cols == 1:
             return self
-        br, bc, n, m = self.block_rows, self.block_cols, self.n_rows, self.n_cols
-
-        def stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            bi = int(key[0])
-            r = min(br, n - bi * br)
-            pdf = pdf.sort_values("bj")
-            parts = []
-            for bj, data in zip(pdf["bj"], pdf["data"]):
-                c = min(bc, m - int(bj) * bc)
-                parts.append(np.frombuffer(data).reshape(r, c))
-            out = np.ascontiguousarray(np.hstack(parts))
-            return pd.DataFrame([(bi, 0, out.tobytes())], columns=["bi", "bj", "data"])
-
-        return BlockMatrix(
-            self.df.groupBy("bi").applyInPandas(stitch, BLOCK_SCHEMA), n, m, br, m
-        )
+        return self.rechunk(self.block_rows, self.n_cols)
 
     # -- re-chunking / concatenation (da.rechunk / da.concatenate) --------
     def _emit_pieces(
@@ -1335,21 +1359,18 @@ class BlockMatrix:
         """Reduce side of rechunk/vstack/hstack: one shuffle on the
         destination block id, then byte placement into the output block."""
 
-        def stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            obi, obj = int(key[0]), int(key[1])
-            r = min(tbr, n - obi * tbr)
-            c = min(tbc, m - obj * tbc)
-            out = np.zeros((r, c))
-            for r0, c0, nr, nc, p in zip(
-                pdf["r0"], pdf["c0"], pdf["nr"], pdf["nc"], pdf["p"]
-            ):
-                out[int(r0) : int(r0) + int(nr), int(c0) : int(c0) + int(nc)] = (
-                    np.frombuffer(p).reshape(int(nr), int(nc))
-                )
-            return pd.DataFrame([(obi, obj, out.tobytes())], columns=["bi", "bj", "data"])
+        def stitch(key, t):
+            obi, obj = key[0].as_py(), key[1].as_py()
+            out = np.zeros((min(tbr, n - obi * tbr), min(tbc, m - obj * tbc)))
+            extents = [t.column(k).to_pylist() for k in ("r0", "c0", "nr", "nc")]
+            for r0, c0, nr, nc, p in zip(*extents, t.column("p")):
+                out[r0 : r0 + nr, c0 : c0 + nc] = np.frombuffer(
+                    p.as_buffer(), dtype=np.float64
+                ).reshape(nr, nc)
+            return _block_table(obi, obj, out)
 
         return BlockMatrix(
-            pieces.groupBy("obi", "obj").applyInPandas(stitch, BLOCK_SCHEMA),
+            pieces.groupBy("obi", "obj").applyInArrow(stitch, BLOCK_SCHEMA),
             n, m, tbr, tbc,
         )
 
@@ -1510,15 +1531,18 @@ class BlockMatrix:
         — the classic two-phase distributed prefix sum:
 
         1. a light pass reduces each block to its 1×c column-total row;
-           grouped by bj, the grid_rows tiny rows per block column become
-           exclusive prefix offsets — distributed, O(grid · bc) per task,
-           never a driver collect;
+           one grouped applyInArrow call per block column turns its
+           grid_rows tiny rows into exclusive prefix offsets, added in
+           ascending bi — distributed, O(grid · bc) per task, never a
+           driver collect;
         2. a map pass computes each block's LOCAL column-wise cumsum; the
-           offsets (broadcast — they are ~grid⁻¹·br⁻¹ of the matrix)
-           equi-join in and add row-broadcast.
+           offsets (~grid⁻¹·br⁻¹ of the matrix; broadcast under
+           BROADCAST_CAP, else shuffled) equi-join in and add
+           row-broadcast.
 
-        The input is read by both passes — persist it for one scan each,
-        exactly the contract tsqr/gramian consumers already follow.
+        A materialized input is read by both passes — persist it for one
+        scan each, exactly the contract tsqr/gramian consumers already
+        follow; a seeded input regenerates its blocks in each pass.
 
         At 100 TB the plan holds: the only shuffled payload beyond the
         local pass is the offsets table — grid_rows × n_cols doubles,
@@ -1529,33 +1553,35 @@ class BlockMatrix:
         # per-block column totals (a 1×c row each)
         totals = _blockwise(src, g, lambda bi, bj, b: (bi, bj, b.sum(axis=0)))
         grid_rows = self.grid_rows
+        ddl = "bi int, bj int, off binary, present boolean, nz boolean"
 
-        def offsets(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def offsets(key, t):
+            import pyarrow as pa
+
             # emit a row for EVERY bi in the grid, not just present blocks:
             # an absent block (≡ zero, the documented convention) has a
             # NONZERO cumsum output below nonzero blocks — its constant
             # offset row, flagged present=False so it can be materialized
             # without joining the (absent) data
-            present_tot = {int(bi): tot for bi, tot in zip(pdf["bi"], pdf["tot"])}
-            width = len(np.frombuffer(next(iter(present_tot.values()))))
-            run = np.zeros(width)
+            present_tot = dict(
+                zip(t.column("bi").to_pylist(), t.column("tot").to_pylist())
+            )
+            run = np.zeros(len(next(iter(present_tot.values()))) // 8)
             rows = {"bi": [], "bj": [], "off": [], "present": [], "nz": []}
             for bi in range(grid_rows):
                 rows["bi"].append(bi)
-                rows["bj"].append(int(key[0]))
+                rows["bj"].append(key[0].as_py())
                 rows["off"].append(run.tobytes())
                 rows["present"].append(bi in present_tot)
                 rows["nz"].append(bool(np.any(run)))
                 if bi in present_tot:
                     run = run + np.frombuffer(present_tot[bi])
-            return pd.DataFrame(rows)
+            return pa.Table.from_pydict(rows, schema=_pa_schema(ddl))
 
         off_all = (
             totals.withColumnRenamed("data", "tot")
             .groupBy("bj")
-            .applyInPandas(
-                offsets, "bi int, bj int, off binary, present boolean, nz boolean"
-            )
+            .applyInArrow(offsets, ddl)
         )
         # read by the join branch AND the filler branch: persist so the
         # totals scan + offsets stage run once per action, not twice.  The
@@ -1669,11 +1695,12 @@ class BlockMatrix:
 
         Spark-first plan: every block emits its core plus two ``depth``-row
         slivers addressed to its neighbors; ONE shuffle co-locates each
-        target block with its halos (groupBy (tbi, bj)) and an
-        applyInPandas task assembles [top-halo; core; bottom-halo], applies
-        ``fn``, and trims.  Halo traffic is 2·depth/block_rows of the
-        matrix; the core movement is one full exchange — the same volume
-        dask's overlap graph ships when chunks live on different workers.
+        target block with its halos (groupBy (tbi, bj)) and one grouped
+        applyInArrow call per block assembles [top-halo; core;
+        bottom-halo], applies ``fn``, and trims.  Halo traffic is
+        2·depth/block_rows of the matrix; the core movement is one full
+        exchange — the same volume dask's overlap graph ships when chunks
+        live on different workers.
 
         Requires a DENSE input (every grid block present): halo exchange
         addresses physical neighbors, and an absent-as-zero block would
@@ -1717,12 +1744,12 @@ class BlockMatrix:
                         )
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            tbi, bj = int(key[0]), int(key[1])
+        def assemble(key, tbl):
+            tbi, bj = key[0].as_py(), key[1].as_py()
             c = min(bc, m - bj * bc)
             core = top = bottom = None
-            for role, buf in zip(pdf["role"], pdf["data"]):
-                arr = np.frombuffer(buf, dtype=np.float64).reshape(-1, c)
+            for role, buf in zip(tbl.column("role").to_pylist(), tbl.column("data")):
+                arr = np.frombuffer(buf.as_buffer(), dtype=np.float64).reshape(-1, c)
                 if role == 0:
                     core = arr
                 elif role == 1:
@@ -1761,15 +1788,12 @@ class BlockMatrix:
                 )
             t = 0 if top is None else top.shape[0]
             b = result.shape[0] - (0 if bottom is None else bottom.shape[0])
-            trimmed = np.ascontiguousarray(result[t:b])
-            return pd.DataFrame(
-                {"bi": [tbi], "bj": [bj], "data": [trimmed.tobytes()]}
-            )
+            return _block_table(tbi, bj, result[t:b])
 
         out_df = (
             _source(self).mapInArrow(emit, "tbi int, bj int, role int, data binary")
             .groupBy("tbi", "bj")
-            .applyInPandas(assemble, BLOCK_SCHEMA)
+            .applyInArrow(assemble, BLOCK_SCHEMA)
         )
         return BlockMatrix(out_df, n, m, br, bc)
 
@@ -2024,31 +2048,26 @@ class BlockMatrix:
 
         def sketch(mat: "BlockMatrix", w: np.ndarray) -> "BlockMatrix":
             """Y = mat @ w with w broadcast to every block; sum over bj."""
-            g, bc = mat.layout, mat.block_cols
+            g, bc, ddl = mat.layout, mat.block_cols, "bi int, k int, data binary"
 
             def part(batches) -> Iterator:
                 import pyarrow as pa
 
-                schema = pa.schema(
-                    [("bi", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
-                )
+                schema = _pa_schema(ddl)
                 for rb in batches:
-                    out: dict[str, list] = {"bi": [], "k": [], "p": []}
+                    out: dict[str, list] = {"bi": [], "k": [], "data": []}
                     for bi, bj, blk in g.blocks(rb):
                         out["bi"].append(bi)
                         out["k"].append(bj)
-                        out["p"].append(
+                        out["data"].append(
                             np.dot(blk, w[bj * bc : bj * bc + blk.shape[1], :]).tobytes()
                         )
                     yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-            def acc(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                return pd.DataFrame(
-                    {"bi": [key[0]], "bj": [0], "data": [_ordered_sum(pdf)]}
-                )
-
-            partials = _source(mat).mapInArrow(part, "bi int, k int, p binary")
-            ydf = partials.groupBy("bi").applyInPandas(acc, BLOCK_SCHEMA)
+            partials = _source(mat).mapInArrow(part, ddl)
+            ydf = _sum_by_key(partials, "bi", "k", "data").select(
+                "bi", F.lit(0).alias("bj"), "data"
+            )
             return BlockMatrix(ydf, mat.n_rows, w.shape[1], mat.block_rows, w.shape[1])
 
         if fused:
@@ -2118,7 +2137,7 @@ class BlockMatrix:
 
         One task per block-row: resolve row i's blocks ONCE (ascending
         bj), fold Yᵢ = Σⱼ Aᵢⱼ·Wⱼ in that same order — bit-identical to the
-        unfused sketch's sorted-k applyInPandas accumulator — then emit
+        unfused sketch's sorted-k :func:`_sum_by_key` merge — then emit
         the projection partials AᵢⱼᵀYᵢ from the still-held buffers.  The
         Z partials reduce executor-side through transpose_matvec's
         accumulator (:func:`_sum_partials`: bi-ascending copy-then-add per
@@ -2183,7 +2202,7 @@ class BlockMatrix:
         if want_y:
             fdf = fdf.persist()
         zparts = fdf.filter(F.col("kind") == 1).select(
-            F.col("i").alias("bj"), F.col("j").alias("k"), F.col("data").alias("p")
+            F.col("i").alias("bj"), F.col("j").alias("k"), F.col("data").alias("z")
         )
         z = _sum_partials(zparts, self.n_cols, bc, p)
         if not want_y:
@@ -2223,23 +2242,23 @@ class BlockMatrix:
             F.col("y.data").alias("dy"),
         )
 
+        ddl = "bj int, k int, z binary"
+
         def part(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = pa.schema(
-                [("bj", pa.int32()), ("k", pa.int32()), ("p", pa.binary())]
-            )
+            schema = _pa_schema(ddl)
             for rb in batches:
                 dy_c = rb.column("dy")
-                out: dict[str, list] = {"bj": [], "k": [], "p": []}
+                out: dict[str, list] = {"bj": [], "k": [], "z": []}
                 for i, (bi, bj, a) in enumerate(ga.blocks(rb)):
                     yv = gy.resolve(dy_c[i], bi, 0)
                     out["bj"].append(bj)
                     out["k"].append(bi)
-                    out["p"].append(np.dot(a.T, yv).tobytes())
+                    out["z"].append(np.dot(a.T, yv).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        partials = joined.mapInArrow(part, "bj int, k int, p binary")
+        partials = joined.mapInArrow(part, ddl)
         return _sum_partials(partials, self.n_cols, self.block_cols, p)
 
     def lstsq(self, b: "BlockMatrix") -> np.ndarray:
@@ -2375,12 +2394,12 @@ def _subtract_panel_projection(
     """W − Q·S for one-block-wide W against a multi-block-column Q with the
     same row blocking; S is the small (q.n_cols × w.n_cols) driver factor
     shipped in the task closure.  One shuffle: Q joins W on the row-block
-    index and partials accumulate per row block — the CGS projection step
-    of BlockMatrix.qr, never O(matrix) on the driver."""
-    br, n, cw = w.block_rows, w.n_rows, w.n_cols
-    bc, mq = q.block_cols, q.n_cols
-    joined = q.df.alias("q").join(
-        w.df.alias("w"), F.col("q.bi") == F.col("w.bi")
+    index and partials subtract per row block in ascending Q block column
+    — the CGS projection step of BlockMatrix.qr, never O(matrix) on the
+    driver."""
+    bc, gq, gw = q.block_cols, q.layout, w.layout
+    joined = _source(q).alias("q").join(
+        _source(w).alias("w"), F.col("q.bi") == F.col("w.bi")
     ).select(
         F.col("q.bi").alias("bi"),
         F.col("q.bj").alias("qj"),
@@ -2388,18 +2407,18 @@ def _subtract_panel_projection(
         F.col("w.data").alias("dw"),
     )
 
-    def proj(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi = int(key[0])
-        r = min(br, n - bi * br)
-        acc = np.frombuffer(pdf["dw"].iloc[0]).reshape(r, cw).copy()
-        for qj, dq in zip(pdf["qj"], pdf["dq"]):
-            cq = min(bc, mq - int(qj) * bc)
-            qb = np.frombuffer(dq).reshape(r, cq)
-            acc -= qb @ s[int(qj) * bc : int(qj) * bc + cq, :]
-        return pd.DataFrame([(bi, 0, acc.tobytes())], columns=["bi", "bj", "data"])
+    def proj(key, t):
+        bi = key[0].as_py()
+        acc = gw.resolve(t.column("dw")[0], bi, 0).copy()
+        pairs = zip(t.column("qj").to_pylist(), t.column("dq"))
+        for qj, dq in sorted(pairs, key=lambda pair: pair[0]):
+            qb = gq.resolve(dq, bi, qj)
+            acc -= qb @ s[qj * bc : qj * bc + qb.shape[1], :]
+        return _block_table(bi, 0, acc)
 
     return BlockMatrix(
-        joined.groupBy("bi").applyInPandas(proj, BLOCK_SCHEMA), n, cw, br, cw
+        joined.groupBy("bi").applyInArrow(proj, BLOCK_SCHEMA),
+        w.n_rows, w.n_cols, w.block_rows, w.n_cols,
     )
 
 

@@ -140,6 +140,7 @@ def python_eval_count(plan: str) -> tuple[int, int]:
     arrow = (
         plan.count("ArrowEvalPython")
         + plan.count("FlatMapGroupsInPandas")  # also matches ...WithState
+        + plan.count("FlatMapGroupsInArrow")
         + plan.count("MapInPandas")
         + plan.count("MapInArrow")
         + plan.count("AggregateInPandas")

@@ -26,26 +26,44 @@ from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wukong_spark.blockmatrix import BLOCK_SCHEMA, BlockMatrix, _grid
+from wukong_spark.blockmatrix import (
+    BLOCK_SCHEMA,
+    BlockMatrix,
+    _grid,
+    _pa_schema,
+    _sum_partials,
+)
 
 SPARSE_SCHEMA = "bi int, bj int, nnz long, rows binary, cols binary, vals binary"
 
 
-def _pa_sparse_schema(pa):
-    return pa.schema(
-        [
-            ("bi", pa.int32()),
-            ("bj", pa.int32()),
-            ("nnz", pa.int64()),
-            ("rows", pa.binary()),
-            ("cols", pa.binary()),
-            ("vals", pa.binary()),
-        ]
+def _accum(rows: np.ndarray, cols: np.ndarray, vals: np.ndarray, width: int):
+    """Sum the duplicate (row, col) cells of a COO triple, in input order
+    (bincount over packed keys); cells come out sorted by (row, col)."""
+    key = rows.astype(np.int64) * width + cols.astype(np.int64)
+    uk, inv = np.unique(key, return_inverse=True)
+    sums = np.bincount(inv, weights=vals)
+    return (
+        (uk // width).astype(np.int32),
+        (uk % width).astype(np.int32),
+        sums.astype(np.float64),
     )
+
+
+def _spgemm_merge(t, width: int):
+    """Merge one output block's partial COO products (an Arrow table of
+    ``k, rows, cols, vals`` rows): concatenate them in ascending
+    contraction index ``k`` and sum duplicate cells, so the result never
+    depends on shuffle arrival order."""
+    order = np.argsort(t.column("k").to_numpy(), kind="stable")
+    cat = [
+        np.concatenate([np.frombuffer(t.column(c)[i].as_buffer(), dt) for i in order])
+        for c, dt in (("rows", np.int32), ("cols", np.int32), ("vals", np.float64))
+    ]
+    return _accum(*cat, width)
 
 
 @dataclass
@@ -77,7 +95,7 @@ class SparseBlockMatrix:
         def conv(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = _pa_sparse_schema(pa)
+            schema = _pa_schema(SPARSE_SCHEMA)
             for rb in batches:
                 bi_c, bj_c, d_c = rb.column("bi"), rb.column("bj"), rb.column("data")
                 out: dict[str, list] = {k: [] for k in ("bi", "bj", "nnz", "rows", "cols", "vals")}
@@ -135,7 +153,7 @@ class SparseBlockMatrix:
         def run(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = _pa_sparse_schema(pa)
+            schema = _pa_schema(SPARSE_SCHEMA)
             for rb in batches:
                 cols = {k: rb.column(k) for k in ("bi", "bj", "nnz", "rows", "cols")}
                 v_c = rb.column("vals")
@@ -180,43 +198,30 @@ class SparseBlockMatrix:
 
     def col_sums(self) -> np.ndarray:
         """Column sums (the reference workload's s.sum(axis=0)): per-block
-        bincount over the nonzeros → merge per block column → driver
-        assemble.  Cost is O(nnz), never O(rows·cols)."""
-        bc, m = self.block_cols, self.n_cols
+        bincount over the nonzeros → merge per block column in ascending
+        bi → driver assemble.  Cost is O(nnz), never O(rows·cols)."""
+        bc, m, ddl = self.block_cols, self.n_cols, "bj int, k int, z binary"
 
         def part(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = pa.schema([("bj", pa.int32()), ("partial", pa.binary())])
+            schema = _pa_schema(ddl)
             for rb in batches:
-                bj_c = rb.column("bj")
+                bi_c, bj_c = rb.column("bi"), rb.column("bj")
                 c_c, v_c = rb.column("cols"), rb.column("vals")
-                out: dict[str, list] = {"bj": [], "partial": []}
+                out: dict[str, list] = {"bj": [], "k": [], "z": []}
                 for i in range(rb.num_rows):
                     bj = bj_c[i].as_py()
                     c = min(bc, m - bj * bc)
                     ci = np.frombuffer(c_c[i].as_buffer(), dtype=np.int32)
                     v = np.frombuffer(v_c[i].as_buffer(), dtype=np.float64)
-                    s = np.bincount(ci, weights=v, minlength=c)
                     out["bj"].append(bj)
-                    out["partial"].append(s.tobytes())
+                    out["k"].append(bi_c[i].as_py())
+                    out["z"].append(np.bincount(ci, weights=v, minlength=c).tobytes())
                 yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            total = np.sum([np.frombuffer(p) for p in pdf["partial"]], axis=0)
-            return pd.DataFrame({"bj": [key[0]], "partial": [total.tobytes()]})
-
-        merged = (
-            self.df.mapInArrow(part, "bj int, partial binary")
-            .groupBy("bj")
-            .applyInPandas(merge, "bj int, partial binary")
-            .collect()
-        )
-        out = np.zeros(m)
-        for row in merged:
-            c = min(bc, m - row.bj * bc)
-            out[row.bj * bc : row.bj * bc + c] = np.frombuffer(row.partial)
-        return out
+        partials = self.df.mapInArrow(part, ddl)
+        return _sum_partials(partials, m, bc, 1).ravel()
 
     # -- sparse × sparse matmul (SpGEMM) -----------------------------------
     def matmul(self, other: "SparseBlockMatrix") -> "SparseBlockMatrix":
@@ -226,8 +231,8 @@ class SparseBlockMatrix:
         Block plan: C_ij = Σ_k A_ik·B_kj is ONE equi-join of the two COO
         block tables on the contraction index k, a per-pair numpy kernel
         producing a partial COO product, and a (bi, bj)-grouped
-        accumulation.  Block-level sparsity is exploited by the join
-        itself — an all-zero block has no row, so the pair never
+        accumulation in ascending k.  Block-level sparsity is exploited by
+        the join itself — an all-zero block has no row, so the pair never
         materializes: work is O(nonzero block pairs), where the dense
         GEMM must replicate every block of both operands.
 
@@ -262,25 +267,15 @@ class SparseBlockMatrix:
             F.col("vals").alias("b_vals"),
         )
         joined = aa.join(bb, "k")
-
-        def _accum(rows: np.ndarray, cols: np.ndarray, vals: np.ndarray):
-            key = rows.astype(np.int64) * out_bc + cols.astype(np.int64)
-            uk, inv = np.unique(key, return_inverse=True)
-            sums = np.bincount(inv, weights=vals)
-            return (
-                (uk // out_bc).astype(np.int32),
-                (uk % out_bc).astype(np.int32),
-                sums.astype(np.float64),
-            )
+        ddl = "bi int, bj int, k int, rows binary, cols binary, vals binary"
 
         def pair_products(batches) -> Iterator:
             import pyarrow as pa
 
-            schema = _pa_sparse_schema(pa)
+            schema = _pa_schema(ddl)
             for rb in batches:
                 cols_in = {n: rb.column(n) for n in rb.schema.names}
-                out: dict[str, list] = {k: [] for k in (
-                    "bi", "bj", "nnz", "rows", "cols", "vals")}
+                out: dict[str, list] = {k: [] for k in schema.names}
                 for i in range(rb.num_rows):
                     ra = np.frombuffer(cols_in["a_rows"][i].as_buffer(), np.int32)
                     ca = np.frombuffer(cols_in["a_cols"][i].as_buffer(), np.int32)
@@ -300,42 +295,34 @@ class SparseBlockMatrix:
                     offs = np.cumsum(cnt) - cnt
                     b_idx = np.repeat(start - offs, cnt) + np.arange(tot)
                     r_out, c_out, v_out = _accum(
-                        ra[ai], cb_s[b_idx], va[ai] * vb_s[b_idx]
+                        ra[ai], cb_s[b_idx], va[ai] * vb_s[b_idx], out_bc
                     )
-                    out["bi"].append(int(cols_in["obi"][i].as_py()))
-                    out["bj"].append(int(cols_in["obj"][i].as_py()))
-                    out["nnz"].append(len(r_out))
+                    out["bi"].append(cols_in["obi"][i].as_py())
+                    out["bj"].append(cols_in["obj"][i].as_py())
+                    out["k"].append(cols_in["k"][i].as_py())
                     out["rows"].append(r_out.tobytes())
                     out["cols"].append(c_out.tobytes())
                     out["vals"].append(v_out.tobytes())
                 if out["bi"]:
                     yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-        partials = joined.mapInArrow(pair_products, SPARSE_SCHEMA)
+        partials = joined.mapInArrow(pair_products, ddl)
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = np.concatenate(
-                [np.frombuffer(b, np.int32) for b in pdf["rows"]]
-            )
-            cols = np.concatenate(
-                [np.frombuffer(b, np.int32) for b in pdf["cols"]]
-            )
-            vals = np.concatenate(
-                [np.frombuffer(b, np.float64) for b in pdf["vals"]]
-            )
-            r_out, c_out, v_out = _accum(rows, cols, vals)
-            return pd.DataFrame(
-                {
-                    "bi": [key[0]],
-                    "bj": [key[1]],
-                    "nnz": [len(r_out)],
-                    "rows": [r_out.tobytes()],
-                    "cols": [c_out.tobytes()],
-                    "vals": [v_out.tobytes()],
-                }
-            )
+        def merge(key, t):
+            import pyarrow as pa
 
-        cdf = partials.groupBy("bi", "bj").applyInPandas(merge, SPARSE_SCHEMA)
+            r_out, c_out, v_out = _spgemm_merge(t, out_bc)
+            out = {
+                "bi": [key[0].as_py()],
+                "bj": [key[1].as_py()],
+                "nnz": [len(r_out)],
+                "rows": [r_out.tobytes()],
+                "cols": [c_out.tobytes()],
+                "vals": [v_out.tobytes()],
+            }
+            return pa.Table.from_pydict(out, schema=_pa_schema(SPARSE_SCHEMA))
+
+        cdf = partials.groupBy("bi", "bj").applyInArrow(merge, SPARSE_SCHEMA)
         return SparseBlockMatrix(
             cdf, self.n_rows, other.n_cols, self.block_rows, other.block_cols
         )
