@@ -751,6 +751,8 @@ def test_cumsum_and_cholesky_past_broadcast_gate(spark, rng, monkeypatch):
 
 
 def _run_past_gate_checks(spark, rng, cholesky_blocked):
+    from wukong_spark.blockmatrix import lu_blocked, lu_solve
+
     a = rng.standard_normal((40, 12))
     m = BlockMatrix.from_numpy(spark, a, 16, 6)
     cs = m.cumsum_rows()
@@ -765,6 +767,38 @@ def _run_past_gate_checks(spark, rng, cholesky_blocked):
     ln = l.to_numpy()
     ms.df.unpersist()
     assert np.abs(ln @ ln.T - spd).max() < 1e-9
+
+    # unpivoted LU on a ragged, diagonally dominant, non-symmetric input
+    g = rng.standard_normal((90, 90)) + 90 * np.eye(90)
+    mg = BlockMatrix.from_numpy(spark, g, 28, 28)
+    l_bm, u_bm = lu_blocked(mg)
+    lg, ug = l_bm.to_numpy(), u_bm.to_numpy()
+    assert np.allclose(lg @ ug, g, atol=1e-8 * 90)
+    assert np.allclose(np.triu(lg, 1), 0) and np.allclose(np.tril(ug, -1), 0)
+    b = rng.standard_normal((90, 2))
+    assert np.allclose(g @ lu_solve(mg, b), b, atol=1e-8 * 90)
+
+
+def test_failed_factorization_releases_checkpoints(spark):
+    """A diagonal block that cannot be factored raises LinAlgError, and
+    the raise frees every checkpoint and broadcast the loop made: after
+    release_pending(), no persistent RDD the call created survives."""
+    from wukong_spark.blockmatrix import lu_blocked
+    from wukong_spark.session import release_pending
+
+    zero_pivot = np.zeros((40, 40))
+    zero_pivot[0, 1] = zero_pivot[1, 0] = 1.0
+    zero_pivot[np.arange(2, 40), np.arange(2, 40)] = 1.0
+    not_spd = np.eye(48)
+    not_spd[47, 47] = -1.0  # fails at the last diagonal block, past two panels
+    jsc = spark.sparkContext._jsc
+    for fn, a in ((lu_blocked, zero_pivot), (cholesky_blocked, not_spd)):
+        m = BlockMatrix.from_numpy(spark, a, 16, 16)
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        with pytest.raises(np.linalg.LinAlgError):
+            fn(m)
+        release_pending()
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
 
 
 def test_gen_block_has_one_call_site():

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wukong_spark.operators.graph import connected_components
@@ -361,6 +362,52 @@ def test_hits_raises_without_convergence(spark):
     df = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
     with _pytest.raises(RuntimeError, match="hits"):
         hits(df, tol=1e-30, max_iter=1)
+
+
+def _path_edges(spark):  # a 13-node path: diameter 12
+    return spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
+
+
+def _cascade_edges(spark):  # K4 plus a hanging path: a 4-round peel cascade
+    e = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    e += [(3, 10), (10, 11), (11, 12), (12, 13)]
+    return spark.createDataFrame(e + [(b, a) for a, b in e], "src long, dst long")
+
+
+# each call stops short of convergence on purpose
+_NONCONVERGING = {
+    "connected_components": lambda g, spark: g.connected_components(
+        _path_edges(spark), max_iter=2
+    ),
+    "connected_components_bucketed": lambda g, spark: g.connected_components_bucketed(
+        _path_edges(spark), max_iter=2, table="bkt_cc_noconv_leak"
+    ),
+    "kcore": lambda g, spark: g.kcore(_cascade_edges(spark), 2, max_iter=2),
+    "kcore_bucketed": lambda g, spark: g.kcore_bucketed(
+        _cascade_edges(spark), 2, max_iter=2
+    ),
+    "hits": lambda g, spark: g.hits(
+        spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long"),
+        tol=1e-30,
+        max_iter=1,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NONCONVERGING))
+def test_nonconvergence_raise_releases_checkpoints(spark, op):
+    """A loop that raises past max_iter frees its live iterate's
+    checkpoints: after the raise and release_pending(), no persistent RDD
+    the call created survives."""
+    from wukong_spark.operators import graph
+    from wukong_spark.session import release_pending
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(RuntimeError, match="did not"):
+        _NONCONVERGING[op](graph, spark)
+    release_pending()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
 
 
 def test_kcore_empty_core_schema_matches_nonempty(spark):

@@ -82,12 +82,7 @@ def thp_available() -> bool:
     the page-fault path COLLAPSES under concurrency (32 processes
     faulting together aggregate 0.17 GB/s paged / 0.32 GB/s THP — slower
     than one process alone).  Huge pages cut the number of fault events
-    512x, which is the only lever that helps inside a 32-task wave.
-
-    WUKONG_THP=0 opts out (both the malloc tunable and the JVM heap
-    flag) for hosts where THP latency spikes are unwelcome."""
-    if os.environ.get("WUKONG_THP", "1") == "0":
-        return False
+    512x, which is the only lever that helps inside a 32-task wave."""
     try:
         with open("/sys/kernel/mm/transparent_hugepage/enabled") as f:
             mode = f.read()
@@ -101,8 +96,7 @@ def _opted_out() -> bool:
     (r18, ADVICE r17: importing the package must not silently reconfigure
     an embedding application's allocator/BLAS/Arrow state when the host
     does not need it).  The env var is inherited by the driver JVM and
-    its Python worker daemons, so one setting covers the whole tree —
-    also the lever the r18 config A/B uses to reproduce the r16 setup."""
+    its Python worker daemons, so one setting covers the whole tree."""
     return os.environ.get("WUKONG_NO_ALLOC_TUNING", "") == "1"
 
 

@@ -36,6 +36,13 @@ Spark-first design (NOT a translation of Dask's task graphs):
   deterministic bitwise-stable sums.
 - Reductions that produce *small* results (Gramian, R factors, singular
   values) land on the driver — everything O(matrix) stays distributed.
+- Cholesky and unpivoted LU are ONE right-looking loop,
+  ``_factor_right_looking``: per block column, the driver factors the
+  diagonal block, mapInArrow solves the panels, and the trailing update
+  reads the panels from a broadcast under ``BROADCAST_CAP`` or through an
+  equi-join past it.  Cholesky is that loop on the lower triangle with no
+  row panel.  The loop owns its checkpoints and broadcasts and frees them
+  on every exit, a raise included.
 
 Scale notes: at 100 TB the same plans hold — the only driver-side
 materializations are c×c / (k+p)×m factors.  Shuffle volume for GEMM is
@@ -2422,213 +2429,202 @@ def _subtract_panel_projection(
     )
 
 
-def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
-    """DISTRIBUTED blocked right-looking Cholesky
-    (docs/examples/examples.rst:84-100).
+def _factor_right_looking(
+    a: BlockMatrix, factor: Callable, symmetric: bool
+) -> tuple[BlockMatrix, ...]:
+    """THE distributed blocked right-looking factorization loop of
+    `cholesky_blocked` and `lu_blocked` (docs/examples/examples.rst:84-100).
 
     Driver-coordinated loop over block columns; everything O(matrix) stays
     on the cluster — the driver only ever holds ONE bs×bs diagonal block
     (the round-1 variant collected all of A; VERDICT r1 fix #1):
 
-      step j: 1. collect the updated diagonal block A_jj, factor on the
-                 driver (bs×bs dense Cholesky — the sequential pivot of
-                 every blocked variant, dask's included)
-              2. panel solve L_ij = A_ij · L_jj⁻ᵀ — mapInArrow over the
-                 j-th block column, embarrassingly parallel
-              3. trailing update A_ik -= L_ij · L_kjᵀ — while the panel
-                 fits the 256 MB gate it ships once as an sc.broadcast
-                 dict and the update is a JOIN-FREE mapInArrow over the
-                 trailing triangle (r5: faster and far less noisy than two
-                 per-step broadcast-exchange builds); past the gate, an
-                 equi-join of the panel onto the trailing lower triangle
-                 on bi and bj — no driver funnel, the same shuffle shape
-                 as SUMMA matmul restricted to the trailing submatrix
+      step j: 1. collect the updated diagonal block A_jj and factor it on
+                 the driver with ``factor`` (the sequential pivot of every
+                 blocked variant, dask's included)
+              2. panel solves, one mapInArrow each, embarrassingly
+                 parallel: L_ij = A_ij · U_jj⁻¹ over the column panel
+                 (i > j) and U_jk = L_jj⁻¹ · A_jk over the row panel
+                 (k > j)
+              3. trailing update A_ik -= L_ij · U_jk — while the panels
+                 fit the BROADCAST_CAP gate they ship once as ONE
+                 sc.broadcast and the update is a JOIN-FREE mapInArrow
+                 (measured r5 at 6000²/500: 13.8-17.2 s vs 16.0-37.5 s
+                 for the F.broadcast equi-join, whose two per-step
+                 exchange builds were slower, far noisier and funneled
+                 the panel through the driver twice); past the gate, an
+                 equi-join of the panels onto the trailing blocks on bi
+                 and bj — no driver funnel, the SUMMA shuffle shape
+                 restricted to the trailing submatrix
 
-    Each step's trailing submatrix is eagerly localCheckpoint-ed: lineage
-    is truncated so step j+1 reads materialized blocks instead of
-    re-running steps 0..j (the exponential-lineage hazard of iterative
-    Spark plans — same discipline as operators/graph.py connected
-    components).  Panels are checkpointed too: both trailing-update join
-    sides (and the final L assembly) read materialized panel blocks
-    instead of re-running the solve inside each broadcast exchange.
-    (A fused panel+update single-stage variant was measured SLOWER at
-    2000²/500 — the extra broadcast/union machinery cost more than the
-    third per-step job it saved; steps are latency-bound, not work-bound,
-    at any blocking a driver-sequential loop should be run at.)
+    ``symmetric`` (Cholesky) runs on the lower triangle with no row panel:
+    U_jj is L_jjᵀ, and U_jk is read as L_kjᵀ, so the update computes
+    ``lij @ lkj.T``.
 
-    Returns L as a BlockMatrix of the lower-triangle blocks; absent upper
-    blocks ≡ zero (matmul/to_numpy treat missing blocks as zero).
+    Checkpoints truncate each step's lineage, so step j+1 reads
+    materialized blocks instead of re-running steps 0..j (the
+    exponential-lineage hazard of iterative Spark plans).  The step loop
+    is latency-bound, not work-bound (r17 opt round: each driver round
+    trip is a whole job), so every trailing and panel checkpoint is LAZY
+    and is materialized by the step's own unavoidable collect — the next
+    diagonal fetch materializes the trailing update, the broadcast collect
+    its panel.  Lazy is safe while a checkpoint's first action reads it
+    once; the symmetric join path's update reads its ONE panel twice
+    (li ⋈ lk), which would recompute the solve per reference, so that
+    panel stays eager.  (A fused panel+update single-stage variant was
+    measured SLOWER at 2000²/500.)
+
+    A superseded trailing checkpoint and its panel broadcast are freed as
+    soon as the successor materializes — releasing earlier loses blocks
+    the pending update still reads — so they queue in ``deferred`` and
+    drain after each diagonal collect.  Every exit frees the trailing
+    checkpoint and the broadcasts; a raise (a non-SPD or zero-pivot
+    diagonal block) frees the panels too.  On return the panels BACK the
+    factors and are registered for harness release (leak audit r15).
+
+    Returns one BlockMatrix per array ``factor`` returns: its diagonal
+    blocks plus its panels; absent off-triangle blocks ≡ zero.
     """
-    assert a.n_rows == a.n_cols and a.block_rows == a.block_cols
-    spark = a.df.sparkSession
-    n, bs = a.n_rows, a.block_rows
-    nb = a.grid_rows
-    g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
-    # only the lower triangle participates (A symmetric).  r17 opt round
-    # (guide §1.2: the step loop is latency-bound, not work-bound — each
-    # driver round trip is a whole job): every trailing/panel checkpoint
-    # is LAZY (eager=False) and is materialized by the step's own
-    # unavoidable collect — the next diagonal-block fetch materializes the
-    # trailing update, the panel's broadcast collect materializes the
-    # panel — folding 4 jobs/step into 2.  Lazy is safe here because each
-    # checkpoint's FIRST action references it exactly once (the
-    # double-reference recompute trap hits only plans that read one lazy
-    # checkpoint twice inside a single job, e.g. the join path's li⋈lk —
-    # which therefore keeps its eager panel).
-    remaining = a.df.filter(F.col("bi") >= F.col("bj")).localCheckpoint(eager=False)
-    panels: list[DataFrame] = []
-    diag_blocks: list[tuple[int, int, bytes]] = []
-
-    # free each superseded trailing checkpoint immediately: across a
-    # 16-grid factorization they otherwise pile up ~O(n²) bytes in
-    # executor storage until driver GC gets around to them.  With lazy
-    # checkpoints the release must WAIT until the successor materializes
-    # (the pending update job still reads the predecessor's blocks;
-    # unpersisting a truncated-lineage checkpoint before then loses the
-    # data) — releases queue in `deferred` and drain right after each
-    # diagonal collect lands.
+    from wukong_spark.session import register_result_checkpoint
     from wukong_spark.session import release_checkpoint as _release
 
+    assert a.n_rows == a.n_cols and a.block_rows == a.block_cols
+    spark = a.df.sparkSession
+    sc = spark.sparkContext
+    n, bs, nb = a.n_rows, a.block_rows, a.grid_rows
+    g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
+    src = a.df.filter(F.col("bi") >= F.col("bj")) if symmetric else a.df
+    remaining = src.localCheckpoint(eager=False)
+    diags: list[tuple] = []  # per step, the diagonal blocks of each factor
+    panels: tuple[list, list] = ([], [])  # column panels, row panels
     deferred: list = []  # [(superseded checkpoint DF, panel broadcast|None)]
 
-    def _drain_deferred() -> None:
+    def drain() -> None:
         for df_, bc_ in deferred:
             if bc_ is not None:
                 bc_.unpersist()
             _release(df_)
         deferred.clear()
 
-    for j in range(nb):
-        # materializes the pending lazy trailing checkpoint (and, step 0,
-        # the initial triangle filter) as part of this collect's job
-        row = remaining.filter((F.col("bi") == j) & (F.col("bj") == j)).collect()[0]
-        _drain_deferred()
-        r = min(bs, n - j * bs)
-        ljj = np.linalg.cholesky(np.frombuffer(row.data).reshape(r, r))
-        diag_blocks.append((j, j, np.ascontiguousarray(ljj).tobytes()))
-        if j == nb - 1:
-            break
-        ljj_inv_t = np.ascontiguousarray(np.linalg.inv(ljj).T)
+    try:
+        for j in range(nb):
+            # materializes the pending lazy trailing checkpoint (and, step
+            # 0, the initial checkpoint) as part of this collect's job
+            row = remaining.filter((F.col("bi") == j) & (F.col("bj") == j)).collect()[0]
+            drain()
+            r = min(bs, n - j * bs)
+            diags.append(factor(np.frombuffer(row.data).reshape(r, r)))
+            if j == nb - 1:
+                break
+            inv = [np.linalg.inv(f) for f in diags[-1]]
+            col_w = np.ascontiguousarray(inv[-1].T if symmetric else inv[-1])
+            row_w = np.ascontiguousarray(inv[0])
 
-        def solve(batches, _w=ljj_inv_t, _j=j) -> Iterator:
-            import pyarrow as pa
+            def solve(bi, bj, blk, _j=j, _cw=col_w, _rw=row_w):
+                return bi, bj, np.dot(blk, _cw) if bj == _j else np.dot(_rw, blk)
 
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for bi, _, aij in g.blocks(rb):
-                    out["bi"].append(bi)
-                    out["bj"].append(_j)
-                    out["data"].append(np.dot(aij, _w).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
+            n_panels = 1 if symmetric else 2
+            broadcast = n_panels * (nb - j - 1) * bs * bs * 8 <= BROADCAST_CAP
+            col_src = remaining.filter((F.col("bj") == j) & (F.col("bi") > j))
+            lp = _blockwise(col_src, g, solve).localCheckpoint(
+                eager=symmetric and not broadcast
+            )
+            panels[0].append(lp)
+            up = lp
+            if not symmetric:
+                row_src = remaining.filter((F.col("bi") == j) & (F.col("bj") > j))
+                up = _blockwise(row_src, g, solve).localCheckpoint(eager=False)
+                panels[1].append(up)
 
-        panel_raw = remaining.filter(
-            (F.col("bj") == j) & (F.col("bi") > j)
-        ).mapInArrow(solve, BLOCK_SCHEMA)
+            trailing = remaining.filter((F.col("bi") > j) & (F.col("bj") > j))
+            bc = None
+            if broadcast:
+                lmap = {r_.bi: bytes(r_.data) for r_ in lp.collect()}
+                if symmetric:  # U_jk is L_kjᵀ: the column panel keyed by k
+                    umap = lmap
+                else:
+                    umap = {r_.bj: bytes(r_.data) for r_ in up.collect()}
+                bc = sc.broadcast((lmap, umap))
+            else:
+                li = lp.select(F.col("bi").alias("pi"), F.col("data").alias("dl"))
+                uk = up.select(
+                    F.col("bi" if symmetric else "bj").alias("pk"),
+                    F.col("data").alias("du"),
+                )
+                trailing = (
+                    trailing.join(li, F.col("bi") == F.col("pi"))
+                    .join(uk, F.col("bj") == F.col("pk"))
+                    .select("bi", "bj", "data", "dl", "du")
+                )
 
-        # the panel column is O(grid · bs²) bytes vs the trailing triangle's
-        # O(grid² · bs²).  While it fits the gate, ship it as ONE
-        # sc.broadcast variable and run a JOIN-FREE trailing update
-        # (measured r5 at 6000²/500: 13.8-17.2 s vs 16.0-37.5 s for the
-        # F.broadcast equi-join — the two per-step broadcast-exchange
-        # builds were both slower and far noisier, and they funneled the
-        # panel through the driver twice instead of once).  Past the gate,
-        # fall back to the shuffle equi-join: no driver funnel at all, the
-        # 100 TB-discipline path.
-        panel_bytes = (nb - j - 1) * bs * bs * 8
-        if panel_bytes <= BROADCAST_CAP:
-            # lazy checkpoint: the broadcast collect right below is its
-            # first (single-reference) action — solve, persist and collect
-            # run as ONE job
-            panel = panel_raw.localCheckpoint(eager=False)
-            panels.append(panel)
-            pdict = {r_.bi: bytes(r_.data) for r_ in panel.collect()}
-            bc = spark.sparkContext.broadcast(pdict)
-
-            def update_bc(batches, _bc=bc) -> Iterator:
+            def update(batches, _bc=bc) -> Iterator:
                 import pyarrow as pa
 
                 schema = _pa_block_schema(pa)
-                pmap = _bc.value
+                maps = None if _bc is None else _bc.value
                 for rb in batches:
+                    if maps is None:  # join path: the row carries its panel blocks
+                        dl_c, du_c = rb.column("dl"), rb.column("du")
                     out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                    for bi, bj, aik in g.blocks(rb):
+                    for i, (bi, bj, aik) in enumerate(g.blocks(rb)):
                         ri, rk = aik.shape
-                        lij = np.frombuffer(pmap[bi], dtype=np.float64).reshape(ri, -1)
-                        lkj = np.frombuffer(pmap[bj], dtype=np.float64).reshape(rk, -1)
+                        if maps is None:
+                            lb, ub = dl_c[i].as_buffer(), du_c[i].as_buffer()
+                        else:
+                            lb, ub = maps[0][bi], maps[1][bj]
+                        lij = np.frombuffer(lb, dtype=np.float64).reshape(ri, -1)
+                        ujk = np.frombuffer(ub, dtype=np.float64)
+                        ujk = ujk.reshape(rk, -1).T if symmetric else ujk.reshape(-1, rk)
                         out["bi"].append(bi)
                         out["bj"].append(bj)
-                        out["data"].append((aik - lij @ lkj.T).tobytes())
+                        out["data"].append((aik - lij @ ujk).tobytes())
                     yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-            prev = remaining
-            remaining = (
-                remaining.filter(F.col("bj") > j)
-                .mapInArrow(update_bc, BLOCK_SCHEMA)
-                .localCheckpoint(eager=False)
+            # the update job has not run yet — it still reads the current
+            # checkpoint and the broadcast; both free after the NEXT collect
+            deferred.append((remaining, bc))
+            remaining = trailing.mapInArrow(update, BLOCK_SCHEMA).localCheckpoint(
+                eager=False
             )
-            # the update job has not run yet — it still reads prev and the
-            # panel broadcast; both release after the NEXT collect lands
-            deferred.append((prev, bc))
-            continue
+    except BaseException:
+        for p in panels[0] + panels[1]:
+            _release(p)
+        raise
+    finally:
+        drain()
+        _release(remaining)
 
-        # eager: the update job reads this checkpoint TWICE (li ⋈ lk) — a
-        # lazy panel would recompute the solve once per reference
-        panel = panel_raw.localCheckpoint()
-        panels.append(panel)
-        li = panel.select(F.col("bi").alias("pi"), F.col("data").alias("dli"))
-        lk = panel.select(F.col("bi").alias("pk"), F.col("data").alias("dlk"))
+    def assemble(blocks: list, parts: list) -> BlockMatrix:
+        # block-count-capped slices for the tiny diagonal frame (r18): the
+        # createDataFrame default would add defaultParallelism near-empty
+        # partitions to every consumer of the factor (see from_numpy)
+        rdd = sc.parallelize(blocks, max(1, len(blocks)))
+        out = spark.createDataFrame(rdd, BLOCK_SCHEMA)
+        for p in parts:
+            out = out.unionByName(register_result_checkpoint(p))
+        return BlockMatrix(out, n, n, bs, bs)
 
-        def update(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                dli_c, dlk_c = rb.column("dli"), rb.column("dlk")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i, (bi, bj, aik) in enumerate(g.blocks(rb)):
-                    ri, rk = aik.shape
-                    lij = np.frombuffer(dli_c[i].as_buffer(), dtype=np.float64).reshape(
-                        ri, -1
-                    )
-                    lkj = np.frombuffer(dlk_c[i].as_buffer(), dtype=np.float64).reshape(
-                        rk, -1
-                    )
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append((aik - lij @ lkj.T).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        prev = remaining
-        remaining = (
-            remaining.filter(F.col("bj") > j)
-            .join(li, F.col("bi") == F.col("pi"))
-            .join(lk, F.col("bj") == F.col("pk"))
-            .select("bi", "bj", "data", "dli", "dlk")
-            .mapInArrow(update, BLOCK_SCHEMA)
-            .localCheckpoint(eager=False)
-        )
-        deferred.append((prev, None))
-
-    # the loop exits via the j == nb-1 break, right after a collect, so
-    # every lazy checkpoint is materialized and every deferral drainable.
-    # The last trailing checkpoint is not part of L — free it now; the
-    # panel checkpoints BACK the returned factor, so register them for
-    # harness release after the caller consumes L (leak audit r15)
-    _drain_deferred()
-    _release(remaining)
-    from wukong_spark.session import register_result_checkpoint
-
-    # block-count-capped slices for the tiny diagonal frame (r18): the
-    # createDataFrame default would add defaultParallelism near-empty
-    # partitions to every consumer of L (see from_numpy)
-    out = spark.createDataFrame(
-        spark.sparkContext.parallelize(diag_blocks, max(1, len(diag_blocks))),
-        BLOCK_SCHEMA,
+    return tuple(
+        assemble([(j, j, d[k].tobytes()) for j, d in enumerate(diags)], panels[k])
+        for k in range(len(diags[0]))
     )
-    for p in panels:
-        out = out.unionByName(register_result_checkpoint(p))
-    return BlockMatrix(out, n, n, bs, bs)
+
+
+def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:
+    """DISTRIBUTED blocked right-looking Cholesky
+    (docs/examples/examples.rst:84-100): `_factor_right_looking` on the
+    lower triangle (A symmetric), with a bs×bs dense Cholesky of each
+    diagonal block on the driver.
+
+    Returns L as a BlockMatrix of the lower-triangle blocks; absent upper
+    blocks ≡ zero (matmul/to_numpy treat missing blocks as zero).  Raises
+    LinAlgError at the first diagonal block that is not positive
+    definite.
+    """
+    (l_bm,) = _factor_right_looking(
+        a, lambda ajj: (np.linalg.cholesky(ajj),), symmetric=True
+    )
+    return l_bm
 
 
 def _lu_dense_nopivot(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -2660,19 +2656,9 @@ def _lu_dense_nopivot(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
     """DISTRIBUTED blocked right-looking LU (unpivoted) — ``da.linalg.lu``
-    parity (r17, VERDICT r16 missing #4), structured exactly like
-    `cholesky_blocked` (the reference's demonstrated factorization shape,
-    docs/examples/examples.rst:84-100) but keeping BOTH panels:
-
-      step j: 1. collect the updated diagonal block A_jj, dense unpivoted
-                 LU on the driver (bs×bs — the sequential pivot)
-              2. panel solves, embarrassingly parallel mapInArrow:
-                 L_ij = A_ij · U_jj⁻¹ (column panel, i > j) and
-                 U_jk = L_jj⁻¹ · A_jk (row panel, k > j)
-              3. trailing update A_ik -= L_ij · U_jk over the trailing
-                 square — both panels ship as ONE sc.broadcast while they
-                 fit the 256 MB gate, else the equi-join path (the SUMMA
-                 shuffle shape restricted to the trailing square)
+    parity (r17, VERDICT r16 missing #4): `_factor_right_looking` over the
+    whole square with BOTH panels, and `_lu_dense_nopivot` of each
+    diagonal block on the driver.
 
     Unpivoted: requires nonsingular leading principal minors (diagonally
     dominant or SPD-shifted inputs) — the documented contract of every
@@ -2680,167 +2666,8 @@ def lu_blocked(a: BlockMatrix) -> tuple[BlockMatrix, BlockMatrix]:
     the offending diagonal block rather than returning garbage.
 
     Returns (L, U): L unit-lower (unit diagonal stored explicitly), U
-    upper; absent off-triangle blocks ≡ zero.  Driver holds one bs×bs
-    block per step; trailing checkpoints are freed per step (the
-    exponential-lineage discipline of every iterative plan here)."""
-    assert a.n_rows == a.n_cols and a.block_rows == a.block_cols
-    spark = a.df.sparkSession
-    n, bs = a.n_rows, a.block_rows
-    nb = a.grid_rows
-    g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
-    # lazy checkpoints throughout, exactly as cholesky_blocked (r17 opt
-    # round): each is materialized by the step's own unavoidable action
-    # (diag collect / panel broadcast collect), folding the per-step job
-    # count roughly in half; superseded checkpoints and panel broadcasts
-    # release only after the successor materializes (`deferred`).
-    remaining = a.df.localCheckpoint(eager=False)
-    l_parts: list[DataFrame] = []
-    u_parts: list[DataFrame] = []
-    l_diag: list[tuple[int, int, bytes]] = []
-    u_diag: list[tuple[int, int, bytes]] = []
-
-    from wukong_spark.session import release_checkpoint as _release
-
-    deferred: list = []
-
-    def _drain_deferred() -> None:
-        for df_, bc_ in deferred:
-            if bc_ is not None:
-                bc_.unpersist()
-            _release(df_)
-        deferred.clear()
-
-    for j in range(nb):
-        row = remaining.filter((F.col("bi") == j) & (F.col("bj") == j)).collect()[0]
-        _drain_deferred()
-        r = min(bs, n - j * bs)
-        ljj, ujj = _lu_dense_nopivot(np.frombuffer(row.data).reshape(r, r))
-        l_diag.append((j, j, np.ascontiguousarray(ljj).tobytes()))
-        u_diag.append((j, j, np.ascontiguousarray(ujj).tobytes()))
-        if j == nb - 1:
-            break
-        ujj_inv = np.ascontiguousarray(np.linalg.inv(ujj))
-        ljj_inv = np.ascontiguousarray(np.linalg.inv(ljj))
-
-        def panels(batches, _ui=ujj_inv, _li=ljj_inv, _j=j) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for bi, bj, blk in g.blocks(rb):
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    if bj == _j:  # column panel: L_ij = A_ij U_jj^-1
-                        out["data"].append(np.dot(blk, _ui).tobytes())
-                    else:  # row panel: U_jk = L_jj^-1 A_jk
-                        out["data"].append(np.dot(_li, blk).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        # lazy is safe for BOTH paths here: the broadcast collects below
-        # materialize them, and the join path references each panel exactly
-        # once in the update job (unlike cholesky's li ⋈ lk, which reads
-        # ONE panel twice and must stay eager)
-        l_panel = (
-            remaining.filter((F.col("bj") == j) & (F.col("bi") > j))
-            .mapInArrow(panels, BLOCK_SCHEMA)
-            .localCheckpoint(eager=False)
-        )
-        u_panel = (
-            remaining.filter((F.col("bi") == j) & (F.col("bj") > j))
-            .mapInArrow(panels, BLOCK_SCHEMA)
-            .localCheckpoint(eager=False)
-        )
-        l_parts.append(l_panel)
-        u_parts.append(u_panel)
-
-        panel_bytes = 2 * (nb - j - 1) * bs * bs * 8
-        if panel_bytes <= BROADCAST_CAP:
-            pmap = {("L", r_.bi): bytes(r_.data) for r_ in l_panel.collect()}
-            pmap.update(
-                {("U", r_.bj): bytes(r_.data) for r_ in u_panel.collect()}
-            )
-            bc = spark.sparkContext.broadcast(pmap)
-
-            def update_bc(batches, _bc=bc) -> Iterator:
-                import pyarrow as pa
-
-                schema = _pa_block_schema(pa)
-                pm = _bc.value
-                for rb in batches:
-                    out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                    for bi, bj, aik in g.blocks(rb):
-                        ri, rk = aik.shape
-                        lij = np.frombuffer(
-                            pm[("L", bi)], dtype=np.float64
-                        ).reshape(ri, -1)
-                        ujk = np.frombuffer(
-                            pm[("U", bj)], dtype=np.float64
-                        ).reshape(-1, rk)
-                        out["bi"].append(bi)
-                        out["bj"].append(bj)
-                        out["data"].append((aik - lij @ ujk).tobytes())
-                    yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-            prev = remaining
-            remaining = (
-                remaining.filter((F.col("bi") > j) & (F.col("bj") > j))
-                .mapInArrow(update_bc, BLOCK_SCHEMA)
-                .localCheckpoint(eager=False)
-            )
-            deferred.append((prev, bc))
-            continue
-
-        li = l_panel.select(F.col("bi").alias("pi"), F.col("data").alias("dl"))
-        uk = u_panel.select(F.col("bj").alias("pk"), F.col("data").alias("du"))
-
-        def update(batches) -> Iterator:
-            import pyarrow as pa
-
-            schema = _pa_block_schema(pa)
-            for rb in batches:
-                dl_c, du_c = rb.column("dl"), rb.column("du")
-                out: dict[str, list] = {"bi": [], "bj": [], "data": []}
-                for i, (bi, bj, aik) in enumerate(g.blocks(rb)):
-                    ri, rk = aik.shape
-                    lij = np.frombuffer(dl_c[i].as_buffer(), dtype=np.float64).reshape(
-                        ri, -1
-                    )
-                    ujk = np.frombuffer(du_c[i].as_buffer(), dtype=np.float64).reshape(
-                        -1, rk
-                    )
-                    out["bi"].append(bi)
-                    out["bj"].append(bj)
-                    out["data"].append((aik - lij @ ujk).tobytes())
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-        prev = remaining
-        remaining = (
-            remaining.filter((F.col("bi") > j) & (F.col("bj") > j))
-            .join(li, F.col("bi") == F.col("pi"))
-            .join(uk, F.col("bj") == F.col("pk"))
-            .select("bi", "bj", "data", "dl", "du")
-            .mapInArrow(update, BLOCK_SCHEMA)
-            .localCheckpoint(eager=False)
-        )
-        deferred.append((prev, None))
-
-    _drain_deferred()
-    _release(remaining)
-    from wukong_spark.session import register_result_checkpoint
-
-    # block-count-capped slices (r18) — see cholesky_blocked's assembly
-    l_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(l_diag, max(1, len(l_diag))), BLOCK_SCHEMA
-    )
-    for p in l_parts:
-        l_df = l_df.unionByName(register_result_checkpoint(p))
-    u_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(u_diag, max(1, len(u_diag))), BLOCK_SCHEMA
-    )
-    for p in u_parts:
-        u_df = u_df.unionByName(register_result_checkpoint(p))
-    return BlockMatrix(l_df, n, n, bs, bs), BlockMatrix(u_df, n, n, bs, bs)
+    upper; absent off-triangle blocks ≡ zero."""
+    return _factor_right_looking(a, _lu_dense_nopivot, symmetric=False)
 
 
 def lu_solve(a: BlockMatrix, b: np.ndarray) -> np.ndarray:

@@ -66,6 +66,7 @@ def _cc_loop(adj, labels, max_iter: int, name: str) -> DataFrame:
             break
 
     if not converged:
+        _release(labels)
         raise RuntimeError(
             f"{name} did not converge within {max_iter} rounds "
             "(graph diameter exceeds max_iter); raise max_iter"
@@ -498,6 +499,7 @@ def kcore(
             .agg(F.count(F.lit(1)).cast("long").alias("deg_in_core"))
             .filter(F.lit(False))
         )
+    _release(cur)
     raise RuntimeError(
         f"kcore did not stabilize within {max_iter} rounds; raise max_iter"
     )
@@ -629,6 +631,8 @@ def hits(
                 )
 
         e.unpersist()
+        _release(h_ckpt)
+        _release(a_ckpt)
         raise RuntimeError(
             f"hits did not converge to tol={tol} within {max_iter} iterations"
         )
@@ -739,6 +743,7 @@ def kcore_bucketed(
                     .agg(F.count(F.lit(1)).cast("long").alias("deg_in_core"))
                     .filter(F.lit(False))
                 )
+            _release(cur)
             raise RuntimeError(
                 f"kcore_bucketed did not stabilize within {max_iter} rounds; "
                 "raise max_iter"

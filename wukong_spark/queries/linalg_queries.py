@@ -145,6 +145,31 @@ def _fro_emit():
     return ([("fro_i", "int64")], fro_of_block)
 
 
+def _max_residual(a: BlockMatrix, b: BlockMatrix, target: np.ndarray) -> float:
+    """‖A·B − target‖∞ for a driver-built ``target``, fused into the
+    GEMM tile stage through matmul's ``emit`` hook (r17 opt round, guide
+    §4.1/§2.3): ``target`` ships once as an sc.broadcast, each tile
+    subtracts its own slice of it and emits one double, so the product
+    never crosses Python→JVM and no subtract stage or max_abs pass runs.
+    The slices are the floats from_numpy blockified, and a max over tiles
+    of max|·| is associative — the value a blockwise subtract + max_abs
+    would give."""
+    bc_t = a.df.sparkSession.sparkContext.broadcast(target)
+    br, bc = a.block_rows, b.block_cols
+
+    def resid(bi: int, bj: int, blk: np.ndarray):
+        t = bc_t.value[
+            bi * br : bi * br + blk.shape[0], bj * bc : bj * bc + blk.shape[1]
+        ]
+        return (float(np.abs(blk - t).max()),)
+
+    try:
+        df = a.matmul(b, emit=([("resid", "float64")], resid))
+        return float(df.agg(F.max("resid")).collect()[0][0])
+    finally:
+        bc_t.unpersist()
+
+
 @query(
     "la_gemm_block_norms",
     state_sized=True,
@@ -370,7 +395,6 @@ def la_qr_square(spark: SparkSession, sf_dir: str):
     distributed: orthonormality via QᵀQ (transpose_matvec of Q against
     itself), reconstruction via blockwise QR−A + max_abs."""
     a = BlockMatrix.random(spark, 128, 128, 16, 16, seed=7)
-    a.df.persist()
     q, r = a.qr()
     # both checks run off the single-block-column re-block of Q: gramian
     # gives QᵀQ as one small driver matrix (n_cols² — never O(matrix)),
@@ -387,7 +411,6 @@ def la_qr_square(spark: SparkSession, sf_dir: str):
     )
     qs.df.unpersist()
     q.release()  # frees qr()'s internal persisted stage (leak audit r15)
-    a.df.unpersist()
     # full-rank contract: the seeded input's min |diag(R)| is 0.1258 — the
     # 1e-3 gate is 100× below it, robust to BLAS summation-order drift
     return local_frame(spark,
@@ -808,28 +831,7 @@ def la_solve_check(spark: SparkSession, sf_dir: str):
     b = np.random.default_rng(101).standard_normal((500, 3))
     x = solve_spd(m, b)
     xbm = BlockMatrix.from_numpy(spark, x, 125, 3)
-    # r17 opt round: the residual A·X − B is fused into the matmul tile
-    # stage (emit hook, same move as la_cholesky_check) — B is driver-
-    # built, so each tile subtracts the broadcast slice and emits one
-    # double; the product never crosses Python→JVM and the blockwise
-    # subtract stage + max_abs pass disappear.  Identical floats: the
-    # slices are the same array from_numpy blockified.
-    bc_b = spark.sparkContext.broadcast(b)
-    bsr = 125
-
-    def b_resid_emit():
-        def f(bi: int, bj: int, blk: np.ndarray):
-            bb = bc_b.value[
-                bi * bsr : bi * bsr + blk.shape[0],
-                bj * 3 : bj * 3 + blk.shape[1],
-            ]
-            return (float(np.abs(blk - bb).max()),)
-
-        return ([("resid", "float64")], f)
-
-    resid_df = m.matmul(xbm, emit=b_resid_emit())
-    resid = float(resid_df.agg(F.max("resid")).collect()[0][0])
-    bc_b.unpersist()
+    resid = _max_residual(m, xbm, b)
     residual_small = resid / float(np.abs(b).max()) < 1e-8
     matches_dense = float(np.abs(x - np.linalg.solve(spd, b)).max()) < 1e-6
     blocks = m.grid_rows
@@ -956,33 +958,10 @@ def la_cholesky_check(spark: SparkSession, sf_dir: str):
     m = BlockMatrix.from_numpy(spark, spd, bs, bs)
     l_bm = cholesky_blocked(m)
     l_bm.df.persist()
-    # r17 opt round (guide §4.1/§2.3): the residual check is fused into
-    # the reconstruction GEMM's tile stage via matmul(emit=...) — the
-    # full product L·Lᵀ (O(n²)) used to cross Python→JVM, join M's
-    # blocks in a second Python stage, and feed a max_abs aggregation;
-    # now each tile task subtracts the SAME driver-built `spd` slice
-    # (shipped once as an sc.broadcast; from_numpy's blocks are slices
-    # of this exact array, so the floats subtracted are bitwise the ones
-    # subtract() saw) and emits one double per block.  max over blocks
-    # of max|·| is associative — max_err is value-identical.  m.df also
-    # no longer needs a persist: with subtract() gone the factorization's
-    # initial checkpoint is its single reader.
-    bc_m = spark.sparkContext.broadcast(spd)
-
-    def resid_emit():
-        def f(bi: int, bj: int, blk: np.ndarray):
-            mm = bc_m.value[
-                bi * bs : bi * bs + blk.shape[0],
-                bj * bs : bj * bs + blk.shape[1],
-            ]
-            return (float(np.abs(blk - mm).max()),)
-
-        return ([("resid", "float64")], f)
-
-    resid = l_bm.matmul(l_bm.transpose(), emit=resid_emit())
-    max_err = resid.agg(F.max("resid")).collect()[0][0]
+    # m.df needs no persist: the factorization's initial checkpoint is
+    # its single reader, since the residual subtracts the driver's `spd`
+    max_err = _max_residual(l_bm, l_bm.transpose(), spd)
     l_bm.df.unpersist()
-    bc_m.unpersist()
     return local_frame(spark,
         [(bool(max_err < 1e-8), m.grid_rows)],
         "reconstructs boolean, blocks int",
@@ -1075,26 +1054,7 @@ def la_lu_inv_check(spark: SparkSession, sf_dir: str):
     l_bm, u_bm = lu_blocked(a)
     l_bm.df.persist()  # read by recon, solve, and inv sweeps
     u_bm.df.persist()
-    # r17 opt round: ‖L·U − A‖∞ fused into the matmul tile stage (emit
-    # hook, same move as la_cholesky_check): A is the driver-built a_np,
-    # broadcast once; each tile emits one double instead of shipping the
-    # product block to a subtract stage.  max over blocks is associative
-    # — identical value.
-    bc_a = spark.sparkContext.broadcast(a_np)
-
-    def a_resid_emit():
-        def f(bi: int, bj: int, blk: np.ndarray):
-            aa = bc_a.value[
-                bi * bs : bi * bs + blk.shape[0],
-                bj * bs : bj * bs + blk.shape[1],
-            ]
-            return (float(np.abs(blk - aa).max()),)
-
-        return ([("resid", "float64")], f)
-
-    recon_df = l_bm.matmul(u_bm, emit=a_resid_emit())
-    recon = float(recon_df.agg(F.max("resid")).collect()[0][0]) < 1e-8 * n
-    bc_a.unpersist()
+    recon = _max_residual(l_bm, u_bm, a_np) < 1e-8 * n
     l_np, u_np = l_bm.to_numpy(), u_bm.to_numpy()
     triangular = (
         float(np.abs(np.triu(l_np, 1)).max()) == 0.0

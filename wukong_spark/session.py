@@ -64,14 +64,6 @@ def _default_driver_mem() -> str:
     return f"{gib}g"
 
 
-def _jvm_tuning_on() -> bool:
-    """WUKONG_JVM_TUNING=0 reverts the r17 JVM-side knobs (pinned
-    pre-touched heap, 32m G1 regions, 512m storage mmap threshold) to the
-    r16 shape — the other half of the r18 config A/B lever, and an escape
-    hatch for hosts where eager heap commit is unwelcome."""
-    return os.environ.get("WUKONG_JVM_TUNING", "1") != "0"
-
-
 def _daemon_importable() -> bool:
     """Whether a local Python worker can import ``wukong_spark._pydaemon``.
 
@@ -153,48 +145,39 @@ def get_spark(
                 "spark.executorEnv.GLIBC_TUNABLES",
                 os.environ["GLIBC_TUNABLES"],
             )
-    if _jvm_tuning_on():
-        # measured at the block-matrix benches: 64g is WORSE than 24g (G1
-        # humongous-object churn on 8 MB binary cells); 24g + explicit
-        # per-output-block partitioning avoids sort spill instead.
-        # r17 opt round: a SMALLER pinned heap beats both — with a
-        # growable heap G1 kept first-touching fresh regions (2-3 GB of
-        # page faults per bench pass, catastrophic on this host's slow
-        # fault path).  -Xms-pinned + AlwaysPreTouch pays all heap
-        # faults once at startup; G1HeapRegionSize=32m makes the 8 MB
-        # block cells ordinary (non-humongous) objects.  Heap size is
-        # adaptive to the host (capped 12g) — r18, VERDICT r17 #1.
-        mem = os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem())
-        # r18: back the heap with transparent huge pages where the kernel
-        # offers madvise-mode THP — on this host first-touch runs x14
-        # faster under MADV_HUGEPAGE (see _alloc.thp_available), which
-        # turns the AlwaysPreTouch startup cost from ~30 s into a few
-        # seconds and makes GC-time region faults cheap.
-        from wukong_spark._alloc import thp_available
+    # measured at the block-matrix benches: 64g is WORSE than 24g (G1
+    # humongous-object churn on 8 MB binary cells); 24g + explicit
+    # per-output-block partitioning avoids sort spill instead.
+    # r17 opt round: a SMALLER pinned heap beats both — with a
+    # growable heap G1 kept first-touching fresh regions (2-3 GB of
+    # page faults per bench pass, catastrophic on this host's slow
+    # fault path).  -Xms-pinned + AlwaysPreTouch pays all heap
+    # faults once at startup; G1HeapRegionSize=32m makes the 8 MB
+    # block cells ordinary (non-humongous) objects.  Heap size is
+    # adaptive to the host (capped 12g) — r18, VERDICT r17 #1.
+    mem = os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem())
+    # r18: back the heap with transparent huge pages where the kernel
+    # offers madvise-mode THP — on this host first-touch runs x14
+    # faster under MADV_HUGEPAGE (see _alloc.thp_available), which
+    # turns the AlwaysPreTouch startup cost from ~30 s into a few
+    # seconds and makes GC-time region faults cheap.
+    from wukong_spark._alloc import thp_available
 
-        thp = " -XX:+UseTransparentHugePages" if thp_available() else ""
-        builder = (
-            builder.config("spark.driver.memory", mem)
-            .config(
-                "spark.driver.extraJavaOptions",
-                "-Djava.net.preferIPv4Stack=true "
-                f"-Xms{mem} -XX:+AlwaysPreTouch -XX:G1HeapRegionSize=32m"
-                f"{thp}",
-            )
-            # local shuffle blocks here are ~8 MB (block-matrix partials):
-            # the 2 MB default memory-maps every read and the per-pass
-            # mmap/munmap churn re-faults; stream them through pooled
-            # buffers instead
-            .config("spark.storage.memoryMapThreshold", "512m")
+    thp = " -XX:+UseTransparentHugePages" if thp_available() else ""
+    builder = (
+        builder.config("spark.driver.memory", mem)
+        .config(
+            "spark.driver.extraJavaOptions",
+            "-Djava.net.preferIPv4Stack=true "
+            f"-Xms{mem} -XX:+AlwaysPreTouch -XX:G1HeapRegionSize=32m"
+            f"{thp}",
         )
-    else:
-        # WUKONG_JVM_TUNING=0: the r16 JVM shape (growable 24g heap, stock
-        # G1 regions / storage mmap threshold) — A/B lever + escape hatch
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g")
-        ).config(
-            "spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true"
-        )
+        # local shuffle blocks here are ~8 MB (block-matrix partials):
+        # the 2 MB default memory-maps every read and the per-pass
+        # mmap/munmap churn re-faults; stream them through pooled
+        # buffers instead
+        .config("spark.storage.memoryMapThreshold", "512m")
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
