@@ -371,14 +371,23 @@ def test_qr_tall_multi_panel_edge(spark, rng):
 
 def test_qr_cgs_panel_path(spark, rng):
     """The CGS2 panel loop (taken for n_cols > QR_SINGLE_PANEL_MAX) —
-    forced here on a small ragged input so both strategies stay covered."""
+    forced here on a small ragged input so both strategies stay covered.
+    Its W and panel checkpoints are freed or registered: after
+    q.release() and release_pending(), no persistent RDD it made survives."""
+    from wukong_spark.session import release_pending
+
     a = rng.random((200, 40))
     m = BlockMatrix.from_numpy(spark, a, 32, 16)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
     q, r = m.qr(force_panels=True)
     qn = q.to_numpy()
     assert np.allclose(qn.T @ qn, np.eye(40), atol=1e-9)
     assert np.allclose(qn @ r, a, atol=1e-9)
     assert np.allclose(r, np.triu(r), atol=1e-9)
+    q.release()
+    release_pending()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
 
 
 def test_broadcasting_demean_rows(spark, rng):

@@ -664,6 +664,92 @@ def test_release_checkpoint_frees_persistent_rdd(spark):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_checkpoint_scope_frees_on_return_and_raise(spark):
+    """A `Checkpoints` scope frees the checkpoints and persists it owns
+    when its block exits, by return and by raise alike."""
+    from wukong_spark.session import Checkpoints
+
+    before = _persistent_rdds(spark)
+
+    def run(fail: bool) -> int:
+        with Checkpoints() as ck:
+            base = ck.persist(spark.range(500).selectExpr("id", "id % 7 AS k"))
+            lazy = ck(base.groupBy("k").count(), eager=False)
+            eager = ck(base.filter("k = 3"))
+            n = lazy.count() + eager.count()
+            assert len(_persistent_rdds(spark) - before) == 3
+            if fail:
+                raise ValueError("boom")
+            return n
+
+    assert run(False) == 7 + 71
+    assert _persistent_rdds(spark) <= before
+    with pytest.raises(ValueError, match="boom"):
+        run(True)
+    assert _persistent_rdds(spark) <= before
+
+
+def test_checkpoint_scope_free_is_idempotent(spark):
+    """`free` releases an owned checkpoint at once; a second free, a
+    None, or a frame the scope does not own is a no-op."""
+    from wukong_spark.session import Checkpoints, release_checkpoint
+
+    before = _persistent_rdds(spark)
+    outside = spark.range(10).localCheckpoint(eager=True)
+    with Checkpoints() as ck:
+        a = ck(spark.range(100))
+        b = ck(spark.range(200))
+        ck.free(a)
+        assert len(_persistent_rdds(spark) - before) == 2  # b and outside
+        ck.free(a, None, outside)
+        assert len(_persistent_rdds(spark) - before) == 2
+        assert b.count() == 200
+    assert len(_persistent_rdds(spark) - before) == 1  # only outside is left
+    assert outside.count() == 10
+    release_checkpoint(outside)
+
+
+def test_checkpoint_scope_keep_registers_result(spark):
+    """A `keep`-ed checkpoint outlives its scope as a registered result
+    and goes at `release_pending(since=token)`."""
+    from wukong_spark.session import Checkpoints, checkpoint_token, release_pending
+
+    before = _persistent_rdds(spark)
+    token = checkpoint_token()
+    with Checkpoints() as ck:
+        ck(spark.range(30))
+        kept = ck.keep(ck(spark.range(40)))
+    assert len(_persistent_rdds(spark) - before) == 1
+    assert kept.count() == 40
+    assert release_pending(since=token) == 1
+    assert _persistent_rdds(spark) <= before
+
+
+def test_local_checkpoint_has_one_call_site():
+    """Every lineage cut in the package goes through `session.checkpoint`:
+    exactly one `.localCheckpoint(` call exists under wukong_spark/, and
+    it is in session.py."""
+    import ast
+    import pathlib
+
+    import wukong_spark
+
+    root = pathlib.Path(wukong_spark.__file__).parent
+    sites = [
+        f"{p.relative_to(root)}:{node.lineno}"
+        for p in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert len(sites) == 1 and sites[0].startswith("session.py:"), sites
+
+
 def test_release_checkpoint_through_projection_only(spark):
     """A column projection of a checkpoint (how als_fit returns U and V)
     frees the checkpoint; a filter view over it does not."""

@@ -2,14 +2,16 @@
 
 Runs every registry entry, collects its result (as the driver does),
 then asserts that NO persistent RDDs created by the entry survive —
-i.e. the localCheckpoint/persist release discipline (ADVICE r13's leak
+i.e. the checkpoint/persist release discipline (ADVICE r13's leak
 class, suspected in the graph_kcore_bucketed 113s watch item) holds
-registry-wide.  Entries whose RETURNED plan is necessarily backed by an
-eager checkpoint (converged iterations) must register that frame via
-`wukong_spark.session.register_result_checkpoint`; the audit releases
-registered frames with `release_pending()` AFTER consuming the result
-— exactly what a long-lived gate session should do between entries —
-and only what survives *that* counts as a leak.
+registry-wide.  Operators make their checkpoints through a
+`wukong_spark.session.Checkpoints` scope, which frees them on exit; a
+checkpoint the RETURNED plan reads (converged iterations) is kept into
+the result registry (`ck.keep`, or `register_result_checkpoint` for a
+one-shot result).  The audit releases registered frames with
+`release_pending()` AFTER consuming the result — exactly what a
+long-lived gate session should do between entries — and only what
+survives *that* counts as a leak.
 
 Usage: python tools/leak_audit.py [SF_DIR] [--json OUT.json] [entry ...]
 Exit 0 iff every entry leaks nothing.

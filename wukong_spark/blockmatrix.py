@@ -66,6 +66,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wukong_spark.session import Checkpoints
+
 BLOCK_SCHEMA = StructType(
     [
         StructField("bi", IntegerType(), False),
@@ -1944,8 +1946,11 @@ class BlockMatrix:
             3. repeat 1–2 once ("twice is enough": one CGS pass loses
                orthogonality at O(ε·κ²), the second restores O(ε))
             4. TSQR(W) → Q_j (distributed), R_jj (driver)
-          Panel Qs are localCheckpoint-ed (every later panel joins against
-          them; CGS lineage would otherwise deepen quadratically).
+          Panel Qs are checkpointed (every later panel joins against
+          them; CGS lineage would otherwise deepen quadratically), and so
+          is each re-orthogonalized W, freed once its panel Q has
+          materialized.  The panel checkpoints back Q and are registered
+          for harness release.
 
         R (n_cols × n_cols) assembles on the driver from small factors —
         never O(matrix).  Requires n_rows ≥ n_cols and full column rank
@@ -1960,36 +1965,37 @@ class BlockMatrix:
             return self.reblock_single_column().tsqr()
         n, m = self.n_rows, self.n_cols
         br, bc = self.block_rows, self.block_cols
-        self.df.persist()
         r_mat = np.zeros((m, m))
         qpref: "BlockMatrix | None" = None
         panel_dfs: list[DataFrame] = []
-        for j in range(self.grid_cols):
-            cj = min(bc, m - j * bc)
-            w = BlockMatrix(
-                self.df.filter(F.col("bj") == j).withColumn("bj", F.lit(0)),
-                n, cj, br, cj,
-            )
-            if qpref is not None:
-                done = qpref.n_cols
-                s_total = np.zeros((done, cj))
-                for _ in range(2):  # CGS2: project, then re-project
-                    s = qpref.transpose_matvec(w)
-                    s_total += s
-                    w = _subtract_panel_projection(qpref, w, s)
-                r_mat[:done, j * bc : j * bc + cj] = s_total
-                w = BlockMatrix(w.df.localCheckpoint(), n, cj, br, cj)
-            qj, rjj = w.tsqr()
-            r_mat[j * bc : j * bc + cj, j * bc : j * bc + cj] = rjj
-            qj_df = qj.df.withColumn("bj", F.lit(j)).localCheckpoint()
-            qj.release()  # checkpoint materialized — free tsqr's stage 1
-            panel_dfs.append(qj_df)
-            grown = qj_df if qpref is None else qpref.df.unionByName(qj_df)
-            qpref = BlockMatrix(grown, n, j * bc + cj, br, bc)
-        self.df.unpersist()
-        out = panel_dfs[0]
-        for p in panel_dfs[1:]:
-            out = out.unionByName(p)
+        with Checkpoints() as ck:
+            ck.persist(self.df)
+            for j in range(self.grid_cols):
+                cj = min(bc, m - j * bc)
+                w = BlockMatrix(
+                    self.df.filter(F.col("bj") == j).withColumn("bj", F.lit(0)),
+                    n, cj, br, cj,
+                )
+                if qpref is not None:
+                    done = qpref.n_cols
+                    s_total = np.zeros((done, cj))
+                    for _ in range(2):  # CGS2: project, then re-project
+                        s = qpref.transpose_matvec(w)
+                        s_total += s
+                        w = _subtract_panel_projection(qpref, w, s)
+                    r_mat[:done, j * bc : j * bc + cj] = s_total
+                    w = BlockMatrix(ck(w.df), n, cj, br, cj)
+                qj, rjj = w.tsqr()
+                r_mat[j * bc : j * bc + cj, j * bc : j * bc + cj] = rjj
+                qj_df = ck(qj.df.withColumn("bj", F.lit(j)))
+                qj.release()  # checkpoint materialized — free tsqr's stage 1
+                ck.free(w.df)
+                panel_dfs.append(qj_df)
+                grown = qj_df if qpref is None else qpref.df.unionByName(qj_df)
+                qpref = BlockMatrix(grown, n, j * bc + cj, br, bc)
+            out = ck.keep(panel_dfs[0])
+            for p in panel_dfs[1:]:
+                out = out.unionByName(ck.keep(p))
         return BlockMatrix(out, n, m, br, bc), r_mat
 
     def svd_tall_skinny(self) -> tuple["BlockMatrix", np.ndarray, np.ndarray]:
@@ -2477,36 +2483,42 @@ def _factor_right_looking(
     A superseded trailing checkpoint and its panel broadcast are freed as
     soon as the successor materializes — releasing earlier loses blocks
     the pending update still reads — so they queue in ``deferred`` and
-    drain after each diagonal collect.  Every exit frees the trailing
-    checkpoint and the broadcasts; a raise (a non-SPD or zero-pivot
-    diagonal block) frees the panels too.  On return the panels BACK the
-    factors and are registered for harness release (leak audit r15).
+    drain after each diagonal collect.  One `Checkpoints` scope owns the
+    checkpoints and broadcasts: every exit frees the trailing checkpoint
+    and the broadcasts, and a raise (a non-SPD or zero-pivot diagonal
+    block) frees the panels too.  On return the panels BACK the factors
+    and are kept for harness release (leak audit r15).
 
     Returns one BlockMatrix per array ``factor`` returns: its diagonal
     blocks plus its panels; absent off-triangle blocks ≡ zero.
     """
-    from wukong_spark.session import register_result_checkpoint
-    from wukong_spark.session import release_checkpoint as _release
-
     assert a.n_rows == a.n_cols and a.block_rows == a.block_cols
     spark = a.df.sparkSession
     sc = spark.sparkContext
     n, bs, nb = a.n_rows, a.block_rows, a.grid_rows
     g = _Layout(n, n, bs, bs)  # every step reads materialized checkpoints
     src = a.df.filter(F.col("bi") >= F.col("bj")) if symmetric else a.df
-    remaining = src.localCheckpoint(eager=False)
     diags: list[tuple] = []  # per step, the diagonal blocks of each factor
     panels: tuple[list, list] = ([], [])  # column panels, row panels
     deferred: list = []  # [(superseded checkpoint DF, panel broadcast|None)]
 
     def drain() -> None:
         for df_, bc_ in deferred:
-            if bc_ is not None:
-                bc_.unpersist()
-            _release(df_)
+            ck.free(bc_, df_)
         deferred.clear()
 
-    try:
+    def assemble(blocks: list, parts: list) -> BlockMatrix:
+        # block-count-capped slices for the tiny diagonal frame (r18): the
+        # createDataFrame default would add defaultParallelism near-empty
+        # partitions to every consumer of the factor (see from_numpy)
+        rdd = sc.parallelize(blocks, max(1, len(blocks)))
+        out = spark.createDataFrame(rdd, BLOCK_SCHEMA)
+        for p in parts:
+            out = out.unionByName(ck.keep(p))
+        return BlockMatrix(out, n, n, bs, bs)
+
+    with Checkpoints() as ck:
+        remaining = ck(src, eager=False)
         for j in range(nb):
             # materializes the pending lazy trailing checkpoint (and, step
             # 0, the initial checkpoint) as part of this collect's job
@@ -2526,14 +2538,12 @@ def _factor_right_looking(
             n_panels = 1 if symmetric else 2
             broadcast = n_panels * (nb - j - 1) * bs * bs * 8 <= BROADCAST_CAP
             col_src = remaining.filter((F.col("bj") == j) & (F.col("bi") > j))
-            lp = _blockwise(col_src, g, solve).localCheckpoint(
-                eager=symmetric and not broadcast
-            )
+            lp = ck(_blockwise(col_src, g, solve), eager=symmetric and not broadcast)
             panels[0].append(lp)
             up = lp
             if not symmetric:
                 row_src = remaining.filter((F.col("bi") == j) & (F.col("bj") > j))
-                up = _blockwise(row_src, g, solve).localCheckpoint(eager=False)
+                up = ck(_blockwise(row_src, g, solve), eager=False)
                 panels[1].append(up)
 
             trailing = remaining.filter((F.col("bi") > j) & (F.col("bj") > j))
@@ -2544,7 +2554,7 @@ def _factor_right_looking(
                     umap = lmap
                 else:
                     umap = {r_.bj: bytes(r_.data) for r_ in up.collect()}
-                bc = sc.broadcast((lmap, umap))
+                bc = ck.persist(sc.broadcast((lmap, umap)))
             else:
                 li = lp.select(F.col("bi").alias("pi"), F.col("data").alias("dl"))
                 uk = up.select(
@@ -2583,31 +2593,11 @@ def _factor_right_looking(
             # the update job has not run yet — it still reads the current
             # checkpoint and the broadcast; both free after the NEXT collect
             deferred.append((remaining, bc))
-            remaining = trailing.mapInArrow(update, BLOCK_SCHEMA).localCheckpoint(
-                eager=False
-            )
-    except BaseException:
-        for p in panels[0] + panels[1]:
-            _release(p)
-        raise
-    finally:
-        drain()
-        _release(remaining)
-
-    def assemble(blocks: list, parts: list) -> BlockMatrix:
-        # block-count-capped slices for the tiny diagonal frame (r18): the
-        # createDataFrame default would add defaultParallelism near-empty
-        # partitions to every consumer of the factor (see from_numpy)
-        rdd = sc.parallelize(blocks, max(1, len(blocks)))
-        out = spark.createDataFrame(rdd, BLOCK_SCHEMA)
-        for p in parts:
-            out = out.unionByName(register_result_checkpoint(p))
-        return BlockMatrix(out, n, n, bs, bs)
-
-    return tuple(
-        assemble([(j, j, d[k].tobytes()) for j, d in enumerate(diags)], panels[k])
-        for k in range(len(diags[0]))
-    )
+            remaining = ck(trailing.mapInArrow(update, BLOCK_SCHEMA), eager=False)
+        return tuple(
+            assemble([(j, j, d[k].tobytes()) for j, d in enumerate(diags)], panels[k])
+            for k in range(len(diags[0]))
+        )
 
 
 def cholesky_blocked(a: BlockMatrix) -> BlockMatrix:

@@ -514,13 +514,14 @@ def als_fit(
     regularized solve is identically zero).
 
     Returns (U, V, objectives): U and V are (key, f) projections of
-    eager localCheckpoints (lineage truncated per half-step — the
-    CC/PageRank iteration rule), freed by `release_checkpoint(U)` /
+    eager checkpoints (lineage truncated per half-step — the CC/PageRank
+    iteration rule), registered as results: `release_pending()` frees
+    them, and so does an earlier `release_checkpoint(U)` /
     `release_checkpoint(V)`; objectives[0] is the initial value, one
     value follows each iteration and a last one the closing user
     half-step, and ALS decreases the sequence monotonically, which
     callers assert."""
-    from wukong_spark.session import release_checkpoint
+    from wukong_spark.session import Checkpoints
 
     k = n_factors
 
@@ -546,13 +547,6 @@ def als_fit(
                 [ids, arrow_factors(f), (f * f).sum(axis=1)],
                 names=["item_id", "f", "nrm"],
             )
-
-    v_ck = (
-        ratings.select("item_id")
-        .distinct()
-        .mapInArrow(gen, "item_id long, f array<double>, nrm double")
-        .localCheckpoint()
-    )
 
     def half_step(group_key: str, other_key: str, other_ck: DataFrame | None):
         """One half-step: (group_key, f, sse, nrm[, sse0, nrm0]) rows,
@@ -602,7 +596,7 @@ def als_fit(
         else:
             src = ratings.join(other_ck.select(other_key, "f"), other_key)
             pair = F.struct("f", "rating")
-        return (
+        return ck(
             src.groupBy(group_key)
             .agg(F.collect_list(pair).alias("xs"))
             .mapInArrow(
@@ -610,7 +604,6 @@ def als_fit(
                 f"{group_key} long, f array<double>, "
                 + ", ".join(f"{c} double" for c in cols),
             )
-            .localCheckpoint()
         )
 
     def objectives(last: DataFrame, other: DataFrame, legs) -> list[float]:
@@ -629,23 +622,30 @@ def als_fit(
         )
         return [float(x) for x in row]
 
-    # the first user solve also carries the initial objective's legs; at
-    # iters == 0 it is the closing solve too, so one job reads both values
-    u_ck = half_step("user_id", "item_id", None)
-    objs = objectives(
-        u_ck, v_ck, [("sse0", "nrm0")] + ([] if iters else [("sse", "nrm")])
-    )
-    for _ in range(iters):
-        v_new = half_step("item_id", "user_id", u_ck)
-        release_checkpoint(v_ck)
-        v_ck = v_new
-        objs += objectives(v_ck, u_ck, [("sse", "nrm")])
-        # the next iteration's user solve, or the closing one: users are
-        # then exactly optimal vs the final V, so a caller's independent
-        # gradient check can gate at ~1e-8
-        u_new = half_step("user_id", "item_id", v_ck)
-        release_checkpoint(u_ck)
-        u_ck = u_new
-    if iters:
-        objs += objectives(u_ck, v_ck, [("sse", "nrm")])
-    return u_ck.select("user_id", "f"), v_ck.select("item_id", "f"), objs
+    with Checkpoints() as ck:
+        v_ck = ck(
+            ratings.select("item_id")
+            .distinct()
+            .mapInArrow(gen, "item_id long, f array<double>, nrm double")
+        )
+        # the first user solve also carries the initial objective's legs; at
+        # iters == 0 it is the closing solve too, so one job reads both values
+        u_ck = half_step("user_id", "item_id", None)
+        objs = objectives(
+            u_ck, v_ck, [("sse0", "nrm0")] + ([] if iters else [("sse", "nrm")])
+        )
+        for _ in range(iters):
+            v_new = half_step("item_id", "user_id", u_ck)
+            ck.free(v_ck)
+            v_ck = v_new
+            objs += objectives(v_ck, u_ck, [("sse", "nrm")])
+            # the next iteration's user solve, or the closing one: users are
+            # then exactly optimal vs the final V, so a caller's independent
+            # gradient check can gate at ~1e-8
+            u_new = half_step("user_id", "item_id", v_ck)
+            ck.free(u_ck)
+            u_ck = u_new
+        if iters:
+            objs += objectives(u_ck, v_ck, [("sse", "nrm")])
+        u, v = ck.keep(u_ck), ck.keep(v_ck)
+        return u.select("user_id", "f"), v.select("item_id", "f"), objs

@@ -391,7 +391,7 @@ def merge_asof_global(
     # range exchange on __on ONLY (equal keys co-located); local order
     # (__on, payload) makes duplicate right keys resolve by position
     # exactly as the keyed operator's struct tie-break documents
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
     # rights-first local order (__is_left: right=0 < left=1): the
     # streaming merge below can finalize the right slice the moment the
@@ -400,13 +400,14 @@ def merge_asof_global(
     # key tie-break documented above — and lefts stay sorted by __on,
     # which pandas.merge_asof requires of each batch.
     s = register_result_checkpoint(
-        u.repartitionByRange(n_partitions, "__on")
-        .sortWithinPartitions(
-            "__is_left", "__on",
-            *[F.col(_q(f"__r_{c}")) for c in r_payload_cols],
+        checkpoint(
+            u.repartitionByRange(n_partitions, "__on")
+            .sortWithinPartitions(
+                "__is_left", "__on",
+                *[F.col(_q(f"__r_{c}")) for c in r_payload_cols],
+            )
+            .withColumn("__pid", F.spark_partition_id())
         )
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
 
     right_struct = F.struct(

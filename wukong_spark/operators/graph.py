@@ -12,11 +12,17 @@ Scale discipline per iteration:
 - labels are (node, label) pairs — never adjacency materialization;
 - each step is join(edges, labels) → min-agg, both shuffling on the SAME
   key, so the exchange is reused;
-- each iteration's labels are eagerly localCheckpoint'ed: persist alone
+- each iteration's labels are eagerly checkpointed: persist alone
   keeps the full lineage, and an iterated union-of-joins plan grows
   EXPONENTIALLY (the plan audit caught a 2,000-node plan after 5 rounds) —
   checkpointing truncates lineage to the materialized partitions;
 - convergence check is a 1-row count of changed labels (cheap action).
+
+Every loop makes its checkpoints and persists through one
+`session.Checkpoints` scope: a superseded iterate is freed as soon as its
+successor has materialized, the iterate that backs the returned plan is
+`keep`-ed into the result registry, and a raise or an early return frees
+whatever else the loop still holds.
 """
 
 from __future__ import annotations
@@ -24,13 +30,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wukong_spark.session import register_result_checkpoint as _register
+from wukong_spark.session import Checkpoints, scoped_shuffle_partitions
 
 
-def _cc_loop(adj, labels, max_iter: int, name: str) -> DataFrame:
+def _cc_loop(ck: Checkpoints, adj, labels, max_iter: int, name: str) -> DataFrame:
     """Shared min-label flood-fill loop over (a, b) relays.
 
-    `labels` is an eager checkpoint of (node, component) initial labels.
+    `labels` is an eager checkpoint of (node, component) initial labels,
+    owned by `ck`.
     Convergence is detected WITHOUT the
     old-vs-new join earlier rounds paid: the old label rides THROUGH the
     min-agg as a second aggregate (each node contributes its own-label
@@ -38,10 +45,7 @@ def _cc_loop(adj, labels, max_iter: int, name: str) -> DataFrame:
     ignores), so `changed` is a filter+count over the round's checkpoint
     — one scan of cached partitions, no extra exchange.  Works for any
     orderable label type (node ids may be strings)."""
-    from wukong_spark.session import release_checkpoint as _release
-
     own_t = labels.schema["component"].dataType
-    converged = False
     for _ in range(max_iter):
         via_nbr = (
             adj.join(labels, adj.b == labels.node)
@@ -51,28 +55,22 @@ def _cc_loop(adj, labels, max_iter: int, name: str) -> DataFrame:
                 F.lit(None).cast(own_t).alias("own"),
             )
         )
-        new_labels = (
+        new_labels = ck(
             labels.select("node", "component", F.col("component").alias("own"))
             .unionByName(via_nbr)
             .groupBy("node")
             .agg(F.min("component").alias("component"), F.min("own").alias("own"))
-            .localCheckpoint(eager=True)
         )
         changed = new_labels.filter(F.col("component") != F.col("own")).count()
-        _release(labels)
+        ck.free(labels)
         labels = new_labels
         if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        _release(labels)
-        raise RuntimeError(
-            f"{name} did not converge within {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter"
-        )
-    # checkpoint-backed result: freed by the harness via release_pending()
-    return _register(labels).select("node", "component")
+            # checkpoint-backed result: freed by the harness via release_pending()
+            return ck.keep(labels).select("node", "component")
+    raise RuntimeError(
+        f"{name} did not converge within {max_iter} rounds "
+        "(graph diameter exceeds max_iter); raise max_iter"
+    )
 
 
 def connected_components(
@@ -95,24 +93,19 @@ def connected_components(
     is O(nodes), far smaller than the edge scan the session default is
     sized for); None inherits the session conf.  See
     `session.scoped_shuffle_partitions`."""
-    from wukong_spark.session import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(edges.sparkSession, iteration_partitions):
+    with scoped_shuffle_partitions(
+        edges.sparkSession, iteration_partitions
+    ), Checkpoints() as ck:
         both = edges.select(
             F.col(src).alias("a"), F.col(dst).alias("b")
         ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        both = both.distinct().persist()
-
-        labels = (
+        both = ck.persist(both.distinct())
+        labels = ck(
             both.select(F.col("a").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
-            .localCheckpoint(eager=True)
         )
-        try:
-            return _cc_loop(both, labels, max_iter, "connected_components")
-        finally:
-            both.unpersist()
+        return _cc_loop(ck, both, labels, max_iter, "connected_components")
 
 
 def connected_components_bucketed(
@@ -151,7 +144,7 @@ def connected_components_bucketed(
     width regardless, so sizing the min-agg to match keeps every loop
     stage at the layout's width instead of the session's scan default."""
     from wukong_spark.layout import drop_managed_table
-    from wukong_spark.session import register_result_table, scoped_shuffle_partitions
+    from wukong_spark.session import register_result_table
 
     spark = edges.sparkSession
     drop_managed_table(spark, table)
@@ -172,16 +165,15 @@ def connected_components_bucketed(
 
     with scoped_shuffle_partitions(
         spark, buckets if iteration_partitions is None else iteration_partitions
-    ):
+    ), Checkpoints() as ck:
         # doubled edges ⇒ set(a) == set(b); distinct over the BUCKETED column
         # satisfies clustering straight off the scan (no exchange)
-        labels = (
+        labels = ck(
             adj.select(F.col("b").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
-            .localCheckpoint(eager=True)
         )
-        return _cc_loop(adj, labels, max_iter, "connected_components_bucketed")
+        return _cc_loop(ck, adj, labels, max_iter, "connected_components_bucketed")
 
 
 def pagerank_bucketed(
@@ -247,7 +239,6 @@ def pagerank_bucketed(
     """
     from wukong_spark.layout import drop_managed_table
     from wukong_spark.session import register_result_table
-    from wukong_spark.session import release_checkpoint as _release
 
     # validate BEFORE the expensive bucketed write — an invalid call must
     # not pay the layout step or clobber the named table (ADVICE r12)
@@ -274,55 +265,59 @@ def pagerank_bucketed(
     register_result_table(spark, table)
     adj = spark.table(table)
 
+    def l1_delta(new: DataFrame, old: DataFrame):
+        return (
+            new.alias("a")
+            .join(old.alias("b"), "node")
+            .agg(F.sum(F.abs(F.col("a.r") - F.col("b.r"))).alias("d"))
+            .collect()[0][0]
+        )
+
     if not handle_dangling:
         # undirected input: src column covers every node, and the bucket
         # layout satisfies the distinct's clustering (no exchange here)
         nodes = adj.select("src").distinct()
         n = nodes.count()
-        ranks = nodes.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("r"))
-        if tol is not None:
-            ranks = ranks.localCheckpoint(eager=True)
-        for _ in range(iters):
-            # r18: force the sort-merge join.  The planner otherwise
-            # broadcasts the (small) ranks side, and because this branch
-            # is fully lazy each iteration's BroadcastExchange job
-            # REPLAYS the whole ranks lineage (iteration 3's build
-            # re-runs iterations 1-2) — four broadcast-build jobs and
-            # ~2x wall clock, measured at sf0.1 (12.9-16.9 s → 6.2-7.6 s,
-            # bit-identical ranks).  SMJ keeps the bucketed edge side
-            # exchange-free (the layout's point, plan-pinned) and chains
-            # all iterations into ONE job with (node, rank)-sized
-            # exchanges only.
-            rside = ranks.hint("merge")
-            contrib = adj.join(rside, adj["src"] == rside["node"]).select(
-                F.col("dst").alias("node"), (F.col("r") / F.col("d")).alias("c")
-            )
-            new_ranks = contrib.groupBy("node").agg(
-                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.sum("c")).alias("r")
-            )
-            if tol is None:
-                # fixed-iteration mode: stay fully lazy (oracle-replayable)
+        with Checkpoints() as ck:
+            ranks = nodes.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("r"))
+            if tol is not None:
+                ranks = ck(ranks)
+            for _ in range(iters):
+                # r18: force the sort-merge join.  The planner otherwise
+                # broadcasts the (small) ranks side, and because this branch
+                # is fully lazy each iteration's BroadcastExchange job
+                # REPLAYS the whole ranks lineage (iteration 3's build
+                # re-runs iterations 1-2) — four broadcast-build jobs and
+                # ~2x wall clock, measured at sf0.1 (12.9-16.9 s → 6.2-7.6 s,
+                # bit-identical ranks).  SMJ keeps the bucketed edge side
+                # exchange-free (the layout's point, plan-pinned) and chains
+                # all iterations into ONE job with (node, rank)-sized
+                # exchanges only.
+                rside = ranks.hint("merge")
+                contrib = adj.join(rside, adj["src"] == rside["node"]).select(
+                    F.col("dst").alias("node"), (F.col("r") / F.col("d")).alias("c")
+                )
+                new_ranks = contrib.groupBy("node").agg(
+                    (F.lit((1.0 - damping) / n) + F.lit(damping) * F.sum("c")).alias("r")
+                )
+                if tol is None:
+                    # fixed-iteration mode: stay fully lazy (oracle-replayable)
+                    ranks = new_ranks
+                    continue
+                # L1 convergence stop (ADVICE r12: tol was silently ignored on
+                # this branch) — same contract as the dangling path.  r18
+                # (VERDICT r17 #3, the cholesky lazy-checkpoint move): the
+                # checkpoint is LAZY and the delta collect right below is its
+                # first (single-reference) action, folding 2 jobs/iteration
+                # into 1; the old ranks checkpoint is freed only after
+                # that collect lands, when the successor is materialized.
+                new_ranks = ck(new_ranks, eager=False)
+                delta = l1_delta(new_ranks, ranks)
+                ck.free(ranks)
                 ranks = new_ranks
-                continue
-            # L1 convergence stop (ADVICE r12: tol was silently ignored on
-            # this branch) — same contract as the dangling path.  r18
-            # (VERDICT r17 #3, the cholesky lazy-checkpoint move): the
-            # checkpoint is LAZY and the delta collect right below is its
-            # first (single-reference) action, folding 2 jobs/iteration
-            # into 1; the old ranks checkpoint is released only after
-            # that collect lands, when the successor is materialized.
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.sum(F.abs(F.col("a.r") - F.col("b.r"))).alias("d"))
-                .collect()[0][0]
-            )
-            _release(ranks)
-            ranks = new_ranks
-            if delta is not None and float(delta) < tol:
-                break
-        return _register(ranks)
+                if delta is not None and float(delta) < tol:
+                    break
+            return ck.keep(ranks)
 
     # directed graph with sinks: the node universe is src ∪ dst, and the
     # dangling set (no out-edges) is computed once up front
@@ -332,89 +327,73 @@ def pagerank_bucketed(
         .distinct()
     )
     n = universe.count()
-    if seeds is not None:
-        # teleport distribution from the seed set (0 elsewhere)
-        nodes = (
-            universe.join(seeds.select("node", F.col("s").alias("t")), "node", "left")
-            .select("node", F.coalesce("t", F.lit(0.0)).alias("t"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        nodes = universe.select("node", F.lit(1.0 / n).alias("t")).localCheckpoint(
-            eager=True
-        )
-    dangling = nodes.select("node").join(
-        adj.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-    ).localCheckpoint(eager=True)
-
-    ranks = nodes.select("node", F.col("t").alias("r")).localCheckpoint(eager=True)
-    # r18 (VERDICT r17 #3): per-iteration checkpoints are LAZY and are
-    # materialized by the loop's own unavoidable scalar action — the NEXT
-    # round's dangling-mass collect (no-tol) or this round's delta collect
-    # (tol) — folding the per-iteration eager-checkpoint job away (3→2
-    # jobs with tol, 2→1 without).  The cholesky release discipline
-    # applies: a superseded checkpoint releases only after its successor
-    # has materialized, so the no-tol path defers one release round.
-    pending_release = None
-    for _ in range(iters):
-        # dangling mass this round: one 1-row scalar job — also the
-        # action that materializes the previous round's lazy checkpoint
-        m_row = dangling.join(ranks, "node").agg(F.sum("r")).collect()[0][0]
-        if pending_release is not None:
-            _release(pending_release)
-            pending_release = None
-        m = float(m_row) if m_row is not None else 0.0
-        # same forced SMJ as the fixed-iteration branch: no per-iteration
-        # BroadcastExchange job on the ranks side, edge side stays
-        # exchange-free off the bucketed scan
-        rside = ranks.hint("merge")
-        contrib = (
-            adj.join(rside, adj["src"] == rside["node"])
-            .select(F.col("dst").alias("node"), (F.col("r") / F.col("d")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        new_ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("t")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.lit(m) * F.col("t")
-                    )
-                ).alias("r"),
+    with Checkpoints() as ck:
+        if seeds is not None:
+            # teleport distribution from the seed set (0 elsewhere)
+            nodes = ck(
+                universe.join(seeds.select("node", F.col("s").alias("t")), "node", "left")
+                .select("node", F.coalesce("t", F.lit(0.0)).alias("t"))
             )
-            .localCheckpoint(eager=False)
-        )
-        if tol is not None:
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.sum(F.abs(F.col("a.r") - F.col("b.r"))).alias("d"))
-                .collect()[0][0]
-            )
-            _release(ranks)
-            ranks = new_ranks
-            if delta is not None and float(delta) < tol:
-                break
         else:
+            nodes = ck(universe.select("node", F.lit(1.0 / n).alias("t")))
+        dangling = ck(
+            nodes.select("node").join(
+                adj.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
+            )
+        )
+
+        ranks = ck(nodes.select("node", F.col("t").alias("r")))
+        # r18 (VERDICT r17 #3): per-iteration checkpoints are LAZY and are
+        # materialized by the loop's own unavoidable scalar action — the NEXT
+        # round's dangling-mass collect (no-tol) or this round's delta collect
+        # (tol) — folding the per-iteration eager-checkpoint job away (3→2
+        # jobs with tol, 2→1 without).  The cholesky release discipline
+        # applies: a superseded checkpoint is freed only after its successor
+        # has materialized, so the no-tol path defers one free by a round.
+        prev = None
+        for _ in range(iters):
+            # dangling mass this round: one 1-row scalar job — also the
+            # action that materializes the previous round's lazy checkpoint
+            m_row = dangling.join(ranks, "node").agg(F.sum("r")).collect()[0][0]
+            ck.free(prev)
+            m = float(m_row) if m_row is not None else 0.0
+            # same forced SMJ as the fixed-iteration branch: no per-iteration
+            # BroadcastExchange job on the ranks side, edge side stays
+            # exchange-free off the bucketed scan
+            rside = ranks.hint("merge")
+            contrib = (
+                adj.join(rside, adj["src"] == rside["node"])
+                .select(F.col("dst").alias("node"), (F.col("r") / F.col("d")).alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("c"))
+            )
+            new_ranks = ck(
+                nodes.join(contrib, "node", "left").select(
+                    "node",
+                    (
+                        F.lit(1.0 - damping) * F.col("t")
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.lit(m) * F.col("t")
+                        )
+                    ).alias("r"),
+                ),
+                eager=False,
+            )
             # new_ranks has NOT materialized yet — its update job still
-            # reads the current checkpoint; release it next round
-            pending_release = ranks
-            ranks = new_ranks
-    # materialize the final (possibly lazy) checkpoint BEFORE freeing the
-    # nodes/dangling checkpoints its pending update job still reads —
-    # this was the release-lifetime hazard that deferred the conversion
-    # in r17.  A materialized checkpoint's count() is a cached scan.
-    ranks.count()
-    if pending_release is not None:
-        _release(pending_release)
-    _release(nodes)
-    _release(dangling)
-    return _register(ranks)
+            # reads the current checkpoint: free it after the next collect
+            prev, ranks = ranks, new_ranks
+            if tol is not None:
+                delta = l1_delta(ranks, prev)
+                ck.free(prev)
+                if delta is not None and float(delta) < tol:
+                    break
+        # materialize the final (possibly lazy) checkpoint BEFORE the scope
+        # frees the nodes/dangling checkpoints its pending update job still
+        # reads.  A materialized checkpoint's count() is a cached scan.
+        ranks.count()
+        return ck.keep(ranks)
 
 
 def kcore(
@@ -432,8 +411,8 @@ def kcore(
     the maximal subgraph where every node keeps ≥ k neighbors).
 
     Input is an UNDIRECTED edge list given in both directions (the CC
-    convention).  Each round: one join of the edge set against the
-    survivor set on both endpoints, one count-agg per src, one HAVING-
+    convention).  Each round (`_kcore_loop`): one join of the edge set
+    against the survivor set on b, one count-agg per a, one HAVING-
     style filter — all keyed on node.  The survivor set shrinks
     monotonically, so "count unchanged" == "set unchanged" and the loop
     stops one round after stability (the labels-changed early-exit
@@ -448,61 +427,46 @@ def kcore(
     O(cascade depth) rounds, not O(diameter).  `iteration_partitions`
     pins the loop's exchange width to the survivor-set volume (None
     inherits the session conf; see session.scoped_shuffle_partitions)."""
-    from wukong_spark.session import release_checkpoint as _release
-    from wukong_spark.session import scoped_shuffle_partitions
+    with scoped_shuffle_partitions(
+        edges.sparkSession, iteration_partitions
+    ), Checkpoints() as ck:
+        both = ck.persist(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+        cur = ck(both.select(F.col("a").alias("node")).distinct())
+        return _kcore_loop(ck, both, cur, k, max_iter, "kcore")
 
-    with scoped_shuffle_partitions(edges.sparkSession, iteration_partitions):
-        both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-        cur = both.select(F.col("a").alias("node")).distinct().localCheckpoint(
-            eager=True
-        )
-        n_cur = cur.count()
 
-        converged = False
-        for _ in range(max_iter):
-            nxt = (
-                both.join(cur.select(F.col("node").alias("a")), "a")
-                .join(cur.select(F.col("node").alias("b")), "b")
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .localCheckpoint(eager=True)
-            )
-            n_nxt = nxt.count()
-            _release(cur)
-            cur = nxt.select("node").localCheckpoint(eager=True)
-            if n_nxt == n_cur:
-                # survivor sets shrink monotonically: equal COUNT == equal
-                # SET, and this round's degrees were computed within that
-                # stable set — they ARE the core degrees
-                _release(cur)
-                both.unpersist()
-                return _register(nxt).select(
-                    "node", F.col("deg").alias("deg_in_core")
-                )
-            _release(nxt)
-            n_cur = n_nxt
-            if n_cur == 0:
-                converged = True
-                break
+def _kcore_loop(ck: Checkpoints, adj, cur, k: int, max_iter: int, name: str) -> DataFrame:
+    """Shared peel loop over (a, b) edges: each round is ONE join of the
+    edges against the survivor set on b plus a keyed count on a,
 
-        both.unpersist()
-    if converged:
-        # empty core: derive the empty frame from the COMPUTED plan so the
-        # schema (incl. the node column's actual type — the operator is
-        # generic over it) always matches the non-empty path (r14, ADVICE
-        # r13), and release the final checkpoint before returning
-        _release(cur)
-        return (
-            edges.select(F.col(src).alias("a"))
+        cur' = { a : |{ b : (a,b) ∈ E, b ∈ cur }| >= k }
+
+    `cur` is an eager checkpoint of the initial (node) set, owned by `ck`,
+    and every node the edges name as `a` must be in it.  No a-side
+    survivor join is needed: survivor sets shrink monotonically, so a
+    node peeled at round t has degree-into-survivors < k forever after
+    (its count can only fall), and the `deg >= k` filter re-excludes it
+    for free.  The next round reads its survivor set as a projection of
+    this round's (node, deg) checkpoint — no second checkpoint per round.
+    Equal survivor COUNT == equal SET, and that round's degrees were
+    computed within the stable set: they ARE the core degrees.  An empty
+    survivor set is stable too, and returns through the same projection,
+    so its schema (the node column's actual type) matches a non-empty
+    core's."""
+    n_cur = cur.count()
+    for _ in range(max_iter):
+        nxt = ck(
+            adj.join(cur.select(F.col("node").alias("b")), "b")
             .groupBy(F.col("a").alias("node"))
-            .agg(F.count(F.lit(1)).cast("long").alias("deg_in_core"))
-            .filter(F.lit(False))
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
         )
-    _release(cur)
-    raise RuntimeError(
-        f"kcore did not stabilize within {max_iter} rounds; raise max_iter"
-    )
+        n_nxt = nxt.count()
+        ck.free(cur)
+        if n_nxt in (n_cur, 0):
+            return ck.keep(nxt).select("node", F.col("deg").alias("deg_in_core"))
+        cur, n_cur = nxt, n_nxt
+    raise RuntimeError(f"{name} did not stabilize within {max_iter} rounds; raise max_iter")
 
 
 def hits(
@@ -533,111 +497,93 @@ def hits(
     linear in nodes; the edge set is persisted and never re-shuffled
     (lay it out bucketed via pagerank_bucketed's lever when iterations
     dominate).  Checkpoint discipline: each iterate is eagerly
-    localCheckpoint'ed (truncating the exponentially-growing loop plan)
-    and RELEASED as soon as its successor is materialized — only the
+    checkpointed (truncating the exponentially-growing loop plan) and
+    FREED as soon as its successor is materialized — only the
     final h/a checkpoints, which back the returned plan, stay resident
     (ADVICE r13: graph_hits_check leaked every intermediate).
     `iteration_partitions` pins the loop's exchange width to the score-set
     volume (None inherits the session conf; see
     session.scoped_shuffle_partitions) — the returned JOINED plan executes
     at the caller's conf, only the per-iteration checkpoints are scoped."""
-    from wukong_spark.session import release_checkpoint as _release
-    from wukong_spark.session import scoped_shuffle_partitions
-
-    _ipscope = scoped_shuffle_partitions(edges.sparkSession, iteration_partitions)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
 
     def _normalized(scores: DataFrame) -> DataFrame:
         total = scores.agg(F.sum("s")).collect()[0][0]
         z = float(total) if total else 1.0
         return scores.select("node", (F.col("s") / F.lit(z)).alias("s"))
 
-    n_src = e.select("src").distinct().count()
-    h = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1.0 / max(n_src, 1)).alias("s")
-    )
-    a = None
-    h_ckpt = a_ckpt = None  # the checkpoints currently backing h / a
-
-    _ipscope.__enter__()
-    try:
-        for _ in range(max_iter):
-            a_new = (
-                e.join(h.withColumnRenamed("node", "src"), "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("s").alias("s"))
-                .localCheckpoint(eager=True)
+    # L1 delta of both iterates (full outer: support can only grow, but be
+    # defensive) — one keyed join + scalar agg each
+    def _l1(cur: DataFrame, prev: DataFrame | None) -> float:
+        if prev is None:
+            return float("inf")
+        d = (
+            cur.withColumnRenamed("s", "x")
+            .join(prev.withColumnRenamed("s", "y"), "node", "full")
+            .agg(
+                F.sum(
+                    F.abs(
+                        F.coalesce(F.col("x"), F.lit(0.0))
+                        - F.coalesce(F.col("y"), F.lit(0.0))
+                    )
+                )
             )
-            # the PREVIOUS a's checkpoint still backs a_prev until the delta
-            # join below reads it — release it only after (a released
-            # localCheckpoint is GONE, not recomputable)
-            a_prev, a_prev_ckpt = a, a_ckpt
-            a = _normalized(a_new)
-            a_ckpt = a_new
+            .collect()[0][0]
+        )
+        return float(d) if d is not None else 0.0
 
-            h_new = (
-                e.join(a.withColumnRenamed("node", "dst"), "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("s").alias("s"))
-                .localCheckpoint(eager=True)
-            )
-            h_prev, h_prev_ckpt = h, h_ckpt
-            h = _normalized(h_new)
-            h_ckpt = h_new
+    with Checkpoints() as ck:
+        e = ck.persist(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+        n_src = e.select("src").distinct().count()
+        h = e.select(F.col("src").alias("node")).distinct().select(
+            "node", F.lit(1.0 / max(n_src, 1)).alias("s")
+        )
+        a = None
+        h_ckpt = a_ckpt = None  # the checkpoints currently backing h / a
 
-            # L1 delta of both iterates (full outer: support can only grow,
-            # but be defensive) — one keyed join + scalar agg each
-            def _l1(cur: DataFrame, prev: DataFrame | None) -> float:
-                if prev is None:
-                    return float("inf")
-                d = (
-                    cur.withColumnRenamed("s", "x")
-                    .join(prev.withColumnRenamed("s", "y"), "node", "full")
-                    .agg(
-                        F.sum(
-                            F.abs(
-                                F.coalesce(F.col("x"), F.lit(0.0))
-                                - F.coalesce(F.col("y"), F.lit(0.0))
-                            )
+        with scoped_shuffle_partitions(edges.sparkSession, iteration_partitions):
+            for _ in range(max_iter):
+                a_new = ck(
+                    e.join(h.withColumnRenamed("node", "src"), "src")
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum("s").alias("s"))
+                )
+                # the PREVIOUS a's checkpoint still backs a_prev until the
+                # delta join below reads it — free it only after (a freed
+                # checkpoint is GONE, not recomputable)
+                a_prev, a_prev_ckpt = a, a_ckpt
+                a, a_ckpt = _normalized(a_new), a_new
+
+                h_new = ck(
+                    e.join(a.withColumnRenamed("node", "dst"), "dst")
+                    .groupBy(F.col("src").alias("node"))
+                    .agg(F.sum("s").alias("s"))
+                )
+                h_prev, h_prev_ckpt = h, h_ckpt
+                h, h_ckpt = _normalized(h_new), h_new
+
+                delta = _l1(h, h_prev) + _l1(a, a_prev)
+                ck.free(h_prev_ckpt, a_prev_ckpt)
+                if delta < tol:
+                    # both final iterates' checkpoints back the returned plan:
+                    # registered for harness release after the result is consumed
+                    ck.keep(h_ckpt)
+                    ck.keep(a_ckpt)
+                    return (
+                        h.select("node", F.col("s").alias("hub"))
+                        .join(
+                            a.select("node", F.col("s").alias("authority")),
+                            "node",
+                            "full",
+                        )
+                        .select(
+                            "node",
+                            F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                            F.coalesce("authority", F.lit(0.0)).alias("authority"),
                         )
                     )
-                    .collect()[0][0]
-                )
-                return float(d) if d is not None else 0.0
-
-            delta = _l1(h, h_prev) + _l1(a, a_prev)
-            if h_prev_ckpt is not None:
-                _release(h_prev_ckpt)
-            if a_prev_ckpt is not None:
-                _release(a_prev_ckpt)
-            if delta < tol:
-                e.unpersist()
-                # both final iterates' checkpoints back the returned plan:
-                # registered for harness release after the result is consumed
-                _register(h_ckpt)
-                _register(a_ckpt)
-                return (
-                    h.select("node", F.col("s").alias("hub"))
-                    .join(
-                        a.select("node", F.col("s").alias("authority")),
-                        "node",
-                        "full",
-                    )
-                    .select(
-                        "node",
-                        F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                        F.coalesce("authority", F.lit(0.0)).alias("authority"),
-                    )
-                )
-
-        e.unpersist()
-        _release(h_ckpt)
-        _release(a_ckpt)
         raise RuntimeError(
             f"hits did not converge to tol={tol} within {max_iter} iterations"
         )
-    finally:
-        _ipscope.__exit__(None, None, None)
 
 
 def kcore_bucketed(
@@ -655,17 +601,10 @@ def kcore_bucketed(
     lever applied to peeling, for deep-cascade graphs where the plain
     variant re-exchanges the persisted edge set every round).
 
-    One algebraic simplification makes the layout pay for BOTH endpoint
-    filters: the plain operator joins survivors on a AND b, but the
-    a-side filter is REDUNDANT — survivor sets shrink monotonically, so
-    a node peeled at round t has degree-into-survivors < k forever after
-    (its count can only fall), and the `deg >= k` filter re-excludes it
-    for free.  Each round is therefore ONE edges⋈survivors join on the
-    bucketed column b + a keyed count on a:
-
-        cur' = { a : |{ b : (a,b) ∈ E, b ∈ cur }| >= k }
-
-    The bucketed scan feeds the sort-merge join with NO edge-side
+    Both variants run one peel loop, `_kcore_loop`: each round is ONE
+    edges⋈survivors join on b (an a-side survivor join is redundant,
+    see there) + a keyed count on a, so the layout on b pays for the
+    whole round.  The bucketed scan feeds the sort-merge join with NO edge-side
     exchange; only (node) survivor rows and the map-side-combined
     (a, count) partials move.  Same convergence contract as `kcore`
     (count unchanged == set unchanged; RuntimeError past max_iter) and
@@ -679,8 +618,6 @@ def kcore_bucketed(
     import uuid
 
     from wukong_spark.layout import drop_managed_table
-    from wukong_spark.session import release_checkpoint as _release
-    from wukong_spark.session import scoped_shuffle_partitions
 
     spark = edges.sparkSession
     # Per-call unique default so concurrent sessions sharing a warehouse
@@ -702,52 +639,11 @@ def kcore_bucketed(
 
         with scoped_shuffle_partitions(
             spark, buckets if iteration_partitions is None else iteration_partitions
-        ):
+        ), Checkpoints() as ck:
             # doubled edges ⇒ set(a) == set(b); distinct over the BUCKETED
             # column satisfies clustering straight off the scan (no exchange)
-            cur = (
-                adj.select(F.col("b").alias("node"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            n_cur = cur.count()
-
-            converged = False
-            for _ in range(max_iter):
-                nxt = (
-                    adj.join(cur.select(F.col("node").alias("b")), "b")
-                    .groupBy(F.col("a").alias("node"))
-                    .agg(F.count(F.lit(1)).alias("deg"))
-                    .filter(F.col("deg") >= k)
-                    .localCheckpoint(eager=True)
-                )
-                n_nxt = nxt.count()
-                _release(cur)
-                cur = nxt.select("node").localCheckpoint(eager=True)
-                if n_nxt == n_cur:
-                    _release(cur)
-                    return _register(nxt).select(
-                        "node", F.col("deg").alias("deg_in_core")
-                    )
-                _release(nxt)
-                n_cur = n_nxt
-                if n_cur == 0:
-                    converged = True
-                    break
-
-            if converged:
-                _release(cur)
-                return (
-                    edges.select(F.col(src).alias("a"))
-                    .groupBy(F.col("a").alias("node"))
-                    .agg(F.count(F.lit(1)).cast("long").alias("deg_in_core"))
-                    .filter(F.lit(False))
-                )
-            _release(cur)
-            raise RuntimeError(
-                f"kcore_bucketed did not stabilize within {max_iter} rounds; "
-                "raise max_iter"
-            )
+            cur = ck(adj.select(F.col("b").alias("node")).distinct())
+            return _kcore_loop(ck, adj, cur, k, max_iter, "kcore_bucketed")
     finally:
         drop_managed_table(spark, table)
 

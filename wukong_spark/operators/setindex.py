@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from wukong_spark.session import Checkpoints, checkpoint, register_result_checkpoint
+
 
 def set_index(df: DataFrame, col, n_partitions: int) -> DataFrame:
     """Globally order `df` by `col` into `n_partitions` range partitions.
@@ -74,10 +76,11 @@ def global_row_number(
     """
     from pyspark.sql import functions as F
 
-    s, offsets = _ordered_with_offsets(
-        df, order_col, n_partitions, F.count(F.lit(1))
-    )
-    return _numbered(s, offsets, df.schema.fields, out_col)
+    with Checkpoints() as ck:
+        s, offsets = _ordered_with_offsets(
+            ck, df, order_col, n_partitions, F.count(F.lit(1))
+        )
+        return _numbered(ck.keep(s), offsets, df.schema.fields, out_col)
 
 
 def _numbered(s: DataFrame, offsets: dict, fields, out_col: str) -> DataFrame:
@@ -104,13 +107,16 @@ def _numbered(s: DataFrame, offsets: dict, fields, out_col: str) -> DataFrame:
     return s.mapInPandas(number, f"{out_fields}, {out_col} long")
 
 
-def _ordered_with_offsets(df, order_col, n_partitions: int, partial_aggs):
+def _ordered_with_offsets(
+    ck: Checkpoints, df, order_col, n_partitions: int, partial_aggs
+):
     """Shared scan machinery for the global ordered-prefix family.
 
     Range-partitions + locally sorts `df` on `order_col` (the set_index
     plan — ONE range exchange, never a single-partition sort), pins the
-    layout with an eager localCheckpoint so the partial job and the
-    downstream pass see the same partitioning, runs the partial agg(s)
+    layout with an eager checkpoint owned by `ck` (a caller whose result
+    reads it keeps it) so the partial job and the downstream pass see
+    the same partitioning, runs the partial agg(s)
     per partition in ONE tiny job (n_partitions rows to the driver), and
     returns (pinned frame with `__pid`, exclusive-prefix offsets dict).
     `partial_aggs` is one agg Column or a list; offsets[pid] is a tuple
@@ -118,15 +124,12 @@ def _ordered_with_offsets(df, order_col, n_partitions: int, partial_aggs):
     appear in the dict (they contribute 0 and are never looked up)."""
     from pyspark.sql import functions as F
 
-    from wukong_spark.session import register_result_checkpoint
-
     aggs = partial_aggs if isinstance(partial_aggs, list) else [partial_aggs]
-    s = set_index(df, order_col, n_partitions).withColumn(
-        "__pid", F.spark_partition_id()
+    s = ck(
+        set_index(df, order_col, n_partitions).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
-    # the checkpoint backs the caller's returned plan: registered so a
-    # harness can free it after consuming the result (leak audit r15)
-    s = register_result_checkpoint(s.localCheckpoint(eager=True))
     partials = {
         r["__pid"]: tuple(r[f"v{i}"] for i in range(len(aggs)))
         for r in s.groupBy("__pid")
@@ -175,7 +178,11 @@ def global_cumsum(
     aggs = [F.sum(value_col)]
     if row_col is not None:
         aggs.append(F.count(F.lit(1)))
-    s, offsets = _ordered_with_offsets(df, order_col, n_partitions, aggs)
+    with Checkpoints() as ck:
+        s, offsets = _ordered_with_offsets(ck, df, order_col, n_partitions, aggs)
+        # the checkpoint backs the returned plan: registered so a harness
+        # can free it after consuming the result (leak audit r15)
+        s = ck.keep(s)
     bc = df.sparkSession.sparkContext.broadcast(offsets)
     out_type = dict(
         (f.name, f.dataType.simpleString()) for f in df.schema.fields
@@ -252,17 +259,15 @@ def rank_cut_values(
     entry must not accumulate full-table checkpoints)."""
     from pyspark.sql import functions as F
 
-    from wukong_spark.session import release_checkpoint
-
     wanted = sorted({int(r) for r in row_ids if int(r) >= 0})
     if not wanted:
         return {}
-    s, offsets = _ordered_with_offsets(
-        df, order_col, n_partitions, F.count(F.lit(1))
-    )
-    numbered = _numbered(s, offsets, df.schema.fields, "__rk")
-    rows = numbered.filter(F.col("__rk").isin(wanted)).collect()
-    release_checkpoint(s)
+    with Checkpoints() as ck:
+        s, offsets = _ordered_with_offsets(
+            ck, df, order_col, n_partitions, F.count(F.lit(1))
+        )
+        numbered = _numbered(s, offsets, df.schema.fields, "__rk")
+        rows = numbered.filter(F.col("__rk").isin(wanted)).collect()
     return {int(r["__rk"]): r for r in rows}
 
 
@@ -355,12 +360,10 @@ def global_scan(
 
     # same pinned layout as _ordered_with_offsets, but fold the partials
     # with the op's own combine instead of that helper's +-only fold
-    from wukong_spark.session import register_result_checkpoint
-
     s = set_index(df, order_col, n_partitions).withColumn(
         "__pid", F.spark_partition_id()
     )
-    s = register_result_checkpoint(s.localCheckpoint(eager=True))
+    s = register_result_checkpoint(checkpoint(s))
     partials = {
         r["__pid"]: r["v0"]
         for r in s.groupBy("__pid").agg(partial.alias("v0")).collect()

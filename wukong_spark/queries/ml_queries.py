@@ -86,7 +86,7 @@ def ml_predict_ref(spark: SparkSession, sf_dir: str):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
     sf = _sf(sf_dir)
     n = 800_000 if sf >= 0.1 else 80_000
@@ -146,9 +146,11 @@ def ml_predict_ref(spark: SparkSession, sf_dir: str):
         gen_predict_partials, "label int, prediction int, n long, gm double"
     )
     grouped = register_result_checkpoint(
-        partials.groupBy("label", "prediction")
-        .agg(F.sum("n").alias("n"), F.min("gm").alias("gm"))
-        .localCheckpoint(eager=True)
+        checkpoint(
+            partials.groupBy("label", "prediction").agg(
+                F.sum("n").alias("n"), F.min("gm").alias("gm")
+            )
+        )
     )
     margin = grouped.agg(F.min("gm").alias("min_margin"))
     return (
@@ -769,12 +771,9 @@ def ml_als_check(spark: SparkSession, sf_dir: str):
     sse_mean = float(row["srr"]) - float(row["sr"]) ** 2 / float(row["n"])
     monotonic = all(b <= a + 1e-9 for a, b in zip(objs, objs[1:]))
     got_users, got_items = int(row["nu"]), int(row["nv"])
+    # only scalars leave; the factor checkpoints als_fit registered go at
+    # the harness's release_pending() (leak audit r15)
     ratings.unpersist()
-    from wukong_spark.session import release_checkpoint
-
-    # only scalars leave; both factor checkpoints are done (leak audit r15)
-    release_checkpoint(u_df)
-    release_checkpoint(v_df)
     return local_frame(
         spark,
         [

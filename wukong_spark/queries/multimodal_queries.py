@@ -1475,11 +1475,9 @@ def dedup_image_dhash(spark: SparkSession, sf_dir: str):
     # eager localCheckpoint: decode+hash run ONCE and both sides of the
     # self-join read the materialized (media_id, dhash, bands) rows — no
     # persist handle left dangling after the query returns
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
-    hashed = register_result_checkpoint(
-        dhash_images(_gen_dhash_media(spark)).localCheckpoint(eager=True)
-    )
+    hashed = register_result_checkpoint(checkpoint(dhash_images(_gen_dhash_media(spark))))
 
     def blk(i: int):  # byte block i of the 64-bit hash (JVM-side exprs)
         return F.expr(f"CAST((dhash >> {8 * i}) & 255 AS INT)")
@@ -1883,12 +1881,10 @@ def crossmodal_neardup_pipeline(spark: SparkSession, sf_dir: str):
                 rows.append((int(key), signed, fp))
             yield pd.DataFrame(rows, columns=cols)
 
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
     hashed = register_result_checkpoint(
-        samples.mapInPandas(
-            fps, "doc_id long, dhash long, audio_fp long"
-        ).localCheckpoint(eager=True)
+        checkpoint(samples.mapInPandas(fps, "doc_id long, dhash long, audio_fp long"))
     )
 
     def blk(i: int):
@@ -1972,19 +1968,21 @@ def webdataset_export_roundtrip(spark: SparkSession, sf_dir: str):
     )
 
     src = group_webdataset_samples(explode_tar(_gen_webdataset_shards(spark)))
-    samples = src.select(
-        F.concat_ws("-", F.col("media_id").cast("string"), F.col("key")).alias(
-            "key"
-        ),
-        F.col("fields"),
-    ).localCheckpoint(eager=True)  # packed twice + fingerprinted: one decode
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
-    samples = register_result_checkpoint(samples)
-    shards = register_result_checkpoint(
-        write_webdataset_shards(samples, n_shards=3).localCheckpoint(
-            eager=True
+    # packed twice + fingerprinted: one decode
+    samples = register_result_checkpoint(
+        checkpoint(
+            src.select(
+                F.concat_ws("-", F.col("media_id").cast("string"), F.col("key")).alias(
+                    "key"
+                ),
+                F.col("fields"),
+            )
         )
+    )
+    shards = register_result_checkpoint(
+        checkpoint(write_webdataset_shards(samples, n_shards=3))
     )
     back = group_webdataset_samples(
         explode_tar(

@@ -913,10 +913,10 @@ def set_index_orders(spark: SparkSession, sf_dir: str):
     # SinglePartition windows (r14 plan-audit 1pw rule).  Pairwise is
     # also STRONGER than adjacent-only: an empty middle partition can't
     # hide an out-of-order pair behind a pid gap.
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
     # probe once, join twice; backs the returned plan (harness-released)
-    stats = register_result_checkpoint(stats.localCheckpoint(eager=True))
+    stats = register_result_checkpoint(checkpoint(stats))
     lo = stats.select(F.col("pid").alias("p1"), F.col("mx").alias("mx1"))
     hi = stats.select(F.col("pid").alias("p2"), F.col("mn").alias("mn2"))
     # STRICT <: range partitioning never splits equal keys, so an
@@ -1188,24 +1188,24 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str):
 
     o = tbl(spark, sf_dir, "orders")
     mx = o.agg(F.max("o_orderdate")).collect()[0][0]  # one scalar date
-    rfm = (
-        o.groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(
-            F.datediff(F.lit(mx), F.max("o_orderdate"))
-            .cast("long")
-            .alias("recency_days"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round("o_totalprice").cast("long")).alias("monetary"),
-        )
-        .withColumn("__negf", -F.col("frequency"))
-        .withColumn("__negm", -F.col("monetary"))
-        # pinned: reused by three numbering scans + the classify pass,
-        # and backs the returned plan (harness-released)
-        .localCheckpoint(eager=True)
-    )
-    from wukong_spark.session import register_result_checkpoint
+    from wukong_spark.session import checkpoint, register_result_checkpoint
 
-    rfm = register_result_checkpoint(rfm)
+    # pinned: reused by three numbering scans + the classify pass, and
+    # backs the returned plan (harness-released)
+    rfm = register_result_checkpoint(
+        checkpoint(
+            o.groupBy(F.col("o_custkey").alias("custkey"))
+            .agg(
+                F.datediff(F.lit(mx), F.max("o_orderdate"))
+                .cast("long")
+                .alias("recency_days"),
+                F.count(F.lit(1)).alias("frequency"),
+                F.sum(F.round("o_totalprice").cast("long")).alias("monetary"),
+            )
+            .withColumn("__negf", -F.col("frequency"))
+            .withColumn("__negm", -F.col("monetary"))
+        )
+    )
     n = rfm.count()
     bounds = ntile_boundaries(n, 3)
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from wukong_spark.queries import query
 from wukong_spark.queries.helpers import local_frame, cents, tbl
+from wukong_spark.session import Checkpoints, checkpoint, register_result_checkpoint
 
 
 @query(
@@ -220,17 +221,15 @@ def graph_pagerank_check(spark: SparkSession, sf_dir: str):
     # reports unknown partitioning, so each iteration still exchanges
     # the 16-byte edge keys — the deliberate trade vs re-deriving the
     # join; at scale bucketed edge storage removes both costs.)
-    from wukong_spark.session import register_result_checkpoint
-
     edges = register_result_checkpoint(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
+        checkpoint(
+            e0.unionByName(
+                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+        )
     )
     deg = register_result_checkpoint(
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
+        checkpoint(edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
     )
     n = deg.count()
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("r"))
@@ -371,11 +370,6 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str):
     round (the CC lineage rule); bucketed edge storage would make the
     edge side exchange-free per round exactly as
     graph_pagerank_bucketed_check demonstrates."""
-    from wukong_spark.session import (
-        register_result_checkpoint,
-        release_checkpoint,
-    )
-
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     e0 = (
@@ -386,26 +380,25 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str):
         )
         .distinct()
     )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    src_node = edges.agg(F.min("src")).collect()[0][0]
-    labels = local_frame(spark, [(int(src_node), 0)], "node long, dist int")
-    for _ in range(4):
-        nbr = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
+    with Checkpoints() as ck:
+        edges = ck(
+            e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         )
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("dist").cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        release_checkpoint(labels)
-        labels = new_labels
-    release_checkpoint(edges)
-    # final checkpoint backs the returned plan: harness-released
-    return register_result_checkpoint(labels).orderBy("node")
+        src_node = edges.agg(F.min("src")).collect()[0][0]
+        labels = local_frame(spark, [(int(src_node), 0)], "node long, dist int")
+        for _ in range(4):
+            nbr = edges.join(labels, edges["src"] == labels["node"]).select(
+                F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
+            )
+            new_labels = ck(
+                labels.unionByName(nbr)
+                .groupBy("node")
+                .agg(F.min("dist").cast("int").alias("dist"))
+            )
+            ck.free(labels)
+            labels = new_labels
+        # final checkpoint backs the returned plan: harness-released
+        return ck.keep(labels).orderBy("node")
 
 
 @query(
@@ -609,22 +602,17 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str):
             )
         )
     )
-    e = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+    with Checkpoints() as ck:
+        e = ck(
+            raw.filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"]).count()
-    n_edges = e.count()
-    from wukong_spark.session import release_checkpoint as _rel
-
-    _rel(e)
+        e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
+        e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
+        tri = e1.join(e2, "y").join(e3, ["x", "z"]).count()
+        n_edges = e.count()
     return local_frame(spark,
         [(n_edges, tri)], "n_edges bigint, n_triangles bigint"
     )
@@ -790,11 +778,6 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str):
     (node, dist) pairs; weights ride the edge set, which a bucketed
     layout would pin exchange-free exactly as the pagerank/CC bucketed
     entries demonstrate."""
-    from wukong_spark.session import (
-        register_result_checkpoint,
-        release_checkpoint,
-    )
-
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_quantity"
@@ -807,28 +790,25 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str):
         )
         .agg(F.min(F.round("l_quantity").cast("long")).alias("w"))
     )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).localCheckpoint(eager=True)
-    src_node = edges.agg(F.min("src")).collect()[0][0]
-    labels = local_frame(spark,
-        [(int(src_node), 0)], "node long, dist long"
-    )
-    for _ in range(4):
-        nbr = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
+    with Checkpoints() as ck:
+        edges = ck(
+            e0.unionByName(
+                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+            )
         )
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        release_checkpoint(labels)
-        labels = new_labels
-    release_checkpoint(edges)
-    # final checkpoint backs the returned plan: harness-released
-    return register_result_checkpoint(labels).orderBy("node")
+        src_node = edges.agg(F.min("src")).collect()[0][0]
+        labels = local_frame(spark, [(int(src_node), 0)], "node long, dist long")
+        for _ in range(4):
+            nbr = edges.join(labels, edges["src"] == labels["node"]).select(
+                F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
+            )
+            new_labels = ck(
+                labels.unionByName(nbr).groupBy("node").agg(F.min("dist").alias("dist"))
+            )
+            ck.free(labels)
+            labels = new_labels
+        # final checkpoint backs the returned plan: harness-released
+        return ck.keep(labels).orderBy("node")
 
 
 @query(
@@ -893,51 +873,45 @@ def graph_power_iteration_check(spark: SparkSession, sf_dir: str):
         )
         .distinct()
     )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    from wukong_spark.session import (
-        register_result_checkpoint,
-        release_checkpoint,
-    )
-
-    x = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1).cast("long").alias("x")
-    ).localCheckpoint(eager=True)
-    prev = None
-    for _ in range(4):
-        nxt = (
-            edges.join(x, edges["src"] == x["node"])
-            .groupBy(F.col("dst").alias("n2"))
-            .agg(F.sum("x").alias("x"))
-            .selectExpr("n2 AS node", "x")
-            .localCheckpoint(eager=True)
+    with Checkpoints() as ck:
+        edges = ck(
+            e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         )
-        if prev is not None:
-            release_checkpoint(prev)
-        prev, x = x, nxt
-    rr = (
-        prev.alias("a")
-        .join(x.alias("b"), F.col("b.node") == F.col("a.node"))
-        .agg(
-            F.sum(
-                F.col("a.x").cast("double") * F.col("b.x").cast("double")
-            ).alias("num"),
-            F.sum(
-                F.col("a.x").cast("double") * F.col("a.x").cast("double")
-            ).alias("den"),
+        x = ck(
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.lit(1).cast("long").alias("x"))
         )
-        .collect()[0]
-    )
-    # two scalars to the driver; edges/prev released eagerly, the final
-    # iterate (which backs the returned plan) registered for the harness
-    release_checkpoint(edges)
-    release_checkpoint(prev)
-    return register_result_checkpoint(x).select(
-        "node",
-        F.col("x").alias("walks_4"),
-        F.round(F.lit(rr["num"]) / F.lit(rr["den"]), 6).alias("lambda_6"),
-    ).orderBy("node")
+        prev = None
+        for _ in range(4):
+            nxt = ck(
+                edges.join(x, edges["src"] == x["node"])
+                .groupBy(F.col("dst").alias("n2"))
+                .agg(F.sum("x").alias("x"))
+                .selectExpr("n2 AS node", "x")
+            )
+            ck.free(prev)
+            prev, x = x, nxt
+        rr = (
+            prev.alias("a")
+            .join(x.alias("b"), F.col("b.node") == F.col("a.node"))
+            .agg(
+                F.sum(
+                    F.col("a.x").cast("double") * F.col("b.x").cast("double")
+                ).alias("num"),
+                F.sum(
+                    F.col("a.x").cast("double") * F.col("a.x").cast("double")
+                ).alias("den"),
+            )
+            .collect()[0]
+        )
+        # two scalars to the driver; the final iterate (which backs the
+        # returned plan) is registered for the harness, the scope frees the rest
+        return ck.keep(x).select(
+            "node",
+            F.col("x").alias("walks_4"),
+            F.round(F.lit(rr["num"]) / F.lit(rr["den"]), 6).alias("lambda_6"),
+        ).orderBy("node")
 
 
 @query(
@@ -1226,60 +1200,47 @@ def graph_hits_check(spark: SparkSession, sf_dir: str):
     shuffle per half-step."""
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1000000).alias("dst"),
+    with Checkpoints() as ck:
+        e = ck(
+            o.join(l, o.o_orderkey == l.l_orderkey)
+            .select(
+                F.col("o_custkey").alias("src"),
+                (F.col("l_suppkey") + 1000000).alias("dst"),
+            )
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    from wukong_spark.session import (
-        register_result_checkpoint,
-        release_checkpoint,
-    )
+        h = e.select(F.col("src").alias("node")).distinct().select(
+            "node", F.lit(1).cast("long").alias("s")
+        )
+        # free each intermediate checkpoint once its successor is
+        # materialized (ADVICE r13: this loop leaked every half-step's RDD);
+        # the FINAL a/h back the returned plan and must stay resident
+        prev_a = prev_h = None
+        for _ in range(2):
+            a = ck(
+                e.join(h, e["src"] == h["node"])
+                .groupBy(F.col("dst").alias("n2"))
+                .agg(F.sum("s").cast("long").alias("s2"))
+                .select(F.col("n2").alias("node"), F.col("s2").alias("s"))
+            )
+            ck.free(prev_h)  # h fed a; a is materialized
+            h = ck(
+                e.join(a, e["dst"] == a["node"])
+                .groupBy(F.col("src").alias("n2"))
+                .agg(F.sum("s").cast("long").alias("s2"))
+                .select(F.col("n2").alias("node"), F.col("s2").alias("s"))
+            )
+            ck.free(prev_a)
+            prev_a, prev_h = a, h
 
-    h = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1).cast("long").alias("s")
-    )
-    # release each intermediate checkpoint once its successor is
-    # materialized (ADVICE r13: this loop leaked every half-step's RDD);
-    # the FINAL a/h back the returned plan and must stay resident
-    prev_a = prev_h = None
-    for _ in range(2):
-        a = (
-            e.join(h, e["src"] == h["node"])
-            .groupBy(F.col("dst").alias("n2"))
-            .agg(F.sum("s").cast("long").alias("s2"))
-            .select(F.col("n2").alias("node"), F.col("s2").alias("s"))
-            .localCheckpoint(eager=True)
+        # both final iterates back the returned plan: harness-released
+        hubs = ck.keep(h).select(
+            "node", F.col("s").alias("hub_2"), F.lit(None).cast("long").alias("auth_2")
         )
-        if prev_h is not None:
-            release_checkpoint(prev_h)  # h fed a; a is materialized
-        h = (
-            e.join(a, e["dst"] == a["node"])
-            .groupBy(F.col("src").alias("n2"))
-            .agg(F.sum("s").cast("long").alias("s2"))
-            .select(F.col("n2").alias("node"), F.col("s2").alias("s"))
-            .localCheckpoint(eager=True)
+        auths = ck.keep(a).select(
+            "node", F.lit(None).cast("long").alias("hub_2"), F.col("s").alias("auth_2")
         )
-        if prev_a is not None:
-            release_checkpoint(prev_a)
-        prev_a, prev_h = a, h
-
-    # both final iterates back the returned plan: harness-released
-    hubs = register_result_checkpoint(h).select(
-        "node", F.col("s").alias("hub_2"), F.lit(None).cast("long").alias("auth_2")
-    )
-    auths = register_result_checkpoint(a).select(
-        "node", F.lit(None).cast("long").alias("hub_2"), F.col("s").alias("auth_2")
-    )
-    out = hubs.unionByName(auths).orderBy(
-        "node", F.col("hub_2").asc_nulls_first()
-    )
-    release_checkpoint(e)
-    return out
+        return hubs.unionByName(auths).orderBy("node", F.col("hub_2").asc_nulls_first())
 
 
 @query(
@@ -1333,70 +1294,66 @@ def graph_hits_converged(spark: SparkSession, sf_dir: str):
     pass reuses the persisted edge set; only five scalars reach the
     driver."""
     from wukong_spark.operators.graph import hits
-    from wukong_spark.session import (
-        register_result_checkpoint,
-        release_checkpoint,
-    )
 
     tol = 1e-7
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1000000).alias("dst"),
+    with Checkpoints() as ck:
+        e = ck(
+            o.join(l, o.o_orderkey == l.l_orderkey)
+            .select(
+                F.col("o_custkey").alias("src"),
+                (F.col("l_suppkey") + 1000000).alias("dst"),
+            )
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    res = hits(
-        e, tol=tol, max_iter=100,
-        iteration_partitions=spark.sparkContext.defaultParallelism,
-    ).localCheckpoint(eager=True)
-
-    # independent pass: one more alternation from the returned scores
-    a_raw = (
-        e.join(res.select(F.col("node").alias("src"), "hub"), "src")
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.sum("hub").alias("ar"))
-    )
-    a_sum = a_raw.agg(F.sum("ar")).collect()[0][0]
-    a_new = a_raw.select("node", (F.col("ar") / F.lit(a_sum)).alias("a2"))
-    h_raw = (
-        e.join(a_new.select(F.col("node").alias("dst"), "a2"), "dst")
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.sum("a2").alias("hr"))
-    )
-    h_sum = h_raw.agg(F.sum("hr")).collect()[0][0]
-    h_new = h_raw.select("node", (F.col("hr") / F.lit(h_sum)).alias("h2"))
-
-    cert = (
-        res.join(a_new, "node", "full")
-        .join(h_new, "node", "full")
-        .agg(
-            F.sum(
-                F.abs(
-                    F.coalesce("h2", F.lit(0.0)) - F.coalesce("hub", F.lit(0.0))
-                )
-                + F.abs(
-                    F.coalesce("a2", F.lit(0.0))
-                    - F.coalesce("authority", F.lit(0.0))
-                )
-            ).alias("resid"),
-            F.sum("hub").alias("sh"),
-            F.sum("authority").alias("sa"),
-            F.count(F.lit(1)).alias("n"),
+        res = ck(
+            hits(
+                e, tol=tol, max_iter=100,
+                iteration_partitions=spark.sparkContext.defaultParallelism,
+            )
         )
-        .collect()[0]
-    )
-    n_src, n_dst = (
-        e.agg(
-            F.countDistinct("src").alias("s"), F.countDistinct("dst").alias("d")
-        ).collect()[0]
-    )
-    release_checkpoint(res)
-    release_checkpoint(e)
+
+        # independent pass: one more alternation from the returned scores
+        a_raw = (
+            e.join(res.select(F.col("node").alias("src"), "hub"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("hub").alias("ar"))
+        )
+        a_sum = a_raw.agg(F.sum("ar")).collect()[0][0]
+        a_new = a_raw.select("node", (F.col("ar") / F.lit(a_sum)).alias("a2"))
+        h_raw = (
+            e.join(a_new.select(F.col("node").alias("dst"), "a2"), "dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.sum("a2").alias("hr"))
+        )
+        h_sum = h_raw.agg(F.sum("hr")).collect()[0][0]
+        h_new = h_raw.select("node", (F.col("hr") / F.lit(h_sum)).alias("h2"))
+
+        cert = (
+            res.join(a_new, "node", "full")
+            .join(h_new, "node", "full")
+            .agg(
+                F.sum(
+                    F.abs(
+                        F.coalesce("h2", F.lit(0.0)) - F.coalesce("hub", F.lit(0.0))
+                    )
+                    + F.abs(
+                        F.coalesce("a2", F.lit(0.0))
+                        - F.coalesce("authority", F.lit(0.0))
+                    )
+                ).alias("resid"),
+                F.sum("hub").alias("sh"),
+                F.sum("authority").alias("sa"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()[0]
+        )
+        n_src, n_dst = (
+            e.agg(
+                F.countDistinct("src").alias("s"), F.countDistinct("dst").alias("d")
+            ).collect()[0]
+        )
     return local_frame(spark,
         [
             (

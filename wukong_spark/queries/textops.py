@@ -1498,53 +1498,56 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str):
     iteration is one exploded-pair shuffle (combiner-reduced to the
     distinct-pair count) plus a map-only rewrite; only the single
     winning pair ever reaches the driver."""
-    words = _gen_bpe_words(spark)
-    words = words.select(
-        "word_id",
-        "freq",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("syms"),
-    ).localCheckpoint(eager=True)
-    from wukong_spark.session import release_checkpoint
+    from wukong_spark.session import Checkpoints
 
     out = []
-    for step in range(10):
-        pairs = words.select(
-            "freq",
-            F.explode(
+    with Checkpoints() as ck:
+        words = ck(
+            _gen_bpe_words(spark).select(
+                "word_id",
+                "freq",
                 F.expr(
-                    "transform(sequence(1, size(syms)-1),"
-                    " i -> struct(syms[i-1] AS l, syms[i] AS r))"
-                )
-            ).alias("p"),
-        ).select("freq", "p.l", "p.r")
-        top = (
-            pairs.groupBy("l", "r")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), "l", "r")
-            .limit(1)
-            .collect()[0]
+                    "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+                ).alias("syms"),
+            )
         )
-        l, r, n = top["l"], top["r"], int(top["n"])
-        merged = l + r
-        out.append((step, l, r, merged, n))
-        # symbols are [a-d]+ by construction — safe to inline in SQL text
-        prev = words
-        words = words.withColumn(
-            "syms",
-            F.expr(
-                f"aggregate(slice(syms, 2, size(syms)-1), array(syms[0]), "
-                f"(acc, x) -> CASE WHEN element_at(acc, -1) = '{l}'"
-                f" AND x = '{r}' "
-                f"THEN concat(slice(acc, 1, size(acc)-1), array('{merged}')) "
-                f"ELSE concat(acc, array(x)) END)"
-            ),
-        ).localCheckpoint(eager=True)
-        # release the superseded iterate (the CC lesson — without this
-        # the loop leaks one checkpoint per merge step; leak audit r15)
-        release_checkpoint(prev)
-    release_checkpoint(words)
+        for step in range(10):
+            pairs = words.select(
+                "freq",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms)-1),"
+                        " i -> struct(syms[i-1] AS l, syms[i] AS r))"
+                    )
+                ).alias("p"),
+            ).select("freq", "p.l", "p.r")
+            top = (
+                pairs.groupBy("l", "r")
+                .agg(F.sum("freq").alias("n"))
+                .orderBy(F.desc("n"), "l", "r")
+                .limit(1)
+                .collect()[0]
+            )
+            l, r, n = top["l"], top["r"], int(top["n"])
+            merged = l + r
+            out.append((step, l, r, merged, n))
+            # symbols are [a-d]+ by construction — safe to inline in SQL text
+            prev = words
+            words = ck(
+                words.withColumn(
+                    "syms",
+                    F.expr(
+                        f"aggregate(slice(syms, 2, size(syms)-1), array(syms[0]), "
+                        f"(acc, x) -> CASE WHEN element_at(acc, -1) = '{l}'"
+                        f" AND x = '{r}' "
+                        f"THEN concat(slice(acc, 1, size(acc)-1), array('{merged}')) "
+                        f"ELSE concat(acc, array(x)) END)"
+                    ),
+                )
+            )
+            # free the superseded iterate (the CC lesson — without this
+            # the loop leaks one checkpoint per merge step; leak audit r15)
+            ck.free(prev)
     return local_frame(spark,
         out,
         "step int, left_sym string, right_sym string, merged string,"

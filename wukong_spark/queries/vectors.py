@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from wukong_spark.queries import query
 from wukong_spark.queries.helpers import local_frame, r4, tbl
+from wukong_spark.session import checkpoint, register_result_checkpoint
 
 N_QUERY_VECS = 5  # vec_id < 5 are the query set
 
@@ -701,22 +702,21 @@ def embed_kmeans_clusters(spark: SparkSession, sf_dir: str):
     final = e.select(assign_with(cents)(F.col("x")).alias("a")).select(
         F.col("a.cluster").alias("cluster"), F.col("a.margin").alias("margin")
     )
-    out = (
-        final.groupBy("cluster")
-        .agg(
-            F.count("*").alias("n"),
-            (F.min("margin") > F.lit(KMEANS_MARGIN)).alias("margin_ok"),
+    # k-row result materialized eagerly WHILE e is still cached — the
+    # caller's collect then reads the checkpoint instead of re-scanning
+    # the embeddings uncached after the unpersist below
+    out = register_result_checkpoint(
+        checkpoint(
+            final.groupBy("cluster")
+            .agg(
+                F.count("*").alias("n"),
+                (F.min("margin") > F.lit(KMEANS_MARGIN)).alias("margin_ok"),
+            )
+            .orderBy("cluster")
         )
-        .orderBy("cluster")
-        # k-row result materialized eagerly WHILE e is still cached — the
-        # caller's collect then reads the checkpoint instead of re-scanning
-        # the embeddings uncached after the unpersist below
-        .localCheckpoint(eager=True)
     )
     e.unpersist()
-    from wukong_spark.session import register_result_checkpoint
-
-    return register_result_checkpoint(out)
+    return out
 
 
 SEMDEDUP_COS = 0.4
@@ -765,17 +765,18 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str):
         .persist()
     )
     cents = _kmeans_fit(e)
-    asg = e.select(
-        "vec_id",
-        "x",
-        _kmeans_assign_udf(cents)(F.col("x")).getField("cluster").alias("cluster"),
-        norm(F.col("x")).alias("nn"),
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    from wukong_spark.session import register_result_checkpoint
-
     # backs the returned pair-join plan: harness-released
-    asg = register_result_checkpoint(asg)
+    asg = register_result_checkpoint(
+        checkpoint(
+            e.select(
+                "vec_id",
+                "x",
+                _kmeans_assign_udf(cents)(F.col("x")).getField("cluster").alias("cluster"),
+                norm(F.col("x")).alias("nn"),
+            )
+        )
+    )
+    e.unpersist()
     a = asg.select(
         F.col("cluster"),
         F.col("vec_id").alias("id_a"),

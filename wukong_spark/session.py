@@ -334,17 +334,19 @@ def release_checkpoint(df: DataFrame) -> None:
 
 # --- result-checkpoint release registry (VERDICT r14 item 4) ----------------
 #
-# Converged-iteration operators (hits, pagerank, kcore, ALS …) must return a
-# plan backed by an EAGER localCheckpoint — the iteration that produced it is
-# gone, so the checkpoint IS the result.  A long-lived session running many
-# such entries (the driver's gate, bench.py) would accumulate those result
-# RDDs forever: the release-discipline leak class ADVICE r13 flagged, and the
-# suspected cause of the graph_kcore_bucketed 113 s watch item (r14).
+# Converged-iteration operators (hits, pagerank, kcore, ALS …) return a plan
+# backed by a checkpoint — the iteration that produced it is gone, so the
+# checkpoint IS the result.  A long-lived session running many such entries
+# (the driver's gate, bench.py) would accumulate those result RDDs forever:
+# the release-discipline leak class ADVICE r13 flagged.
 #
-# The structural fix: operators register their result-backing frames here
-# before returning, and harnesses call `release_pending()` after CONSUMING
-# each entry's result.  tools/leak_audit.py asserts that, after that call,
-# zero persistent RDDs created by the entry survive — registry-wide.
+# Every checkpoint an operator makes goes through a `Checkpoints` scope (or,
+# for a one-shot result, `register_result_checkpoint(checkpoint(df))`).  The
+# scope frees what it owns when the block exits, by return or by raise; what
+# must outlive it, `ck.keep(df)` registers here, and harnesses call
+# `release_pending()` after CONSUMING each entry's result.
+# tools/leak_audit.py asserts that, after that call, zero persistent RDDs
+# created by the entry survive — registry-wide.
 
 _PENDING_RESULT_CHECKPOINTS: list = []  # [(token, DataFrame)]
 _PENDING_RESULT_TABLES: list = []  # [(token, SparkSession, table name)]
@@ -446,3 +448,78 @@ def release_pending(since: int | None = None) -> int:
         n += 1
     _PENDING_RESULT_TABLES = keep_t
     return n
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut `df`'s lineage: the package's one `localCheckpoint` call.
+
+    Eager runs a job now; lazy materializes on the checkpoint's first
+    action, which must read it once (a second reference in that action
+    recomputes it).  Iterative plans need the cut: a persisted loop plan
+    keeps its full lineage, and an iterated union-of-joins plan grows
+    exponentially.  Make it inside a `Checkpoints` scope, or register a
+    one-shot result with `register_result_checkpoint(checkpoint(df))`."""
+    return df.localCheckpoint(eager=eager)
+
+
+class Checkpoints:
+    """The scope that owns every checkpoint an operator makes.
+
+    ``with Checkpoints() as ck:`` — ``ck(df, eager=...)`` checkpoints `df`
+    and owns the result; ``ck.persist(x)`` owns a persisted input (a
+    DataFrame, persisted here, or a Broadcast); ``ck.free(*xs)`` frees
+    owned values now (anything else, None included, is ignored, so a
+    second free does nothing); ``ck.keep(df)`` hands `df` to the result
+    registry (`register_result_checkpoint`) so it outlives the scope.
+    Leaving the block, by return or by raise, frees everything still
+    owned, newest first.
+
+    The scope runs no Spark action.  Free a predecessor only after the
+    action that materializes its successor: a freed checkpoint is gone,
+    not recomputable, and a lazy one's pending job still reads it."""
+
+    def __init__(self) -> None:
+        self._owned: list = []  # [(value, is_checkpoint)], oldest first
+
+    def __enter__(self) -> "Checkpoints":
+        return self
+
+    def __call__(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        ck = checkpoint(df, eager)
+        self._owned.append((ck, True))
+        return ck
+
+    def persist(self, x):
+        if isinstance(x, DataFrame):
+            x = x.persist()
+        self._owned.append((x, False))
+        return x
+
+    def _disown(self, x):
+        for i, (y, is_ckpt) in enumerate(self._owned):
+            if y is x:
+                del self._owned[i]
+                return is_ckpt
+        return None
+
+    @staticmethod
+    def _release(x, is_ckpt: bool) -> None:
+        if is_ckpt:
+            release_checkpoint(x)
+        else:
+            x.unpersist()
+
+    def free(self, *xs) -> None:
+        for x in xs:
+            is_ckpt = self._disown(x)
+            if is_ckpt is not None:
+                self._release(x, is_ckpt)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        self._disown(df)
+        return register_result_checkpoint(df)
+
+    def __exit__(self, *exc) -> bool:
+        while self._owned:
+            self._release(*self._owned.pop())
+        return False

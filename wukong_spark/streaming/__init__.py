@@ -984,86 +984,84 @@ class BucketedUpsertState:
         import os
         import shutil
 
-        from wukong_spark.session import release_checkpoint
+        from wukong_spark.session import Checkpoints
 
         self._recover()
         # the delta is read twice (touched-bucket probe + merge join):
         # pin it so both passes see identical rows
-        d = self._bucketed(delta).localCheckpoint(eager=True)
-        touched = sorted(
-            r["__bkt"] for r in d.select("__bkt").distinct().collect()
-        )
-        if not touched:
-            release_checkpoint(d)
-            return {"touched": []}
-        val_cols = [c for c in delta.columns if c != self.key_col]
-        if not self.exists():
-            d.write.partitionBy("__bkt").mode("overwrite").parquet(
-                self.state_dir
+        with Checkpoints() as ck:
+            d = ck(self._bucketed(delta))
+            touched = sorted(
+                r["__bkt"] for r in d.select("__bkt").distinct().collect()
             )
-            release_checkpoint(d)
-            return {"touched": touched}
-        # partition filter → PartitionFilters pruning: untouched bucket
-        # directories are never opened
-        cur = self.spark.read.parquet(self.state_dir).filter(
-            F.col("__bkt").isin([int(b) for b in touched])
-        )
-        # the first write's schema is canonical: cast combined columns
-        # back to it so later deltas with wider literals can't fork the
-        # parquet types bucket-by-bucket
-        state_types = {f.name: f.dataType for f in cur.schema.fields}
-        joined = cur.alias("c").join(
-            F.broadcast(d).alias("d"), self.key_col, "full_outer"
-        )
-        cols = merge_column_exprs(
-            val_cols, state_types, self.mode, self.order_col
-        )
-        merged = self._bucketed(joined.select(self.key_col, *cols))
-        if expire_tombstones_below is not None:
-            merged = merged.filter(
-                ~(
-                    F.coalesce(F.col(self.delete_col), F.lit(False))
-                    & (F.col(self.order_col) < F.lit(expire_tombstones_below))
+            if not touched:
+                return {"touched": []}
+            val_cols = [c for c in delta.columns if c != self.key_col]
+            if not self.exists():
+                d.write.partitionBy("__bkt").mode("overwrite").parquet(
+                    self.state_dir
                 )
+                return {"touched": touched}
+            # partition filter → PartitionFilters pruning: untouched bucket
+            # directories are never opened
+            cur = self.spark.read.parquet(self.state_dir).filter(
+                F.col("__bkt").isin([int(b) for b in touched])
             )
-        stage = f"{self.state_dir}__stage"
-        merged.write.partitionBy("__bkt").mode("overwrite").parquet(stage)
-        # recoverable swap (ADVICE r15, rollback semantics r17): journal
-        # the touched buckets, park each replaced bucket under __old/
-        # BEFORE moving the staged one in, and write the __DONE marker
-        # only after EVERY bucket swapped.  A crash anywhere in the loop
-        # rolls BACK at the next read/merge (`_recover()`): without the
-        # marker the parked copies are the authoritative pre-merge state
-        # — never torn half-applied state.  (Still single-writer: there
-        # is no commit log arbitrating concurrent mergers.)
-        import json as _json
+            # the first write's schema is canonical: cast combined columns
+            # back to it so later deltas with wider literals can't fork the
+            # parquet types bucket-by-bucket
+            state_types = {f.name: f.dataType for f in cur.schema.fields}
+            joined = cur.alias("c").join(
+                F.broadcast(d).alias("d"), self.key_col, "full_outer"
+            )
+            cols = merge_column_exprs(
+                val_cols, state_types, self.mode, self.order_col
+            )
+            merged = self._bucketed(joined.select(self.key_col, *cols))
+            if expire_tombstones_below is not None:
+                merged = merged.filter(
+                    ~(
+                        F.coalesce(F.col(self.delete_col), F.lit(False))
+                        & (F.col(self.order_col) < F.lit(expire_tombstones_below))
+                    )
+                )
+            stage = f"{self.state_dir}__stage"
+            merged.write.partitionBy("__bkt").mode("overwrite").parquet(stage)
+            # recoverable swap (ADVICE r15, rollback semantics r17): journal
+            # the touched buckets, park each replaced bucket under __old/
+            # BEFORE moving the staged one in, and write the __DONE marker
+            # only after EVERY bucket swapped.  A crash anywhere in the loop
+            # rolls BACK at the next read/merge (`_recover()`): without the
+            # marker the parked copies are the authoritative pre-merge state
+            # — never torn half-applied state.  (Still single-writer: there
+            # is no commit log arbitrating concurrent mergers.)
+            import json as _json
 
-        old_root = self._old_root
-        os.makedirs(old_root, exist_ok=True)
-        # record which touched buckets are INSERTS (no pre-merge dir):
-        # rollback must delete those if swapped in, but must never touch
-        # a pre-existing bucket the crash happened to leave unparked
-        new_buckets = [
-            int(b)
-            for b in touched
-            if not os.path.isdir(os.path.join(self.state_dir, f"__bkt={b}"))
-        ]
-        with open(os.path.join(old_root, "__JOURNAL.json"), "w") as jf:
-            _json.dump(
-                {"touched": [int(b) for b in touched], "new": new_buckets}, jf
-            )
-            jf.flush()
-            os.fsync(jf.fileno())
-        for b in touched:
-            src = os.path.join(stage, f"__bkt={b}")
-            dst = os.path.join(self.state_dir, f"__bkt={b}")
-            if os.path.isdir(dst):
-                shutil.move(dst, os.path.join(old_root, f"__bkt={b}"))
-            if os.path.isdir(src):
-                shutil.move(src, dst)
-        with open(os.path.join(old_root, "__DONE"), "w"):
-            pass
-        shutil.rmtree(old_root, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        release_checkpoint(d)
-        return {"touched": touched}
+            old_root = self._old_root
+            os.makedirs(old_root, exist_ok=True)
+            # record which touched buckets are INSERTS (no pre-merge dir):
+            # rollback must delete those if swapped in, but must never touch
+            # a pre-existing bucket the crash happened to leave unparked
+            new_buckets = [
+                int(b)
+                for b in touched
+                if not os.path.isdir(os.path.join(self.state_dir, f"__bkt={b}"))
+            ]
+            with open(os.path.join(old_root, "__JOURNAL.json"), "w") as jf:
+                _json.dump(
+                    {"touched": [int(b) for b in touched], "new": new_buckets}, jf
+                )
+                jf.flush()
+                os.fsync(jf.fileno())
+            for b in touched:
+                src = os.path.join(stage, f"__bkt={b}")
+                dst = os.path.join(self.state_dir, f"__bkt={b}")
+                if os.path.isdir(dst):
+                    shutil.move(dst, os.path.join(old_root, f"__bkt={b}"))
+                if os.path.isdir(src):
+                    shutil.move(src, dst)
+            with open(os.path.join(old_root, "__DONE"), "w"):
+                pass
+            shutil.rmtree(old_root, ignore_errors=True)
+            shutil.rmtree(stage, ignore_errors=True)
+            return {"touched": touched}
