@@ -106,3 +106,43 @@ def test_objectives_match_join_recompute(spark):
         release_checkpoint(u)
         release_checkpoint(v)
     assert _persistent_ids(spark) <= before
+
+
+#: three fits of `_ratings` on a fresh 1-core session with one shuffle
+#: partition; prints one digest of U, V and the objectives per fit
+_THREE_FITS = """
+import hashlib
+import numpy as np
+from tests.test_als import K, REG, SEED, _ratings
+from wukong_spark.mlops import als_fit
+from wukong_spark.session import get_spark, release_pending
+
+spark = get_spark("als-bit-identical", master="local[1]", shuffle_partitions=1)
+ratings = _ratings(spark)
+for _ in range(3):
+    u, v, objs = als_fit(ratings, n_factors=K, reg=REG, iters=2, seed=SEED)
+    h = hashlib.sha256(np.array(objs).tobytes())
+    for df in (u, v):
+        h.update(np.array(sorted((r[0], *r[1]) for r in df.collect())).tobytes())
+    print(h.hexdigest())
+    release_pending()
+spark.stop()
+"""
+
+
+def test_fit_bit_identical_across_runs():
+    """Fits of one input return byte-equal U, V and objectives, on a
+    1-core session with one shuffle partition, where the order each
+    entity's pairs arrive in still varies run to run: the fit sorts them
+    by the other side's id and sums the objectives in id order."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _THREE_FITS], cwd=root, capture_output=True, text=True,
+        timeout=600, check=True, env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    digests = out.stdout.split()
+    assert len(digests) == 3 and len(set(digests)) == 1, digests

@@ -1106,3 +1106,22 @@ def test_take_cols_and_compress_cols(spark, rng):
     assert np.array_equal(bm.compress_cols(mask).to_numpy(), a[:, mask])
     with pytest.raises(ValueError):
         bm.compress_cols(np.zeros(23, dtype=bool))
+
+
+def test_svd_keeps_caller_persist(spark, rng):
+    """svd_tall_skinny / svd_compressed free only a persist they made: a
+    materialized input the caller persisted is still cached after each
+    call, and an unpersisted one is left unpersisted."""
+    from pyspark import StorageLevel
+
+    m = BlockMatrix.from_numpy(spark, rng.random((90, 12)), 30, 12)
+    m.df.persist()
+    try:
+        m.svd_tall_skinny()
+        assert m.df.storageLevel != StorageLevel.NONE
+        m.svd_compressed(k=3, seed=1)
+        assert m.df.storageLevel != StorageLevel.NONE
+    finally:
+        m.df.unpersist()
+    m.svd_compressed(k=3, seed=1)
+    assert m.df.storageLevel == StorageLevel.NONE

@@ -799,3 +799,109 @@ def test_release_pending_token_scoping(spark):
     # the earlier result must still be collectible (its checkpoint lives)
     assert early.count() == 50
     assert release_pending() == 1  # now the early one goes
+
+
+def test_dependent_task_memoized(client):
+    """A Future argument tokenizes by its key, so an identical dependent
+    submission returns the SAME Future (`client.py:1486-1488`)."""
+    a = client.submit(_inc, 5100)
+    b = client.submit(_inc, a)
+    assert client.submit(_inc, a) is b
+    assert client.submit(_add, a, 1) is not b
+    assert b.result(60) == 5102
+
+
+def test_futures_inside_list_argument_resolve(client):
+    """dask's submit contract: Futures one level inside a list or tuple
+    argument are parents, and the task receives their values in the same
+    container type."""
+    a, b = client.submit(_inc, 5200), client.submit(_inc, 5300)
+    assert client.submit(sum, [a, b, 1]).result(60) == 5201 + 5301 + 1
+    assert client.submit(lambda t: t, (a, 2)).result(60) == (5201, 2)
+
+
+def _jobs_since(sc, before: int | None = None) -> int:
+    """The id of a fresh probe job, or the number of jobs run between the
+    `before` probe and a new one."""
+    import time
+    import uuid
+
+    deadline = time.time() + 30
+    while sc.statusTracker().getActiveJobsIds() and time.time() < deadline:
+        time.sleep(0.05)  # an earlier test's job still running
+    tag = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, tag)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = max(sc.statusTracker().getJobIdsForGroup(tag))
+    return last if before is None else last - before - 1
+
+
+def test_get_list_argument_costs_no_job(spark):
+    """A list argument of a `get` task resolves inside the consuming task:
+    two leaves and their sum are three 1-partition jobs, with no fan-in job
+    for the list."""
+    c = WukongClient(spark)
+    try:
+        sc = spark.sparkContext
+        before = _jobs_since(sc)
+        dsk = {"a": (_inc, 5400), "b": (_inc, 5500), "x": (sum, ["a", "b", 1])}
+        assert c.get(dsk, "x") == 5401 + 5501 + 1
+        assert _jobs_since(sc, before) == 3
+        assert c.get({"y": ["a", ["b"]], **dsk}, "y") == [5401, [5501]]
+    finally:
+        c.close()
+
+
+def test_cancel_pending_task_cancels_dependents(spark, tmp_path):
+    """Cancelling a task that waits on its parent cancels its dependents
+    too (A28): a chain a → b → c with b cancelled before a finishes leaves
+    c cancelled, not pending forever."""
+    from concurrent.futures import CancelledError
+
+    gate = tmp_path / "gate"
+
+    def gated(p=str(gate)):
+        import os
+        import time as _t
+
+        while not os.path.exists(p):
+            _t.sleep(0.05)
+        return 1
+
+    c = WukongClient(spark)
+    try:
+        a = c.submit(gated, pure=False)
+        b = c.submit(_inc, a)
+        d = c.submit(_inc, b)
+        assert b.cancel()
+        gate.write_text("")
+        assert a.result(60) == 1
+        with pytest.raises(CancelledError):
+            d.result(timeout=30)
+        with pytest.raises(CancelledError):
+            b.result(timeout=1)
+    finally:
+        gate.write_text("")
+        c.close()
+
+
+def test_fan_in_count_survives_concurrent_parents(spark):
+    """Many parents finishing at once on their own threads each decrement
+    the child's pending-parent count under its lock; a lost update would
+    leave the child waiting forever.  A short switch interval makes
+    interleavings inside the count likely."""
+    import sys
+
+    c = WukongClient(spark)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        parents = [c.submit(_inc, i, with_client=True, pure=False) for i in range(64)]
+        total = c.submit(sum, parents, with_client=True)
+        assert total.result(timeout=120) == sum(range(1, 65))
+    finally:
+        sys.setswitchinterval(old)
+        c.close()

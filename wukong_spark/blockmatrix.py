@@ -57,6 +57,7 @@ from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -2013,7 +2014,8 @@ class BlockMatrix:
         # blocks in-task and A never materializes.  A/B at the
         # 200000×1000/6250 ref dims (interleaved, 4 passes): fused
         # 3.9-9.4 s vs persist 4.9-26.3 s, plus zero cache footprint.
-        persisted = self.gen_seed is None
+        # An input the caller already persisted stays theirs to free.
+        persisted = self.gen_seed is None and self.df.storageLevel == StorageLevel.NONE
         if persisted:
             self.df.persist()
         g = self.gramian()
@@ -2055,8 +2057,10 @@ class BlockMatrix:
         # in-task fusion measured SLOWER than persist — 4.7-13.5 s vs
         # 3.8-6.9 s at the 10000²/1000 ref dims — because each pass still
         # shipped 800 MB through the JVM twice; fused measures below both.)
+        # An input the caller already persisted stays theirs to free.
         fused = self.gen_seed is not None
-        if not fused:
+        persisted = not fused and self.df.storageLevel == StorageLevel.NONE
+        if persisted:
             self.df.persist()
 
         def sketch(mat: "BlockMatrix", w: np.ndarray) -> "BlockMatrix":
@@ -2137,7 +2141,7 @@ class BlockMatrix:
         # released before return (same contract as svd_tall_skinny): U is
         # lazy; a caller that materializes U re-runs the input lineage —
         # persist the input (or U) yourself if you need U cheap
-        if not fused:
+        if persisted:
             self.df.unpersist()
         return u, s[:k], vt[:k, :]
 

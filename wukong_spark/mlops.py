@@ -488,12 +488,13 @@ def als_fit(
     Each half-step joins the ratings to the OTHER side's current factor
     rows on that side's key (shuffle ≈ n_ratings·k doubles — linear),
     regroups by the solved side's key into one list of (f, rating) pairs
-    per entity, and solves every entity's EXACT regularized normal
-    equations (V_SᵀV_S + λI) u = V_Sᵀ r_S in `mapInArrow` — one batched
-    numpy solve per Arrow batch, not one pandas call per entity.  At
-    10⁸–10⁹ entities this survives: both exchanges are linear in the
-    ratings, factors stay sharded by entity key, and no stage
-    materializes a factor matrix in one place.
+    per entity, sorted by the other side's id so that every run sums the
+    same terms in the same order, and solves every entity's EXACT
+    regularized normal equations (V_SᵀV_S + λI) u = V_Sᵀ r_S in
+    `mapInArrow` — one batched numpy solve per Arrow batch, not one
+    pandas call per entity.  At 10⁸–10⁹ entities this survives: both
+    exchanges are linear in the ratings, factors stay sharded by entity
+    key, and no stage materializes a factor matrix in one place.
 
     The objective Σ(r − u·v)² + λ(‖U‖² + ‖V‖²) comes out of the solves
     (LMFAO-style: the objective aggregates ride the normal-equation
@@ -595,10 +596,13 @@ def als_fit(
             src, pair = ratings, F.struct(other_key, "rating")
         else:
             src = ratings.join(other_ck.select(other_key, "f"), other_key)
-            pair = F.struct("f", "rating")
+            pair = F.struct(other_key, "f", "rating")
+        # collect_list order follows shuffle arrival, which varies run to
+        # run; sorting by the other side's id fixes each entity's summation
+        # order, so U and V are bit-identical across runs
         return ck(
             src.groupBy(group_key)
-            .agg(F.collect_list(pair).alias("xs"))
+            .agg(F.array_sort(F.collect_list(pair)).alias("xs"))
             .mapInArrow(
                 solve,
                 f"{group_key} long, f array<double>, "
@@ -613,10 +617,17 @@ def als_fit(
         xs = [f"x{i}" for i in range(len(legs))]
         mine = [(F.col(s) + F.col(n) * reg).alias(x) for (s, n), x in zip(legs, xs)]
         theirs = [(F.col("nrm") * reg).alias(x) for x in xs]
+
+        def keyed(df: DataFrame, side: int, cols: list) -> DataFrame:
+            # a checkpoint's row order follows shuffle arrival; summing in
+            # (side, entity id) order keeps each objective bit-identical
+            return df.select(F.lit(side).alias("side"), F.col(df.columns[0]).alias("id"), *cols)
+
         row = (
-            last.select(*mine)
-            .unionByName(other.select(*theirs))
+            keyed(last, 0, mine)
+            .unionByName(keyed(other, 1, theirs))
             .coalesce(1)
+            .sortWithinPartitions("side", "id")
             .agg(*[F.sum(x) for x in xs])
             .collect()[0]
         )

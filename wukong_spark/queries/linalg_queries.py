@@ -522,8 +522,8 @@ def la_svd_compressed_check(spark: SparkSession, sf_dir: str):
     bulk at ~21.9, and a power-iterated sketch captures a dominant σ₁ to
     ~1e-6 relative — the 1% gate is robust."""
     a = BlockMatrix.random(spark, 2000, 1000, 500, 500, seed=13)
-    # independent exact reference FIRST (svd_compressed unpersists a.df
-    # internally when it finishes — persist scopes don't nest)
+    # independent exact reference from the same seeded input (svd_compressed
+    # reads a seeded A's key rows and persists nothing of it)
     g = a.reblock_single_column().gramian()
     s_exact = np.sqrt(np.clip(np.sort(np.linalg.eigvalsh(g))[::-1], 0, None))
     u, s, _ = a.svd_compressed(k=5, seed=1)

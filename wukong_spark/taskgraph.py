@@ -13,11 +13,17 @@ blocking actions into futures.
 Design choices (Spark-first, not a port):
 - A submitted task runs as a 1-partition Spark job, so execution lands on
   the cluster like a Wukong Lambda invocation — but chained tasks whose
-  parents are plain Futures resolve parents first and ship VALUES, exactly
-  Wukong's ≤256 KB payload piggybacking (`function.py:2452-2494`); big
+  parents are plain Futures (as arguments, or one level inside a list or
+  tuple argument) resolve parents first and ship VALUES, exactly Wukong's
+  ≤256 KB payload piggybacking (`function.py:2452-2494`); big
   intermediates should use DataFrames/scatter instead.
+- Every attempt of a task, first run or retry, starts in one place,
+  `WukongClient._launch`: a fan-in counter over its parents reaches zero
+  and the body starts in its own job group.  A failed parent fails its
+  dependents (A27) and a cancelled one cancels them (A28).
 - Duplicate submission of an identical (func, args) graph returns the SAME
-  Future — parity with key-memoized resubmission (`client.py:1486-1488`).
+  Future — parity with key-memoized resubmission (`client.py:1486-1488`);
+  a Future argument is keyed by its key, so dependents memoize too.
 - `persist` memoizes by logical-plan fingerprint (PlanCache), the analogue
   of "skip tasks whose results are already in memory"
   (`scheduler.py:1858-1890`).
@@ -29,6 +35,7 @@ Design choices (Spark-first, not a port):
 from __future__ import annotations
 
 import hashlib
+import io
 import itertools
 import threading
 from collections import OrderedDict
@@ -60,7 +67,7 @@ def get_client() -> "WukongClient":
     network channel back to the scheduler to submit subtasks.  Spark
     executors deliberately have no such channel — cluster-side code cannot
     start jobs — so subtask-spawning tasks run DRIVER-side on a dedicated
-    thread (see ``WukongClient._launch_local``), which is also exactly
+    thread (see ``WukongClient._launch``, ``local``), which is also exactly
     what the reference's ``secede()`` achieves: the coordinator leaves the
     bounded worker pool so waiting on children can never deadlock it.
     """
@@ -143,19 +150,40 @@ class Future:
         return f"<Future: {state}, key: {self.key}>"
 
 
+class _KeyPickler(cloudpickle.CloudPickler):
+    """Pickles a Future argument as its key, not its state."""
+
+    def persistent_id(self, obj):
+        return obj.key if isinstance(obj, Future) else None
+
+
 def _tokenize(func: Callable, args: tuple, kwargs: dict) -> str | None:
     """Content key for memoization, or None when the task is unpicklable.
 
-    None (not an id()-derived string) is deliberate: id() values are reused
-    after GC, so keying on them could silently alias two different tasks —
-    unpicklable submissions are treated as impure (never memoized) instead.
+    A Future argument contributes its key, so a dependent task memoizes
+    like any other (`client.py:1486-1488`).  None (not an id()-derived
+    string) is deliberate: id() values are reused after GC, so keying on
+    them could silently alias two different tasks — unpicklable
+    submissions are treated as impure (never memoized) instead.
     """
+    buf = io.BytesIO()
     try:
-        payload = cloudpickle.dumps((func, args, kwargs))
+        _KeyPickler(buf).dump((func, args, kwargs))
     except Exception:
         return None
     name = getattr(func, "__name__", "task")
-    return f"{name}-{hashlib.md5(payload).hexdigest()}"
+    return f"{name}-{hashlib.md5(buf.getvalue()).hexdigest()}"
+
+
+def _parents(x: Any) -> list[Future]:
+    """The Futures an argument waits on: the argument itself, or the
+    elements of a list/tuple argument (one level deep, dask's submit
+    contract)."""
+    if isinstance(x, Future):
+        return [x]
+    if type(x) in (list, tuple):
+        return [e for e in x if isinstance(e, Future)]
+    return []
 
 
 class _FollowerFuture(_PyFuture):
@@ -314,12 +342,13 @@ class WukongClient:
         """Run ``func(*args)`` as a 1-partition Spark job → Future.
 
         Future-valued args give the fan-in dependency semantics of chained
-        ``client.submit`` calls (README.md:170-176) without re-implementing
-        dependency counters.  Dependencies resolve via completion CALLBACKS,
-        not by blocking a pool thread on parent ``result()`` — so an
-        arbitrarily deep/wide dependency graph can never deadlock the
-        bounded worker pool (the hazard the reference client avoids with
-        its scheduler's dependency counting).
+        ``client.submit`` calls (README.md:170-176); so do Futures one
+        level inside a list or tuple arg, which reaches ``func`` as the
+        same container of values.  Dependencies resolve via completion
+        CALLBACKS, not by blocking a pool thread on parent ``result()`` —
+        so an arbitrarily deep/wide dependency graph can never deadlock
+        the bounded worker pool (the hazard the reference client avoids
+        with its scheduler's dependency counting).
 
         ``with_client=True`` marks a COORDINATOR task — one that calls
         ``get_client()`` / ``worker_client()`` to submit subtasks
@@ -337,152 +366,104 @@ class WukongClient:
             if pure
             else f"{getattr(func, '__name__', 'task')}-impure-{next(self._seq)}"
         )
-        launcher = self._launch_local if with_client else self._launch
+
+        def retry(fut: Future) -> None:
+            fut._f, fut._cancel_hook = self._launch(func, args, kwargs, key, with_client)
+            for cb in list(fut._attempt_listeners):
+                cb(fut._f)
+
         with self._lock:
             hit = self._memo.get(key) if pure else None
             if hit is not None:
                 return hit
-
-            parents = [a for a in args if isinstance(a, Future)] + [
-                v for v in kwargs.values() if isinstance(v, Future)
-            ]
-
-            if not parents:
-                pf, cancel_hook = launcher(func, args, kwargs, key)
-                fut = Future(
-                    key, pf, cancel_hook, self._make_retry(func, args, kwargs, key, launcher)
-                )
-            else:
-                outer: _PyFuture = _PyFuture()
-                remaining = [len(parents)]
-                rlock = threading.Lock()
-                # once the inner attempt spawns, cancel must target its job
-                # group (cancelling the pending outer would orphan the job)
-                hooks: dict[str, Any] = {"inner_cancel": None}
-
-                def _bridge(inner: _PyFuture) -> None:
-                    def done(pf: _PyFuture) -> None:
-                        try:
-                            e = pf.exception()
-                            if e is not None:
-                                outer.set_exception(e)
-                            else:
-                                outer.set_result(pf.result())
-                        except Exception:
-                            pass  # outer already cancelled/resolved
-
-                    inner.add_done_callback(done)
-
-                def _parent_done(pf: _PyFuture) -> None:
-                    with rlock:
-                        if outer.done():
-                            return
-                        e = pf.exception()
-                        if e is not None:
-                            # A27: first failing parent propagates immediately
-                            outer.set_exception(e)
-                            return
-                        remaining[0] -= 1
-                        if remaining[0] == 0:
-                            ipf, icancel = launcher(func, args, kwargs, key)
-                            hooks["inner_cancel"] = icancel
-                            _bridge(ipf)
-
-                def cancel_hook() -> bool:
-                    with rlock:
-                        if hooks["inner_cancel"] is not None:
-                            return hooks["inner_cancel"]()
-                        return outer.cancel()
-
-                for p in parents:
-                    p._f.add_done_callback(_parent_done)
-                fut = Future(
-                    key, outer, cancel_hook,
-                    self._make_retry(func, args, kwargs, key, launcher),
-                )
+            fut = Future(key, *self._launch(func, args, kwargs, key, with_client), retry)
             if pure:
                 self._memo_put(key, fut)
             return fut
 
     def _launch(
-        self, func: Callable, args: tuple, kwargs: dict, key: str
+        self, func: Callable, args: tuple, kwargs: dict, key: str, local: bool
     ) -> tuple[_PyFuture, Callable[[], bool]]:
-        """Start one attempt of a task in its OWN Spark job group so it can
-        be cancelled individually (A28).  Returns (pool future, cancel hook).
+        """Start one attempt of a task; returns (attempt future, cancel hook).
+
+        The attempt counts its parent Futures down with done-callbacks and
+        starts its body when the count reaches zero.  The first parent that
+        fails resolves the attempt with that error at once (A27); a
+        cancelled parent cancels it.  Dependents follow the parent attempt
+        that was current at launch: retrying a parent later does not re-run
+        a launched child (retry the child after the parent).
+
+        The body runs in the attempt's OWN Spark job group so it can be
+        cancelled individually (A28): from the bounded pool as a
+        1-partition job, or for a ``local`` COORDINATOR driver-side on its
+        own daemon thread (outside the pool = the reference's secede) with
+        the thread-local client set, so get_client()/worker_client()
+        resolve; Spark jobs it launches directly cancel with its group.
         """
         group = f"wukong-{key[:40]}-{next(self._seq)}"
         cancelled = threading.Event()
-
-        def run() -> Any:
-            # parents (if any) are already done — result() is immediate
-            resolved = tuple(a.result() if isinstance(a, Future) else a for a in args)
-            rkw = {
-                k: (v.result() if isinstance(v, Future) else v)
-                for k, v in kwargs.items()
-            }
-            sc = self.spark.sparkContext
-            sc.setJobGroup(group, key, interruptOnCancel=True)
-            try:
-                return sc.parallelize([0], 1).map(
-                    lambda _: func(*resolved, **rkw)
-                ).collect()[0]
-            except Exception:
-                if cancelled.is_set():
-                    raise CancelledError(key)
-                raise
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-
-        pf = self._pool.submit(run)
-
-        def cancel_hook() -> bool:
-            if pf.cancel():
-                return True  # never started
-            cancelled.set()
-            try:
-                self.spark.sparkContext.cancelJobGroup(group)
-            except Exception:
-                return False
-            return True
-
-        return pf, cancel_hook
-
-    def _launch_local(
-        self, func: Callable, args: tuple, kwargs: dict, key: str
-    ) -> tuple[_PyFuture, Callable[[], bool]]:
-        """Start one attempt of a COORDINATOR task: driver-side, on its own
-        daemon thread (outside the bounded pool = the reference's secede),
-        with the thread-local client set so get_client()/worker_client()
-        resolve, and its own job group so Spark jobs it launches directly
-        are cancellable as a unit (subtasks it submits get their own
-        groups and their own cancel hooks, as always)."""
-        group = f"wukong-{key[:40]}-{next(self._seq)}"
-        cancelled = threading.Event()
         pf: _PyFuture = _PyFuture()
+        # parent Future -> its attempt at launch, which the body reads
+        attempt = {id(p): p._f for x in (*args, *kwargs.values()) for p in _parents(x)}
+        remaining = [len(attempt)]
+        lock = threading.Lock()
+
+        def value(x: Any) -> Any:
+            if isinstance(x, Future):
+                return attempt[id(x)].result()
+            if _parents(x):
+                return type(x)(value(e) if isinstance(e, Future) else e for e in x)
+            return x
 
         def run() -> None:
             if not pf.set_running_or_notify_cancel():
                 return
+            sc = self.spark.sparkContext
             try:
-                resolved = tuple(
-                    a.result() if isinstance(a, Future) else a for a in args
-                )
-                rkw = {
-                    k: (v.result() if isinstance(v, Future) else v)
-                    for k, v in kwargs.items()
-                }
-                sc = self.spark.sparkContext
                 sc.setJobGroup(group, key, interruptOnCancel=True)
-                _thread_ctx.client = self
-                try:
-                    pf.set_result(func(*resolved, **rkw))
-                finally:
-                    _thread_ctx.client = None
-                    sc.setLocalProperty("spark.jobGroup.id", None)
+                a = tuple(value(x) for x in args)
+                kw = {k: value(v) for k, v in kwargs.items()}
+                if local:
+                    _thread_ctx.client = self
+                    try:
+                        out = func(*a, **kw)
+                    finally:
+                        _thread_ctx.client = None
+                else:
+                    out = sc.parallelize([0], 1).map(lambda _: func(*a, **kw)).collect()[0]
+                pf.set_result(out)
             except BaseException as e:  # noqa: BLE001 — must reach the future
                 pf.set_exception(CancelledError(key) if cancelled.is_set() else e)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
 
-        threading.Thread(target=run, daemon=True, name=f"wukong-local-{key[:32]}").start()
+        def start() -> None:
+            if local:
+                threading.Thread(target=run, daemon=True, name=f"wukong-local-{key[:32]}").start()
+                return
+            try:
+                # a pool shut down by close() cancels the queued body
+                self._pool.submit(run).add_done_callback(lambda w: w.cancelled() and pf.cancel())
+            except RuntimeError as e:  # submitted after close()
+                pf.set_exception(e)
+
+        def parent_done(p: _PyFuture) -> None:
+            with lock:
+                if pf.done():
+                    return
+                if p.cancelled():
+                    pf.cancel()
+                elif p.exception() is not None:
+                    pf.set_exception(p.exception())
+                else:
+                    remaining[0] -= 1
+                    if remaining[0] == 0:
+                        start()
+
+        if not attempt:
+            start()
+        for p in attempt.values():
+            p.add_done_callback(parent_done)
 
         def cancel_hook() -> bool:
             if pf.cancel():
@@ -495,20 +476,6 @@ class WukongClient:
             return True
 
         return pf, cancel_hook
-
-    def _make_retry(
-        self, func: Callable, args: tuple, kwargs: dict, key: str, launcher=None
-    ) -> Callable[[Future], None]:
-        launcher = launcher or self._launch
-
-        def retry(fut: Future) -> None:
-            pf, cancel_hook = launcher(func, args, kwargs, key)
-            fut._f = pf
-            fut._cancel_hook = cancel_hook
-            for cb in list(fut._attempt_listeners):
-                cb(pf)
-
-        return retry
 
     # -- A2: map ----------------------------------------------------------
     def map(
@@ -659,7 +626,8 @@ class WukongClient:
           evaluated recursively
         - a hashable value that is a key of ``dsk`` is a REFERENCE to that
           entry's result (diamond dependencies execute once — memoized)
-        - a list is traversed element-wise (nested tasks allowed)
+        - a list is traversed element-wise (nested tasks allowed); the
+          task that takes it resolves its Futures, so it costs no job
         - anything else is a literal
 
         Spark-first execution: each task lowers to ``submit`` — dependency
@@ -686,11 +654,13 @@ class WukongClient:
                 resolved = [build(a, seen) for a in targs]
                 return self.submit(fn, *resolved)
             if isinstance(expr, list):
+                # submit resolves Futures one level inside a list argument;
+                # a list of Futures nested deeper gathers as its own task
                 elems = [build(a, seen) for a in expr]
-                if any(isinstance(e, Future) for e in elems):
-                    # materialize a list containing futures as one fan-in task
-                    return self.submit(lambda *xs: list(xs), *elems)
-                return elems
+                return [
+                    self.submit(list, e) if isinstance(e, list) and _parents(e) else e
+                    for e in elems
+                ]
             if hashable(expr) and expr in dsk:
                 if expr in seen:
                     raise ValueError(f"cycle detected at key {expr!r}")
@@ -702,7 +672,7 @@ class WukongClient:
         single = not isinstance(keys, (list, tuple))
         want = [keys] if single else list(keys)
         outs = [build(k, frozenset()) for k in want]
-        vals = [o.result() if isinstance(o, Future) else o for o in outs]
+        vals = [self.gather(o) if _parents(o) else o for o in outs]
         return vals[0] if single else vals
 
     # -- A5: persist ------------------------------------------------------
