@@ -905,3 +905,97 @@ def test_fan_in_count_survives_concurrent_parents(spark):
     finally:
         sys.setswitchinterval(old)
         c.close()
+
+
+def test_map_resolves_future_items(client):
+    """Futures among map's items are parents, as in submit: the batch waits
+    for them and the mapped function sees their values, in any of the
+    zipped iterables.  Element futures stay non-retryable."""
+    futs = client.map(_inc, [client.submit(_inc, 1), 5])
+    assert client.gather(futs) == [3, 6]
+    assert client.gather(client.map(_add, [1, 2], [client.submit(_inc, 10), 20])) == [12, 22]
+    with pytest.raises(ValueError, match="not retryable"):
+        futs[0].retry()
+
+
+def test_map_costs_one_job(spark):
+    """A map is one Spark job however many elements it has; its element
+    futures index the batch result without a job of their own.  A Future
+    item adds only its own task's job."""
+    c = WukongClient(spark)
+    try:
+        sc = spark.sparkContext
+        before = _jobs_since(sc)
+        assert c.gather(c.map(_inc, range(5600, 5608))) == list(range(5601, 5609))
+        assert _jobs_since(sc, before) == 1
+        before = _jobs_since(sc)
+        assert c.gather(c.map(_inc, [c.submit(_inc, 5700), 5800])) == [5702, 5801]
+        assert _jobs_since(sc, before) == 2
+    finally:
+        c.close()
+
+
+def test_cancel_running_compute(spark, tmp_path):
+    """compute() collects in its own job group, so cancel() on a running
+    plan interrupts its Spark job (A28) and result() raises
+    CancelledError."""
+    import time
+    from concurrent.futures import CancelledError
+
+    from pyspark.sql import functions as F
+
+    started, gate = tmp_path / "started", tmp_path / "gate"
+
+    def wait(x, s=str(started), g=str(gate)):
+        import os
+        import time as _t
+
+        open(s, "w").close()
+        while not os.path.exists(g):
+            _t.sleep(0.05)
+        return x
+
+    df = spark.range(1, numPartitions=1).select(F.udf(wait, "long")("id").alias("x"))
+    c = WukongClient(spark)
+    try:
+        f = c.compute(df)
+        deadline = time.time() + 60
+        while not started.exists() and time.time() < deadline:
+            time.sleep(0.05)
+        assert started.exists()
+        assert f.cancel()
+        with pytest.raises(CancelledError):
+            f.result(timeout=30)
+    finally:
+        gate.write_text("")
+        c.close()
+
+
+def test_futures_client_launches_in_one_place():
+    """Every futures entry point (submit, retry, map, compute) starts its
+    work through `WukongClient._launch`: in taskgraph.py,
+    `self._pool.submit(` and `threading.Thread(` are called only there."""
+    import ast
+    import pathlib
+
+    import wukong_spark.taskgraph as tg
+
+    tree = ast.parse(pathlib.Path(tg.__file__).read_text())
+
+    def launches(node) -> set[int]:
+        return {
+            n.lineno
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and ast.unparse(n.func) in ("self._pool.submit", "threading.Thread")
+        }
+
+    (launch,) = [
+        f
+        for c in tree.body
+        if isinstance(c, ast.ClassDef) and c.name == "WukongClient"
+        for f in c.body
+        if isinstance(f, ast.FunctionDef) and f.name == "_launch"
+    ]
+    assert len(launches(launch)) == 2
+    assert launches(tree) == launches(launch)

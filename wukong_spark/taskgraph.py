@@ -17,10 +17,14 @@ Design choices (Spark-first, not a port):
   tuple argument) resolve parents first and ship VALUES, exactly Wukong's
   ≤256 KB payload piggybacking (`function.py:2452-2494`); big
   intermediates should use DataFrames/scatter instead.
-- Every attempt of a task, first run or retry, starts in one place,
-  `WukongClient._launch`: a fan-in counter over its parents reaches zero
-  and the body starts in its own job group.  A failed parent fails its
-  dependents (A27) and a cancelled one cancels them (A28).
+- Every attempt, whether a `submit` task (first run or retry), a `map`
+  batch, a `map` element or a `compute`, starts in one place,
+  `WukongClient._launch`: a fan-in counter over its parent Futures
+  reaches zero and the body starts in its own job group.  A failed parent
+  fails its dependents (A27) and a cancelled one cancels them (A28).
+- `map` is one batch attempt, a single Spark job over every element, and
+  one dependent attempt per element that picks its value out of the
+  batch result driver-side, so n element futures cost one job.
 - Duplicate submission of an identical (func, args) graph returns the SAME
   Future — parity with key-memoized resubmission (`client.py:1486-1488`);
   a Future argument is keyed by its key, so dependents memoize too.
@@ -37,6 +41,7 @@ from __future__ import annotations
 import hashlib
 import io
 import itertools
+import operator
 import threading
 from collections import OrderedDict
 from concurrent.futures import CancelledError, InvalidStateError, ThreadPoolExecutor
@@ -323,12 +328,19 @@ class WukongClient:
         global _default_client
         _default_client = self  # get_client() driver-side fallback
 
-    def _memo_put(self, key: str, fut: Future) -> None:
-        """Insert with LRU bound (caller holds self._lock)."""
-        self._memo[key] = fut
-        self._memo.move_to_end(key)
-        while len(self._memo) > self.MEMO_MAX:
-            self._memo.popitem(last=False)
+    def _memoized(self, key: str, keep: bool, make: Callable[[], Any]) -> Any:
+        """What the memo holds under ``key``, else ``make()``'s result,
+        kept under ``key`` when ``keep`` (oldest entries evicted past
+        MEMO_MAX)."""
+        with self._lock:
+            hit = self._memo.get(key)
+            if hit is None:
+                hit = make()
+                if keep:
+                    self._memo[key] = hit
+                    while len(self._memo) > self.MEMO_MAX:
+                        self._memo.popitem(last=False)
+            return hit
 
     # -- A1: submit -------------------------------------------------------
     def submit(
@@ -367,38 +379,42 @@ class WukongClient:
             else f"{getattr(func, '__name__', 'task')}-impure-{next(self._seq)}"
         )
 
+        def job(*a: Any, **kw: Any) -> Any:
+            sc = self.spark.sparkContext
+            return sc.parallelize([0], 1).map(lambda _: func(*a, **kw)).collect()[0]
+
+        body = func if with_client else job
+
         def retry(fut: Future) -> None:
-            fut._f, fut._cancel_hook = self._launch(func, args, kwargs, key, with_client)
+            fut._f, fut._cancel_hook = self._launch(body, args, kwargs, key, with_client)
             for cb in list(fut._attempt_listeners):
                 cb(fut._f)
 
-        with self._lock:
-            hit = self._memo.get(key) if pure else None
-            if hit is not None:
-                return hit
-            fut = Future(key, *self._launch(func, args, kwargs, key, with_client), retry)
-            if pure:
-                self._memo_put(key, fut)
-            return fut
+        def launch() -> Future:
+            return Future(key, *self._launch(body, args, kwargs, key, with_client), retry)
+
+        return self._memoized(key, pure, launch)
 
     def _launch(
-        self, func: Callable, args: tuple, kwargs: dict, key: str, local: bool
+        self, body: Callable, args: tuple, kwargs: dict, key: str, local: bool
     ) -> tuple[_PyFuture, Callable[[], bool]]:
-        """Start one attempt of a task; returns (attempt future, cancel hook).
+        """Start one attempt; returns (attempt future, cancel hook).
 
-        The attempt counts its parent Futures down with done-callbacks and
-        starts its body when the count reaches zero.  The first parent that
-        fails resolves the attempt with that error at once (A27); a
-        cancelled parent cancels it.  Dependents follow the parent attempt
-        that was current at launch: retrying a parent later does not re-run
-        a launched child (retry the child after the parent).
+        The attempt counts its parent Futures (arguments, or one level
+        inside a list/tuple argument) down with done-callbacks and runs
+        ``body`` on their values when the count reaches zero.  The first
+        parent that fails resolves the attempt with that error at once
+        (A27); a cancelled parent cancels it.  Dependents follow the
+        parent attempt that was current at launch: retrying a parent later
+        does not re-run a launched child (retry the child after the
+        parent).
 
-        The body runs in the attempt's OWN Spark job group so it can be
-        cancelled individually (A28): from the bounded pool as a
-        1-partition job, or for a ``local`` COORDINATOR driver-side on its
-        own daemon thread (outside the pool = the reference's secede) with
-        the thread-local client set, so get_client()/worker_client()
-        resolve; Spark jobs it launches directly cancel with its group.
+        The body runs driver-side in the attempt's OWN Spark job group, so
+        cancelling the attempt interrupts every job the body starts (A28),
+        and with the thread-local client set, so get_client() and
+        worker_client() resolve to this client.  It runs from the bounded
+        pool, or for a ``local`` COORDINATOR on its own daemon thread
+        (outside the pool = the reference's secede).
         """
         group = f"wukong-{key[:40]}-{next(self._seq)}"
         cancelled = threading.Event()
@@ -421,20 +437,13 @@ class WukongClient:
             sc = self.spark.sparkContext
             try:
                 sc.setJobGroup(group, key, interruptOnCancel=True)
+                _thread_ctx.client = self
                 a = tuple(value(x) for x in args)
-                kw = {k: value(v) for k, v in kwargs.items()}
-                if local:
-                    _thread_ctx.client = self
-                    try:
-                        out = func(*a, **kw)
-                    finally:
-                        _thread_ctx.client = None
-                else:
-                    out = sc.parallelize([0], 1).map(lambda _: func(*a, **kw)).collect()[0]
-                pf.set_result(out)
+                pf.set_result(body(*a, **{k: value(v) for k, v in kwargs.items()}))
             except BaseException as e:  # noqa: BLE001 — must reach the future
                 pf.set_exception(CancelledError(key) if cancelled.is_set() else e)
             finally:
+                _thread_ctx.client = None
                 sc.setLocalProperty("spark.jobGroup.id", None)
 
         def start() -> None:
@@ -484,62 +493,38 @@ class WukongClient:
         """Task per element (`client.py:1524-1675`): returns ONE FUTURE PER
         ELEMENT — the reference's contract (``x, y = c.map(f, [10, 20])``) —
         and accepts multiple iterables zipped positionally
-        (``c.map(add, xs, ys)``).
+        (``c.map(add, xs, ys)``).  Futures among the items are parents, as
+        in ``submit``: the batch waits for them and ``func`` sees values.
 
-        Execution stays batched: a single Spark job computes every element
-        (one element per logical task, results in input order), and the
-        per-element futures resolve from the batch result when it lands —
-        n futures never cost n jobs."""
-        items = list(zip(*iterables))
-        n = npartitions or min(len(items), 64) or 1
+        Execution stays batched: the whole map is one ``_launch`` attempt
+        whose body is a single Spark job (one element per logical task,
+        results in input order) in its own job group.  Each element future
+        is a dependent attempt that indexes the batch result driver-side
+        and starts no job, so n futures never cost n jobs.  Cancelling an
+        element drops only that element; a failed or cancelled batch fails
+        or cancels every element.  Element futures are not retryable."""
+        cols = tuple(list(it) for it in iterables)
+        size = min((len(c) for c in cols), default=0)
+        n = npartitions or min(size, 64) or 1
 
-        def run() -> list:
-            sc = self.spark.sparkContext
-            return sc.parallelize(items, n).map(lambda t: func(*t)).collect()
+        def batch(*vals: list) -> list:
+            items = list(zip(*vals))
+            return self.spark.sparkContext.parallelize(items, n).map(lambda t: func(*t)).collect()
 
-        # "map-" prefix: submit(f, 1, 2) and map(f, [1, 2]) tokenize the
+        # "map-" prefix: submit(f, [1, 2]) and map(f, [1, 2]) tokenize the
         # same but memoize different shapes (Future vs list[Future])
-        content = _tokenize(func, tuple(items), {})
-        key = None if content is None else f"map-{content}"
-        with self._lock:
-            if key is not None:
-                hit = self._memo.get(key)
-                if hit is not None:
-                    return hit  # memoized list of element futures
-            batch_key = key or f"map-impure-{next(self._seq)}"
-            batch_pf = self._pool.submit(run)
-            element_pfs = [_PyFuture() for _ in items]
+        content = _tokenize(func, cols, {})
+        key = f"map-{content or f'impure-{next(self._seq)}'}"
 
-            def distribute(pf: _PyFuture) -> None:
-                # Cancellation-safe (ADVICE r4): pf.exception() raises
-                # CancelledError if the batch itself was cancelled, and a
-                # caller-cancelled ELEMENT future rejects set_result with
-                # InvalidStateError — either way one bad future must not
-                # strand the remaining elements unresolved forever.
-                if pf.cancelled():
-                    e: BaseException | None = CancelledError()
-                    vals = None
-                else:
-                    e = pf.exception()
-                    vals = None if e is not None else pf.result()
-                for i, epf in enumerate(element_pfs):
-                    if epf.cancelled():
-                        continue
-                    try:
-                        if e is not None:
-                            epf.set_exception(e)
-                        else:
-                            epf.set_result(vals[i])
-                    except InvalidStateError:
-                        continue  # cancelled between the check and the set
-
-            batch_pf.add_done_callback(distribute)
-            futs = [
-                Future(f"{batch_key}-{i}", epf) for i, epf in enumerate(element_pfs)
+        def launch() -> list[Future]:
+            whole = Future(key, *self._launch(batch, cols, {}, key, False))
+            keys = [f"{key}-{i}" for i in range(size)]
+            return [
+                Future(k, *self._launch(operator.getitem, (whole, i), {}, k, False))
+                for i, k in enumerate(keys)
             ]
-            if key is not None:
-                self._memo_put(key, futs)
-            return futs
+
+        return self._memoized(key, content is not None, launch)
 
     # -- A6: scatter ------------------------------------------------------
     def scatter(self, data, npartitions: int | None = None):
@@ -605,15 +590,14 @@ class WukongClient:
 
     # -- A4: compute ------------------------------------------------------
     def compute(self, df: DataFrame) -> Future:
-        """DataFrame → Future of its collected rows (`client.py:2734`)."""
+        """DataFrame → Future of its collected rows (`client.py:2734`).
+        The collect is a ``_launch`` attempt in its own job group, so
+        ``cancel()`` stops a running plan; an identical plan returns the
+        same Future."""
         key = f"plan-{hashlib.md5(df._jdf.queryExecution().analyzed().toString().encode()).hexdigest()}"
-        with self._lock:
-            hit = self._memo.get(key)
-            if hit is not None:
-                return hit
-            fut = Future(key, self._pool.submit(df.collect))
-            self._memo_put(key, fut)
-            return fut
+        return self._memoized(
+            key, True, lambda: Future(key, *self._launch(df.collect, (), {}, key, False))
+        )
 
     # -- A3: raw dict-graph execution -------------------------------------
     def get(self, dsk: dict, keys):
