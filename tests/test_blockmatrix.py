@@ -676,7 +676,8 @@ def test_svd_compressed_fused_matches_materialized(spark):
     r18: the seeded path runs the single-pass sketch+projection with
     driver-side B = R⁻ᵀZᵀ — this pins it against the df-backed two-pass
     shape (exact-arithmetic identical; float gap bounded by
-    cond(R)·eps, see tools/svd_fused_margin_audit.py)."""
+    cond(R)·eps: σ shifts by at most 1e-12 on the declared workloads,
+    whose rounded-integer margins are at least 5.9e-3)."""
     a = BlockMatrix.random(spark, 900, 700, 256, 256, seed=41)
     unfused = BlockMatrix(a.df, a.n_rows, a.n_cols, a.block_rows, a.block_cols)
     _, s_f, vt_f = a.svd_compressed(k=4, seed=2, n_iter=1)

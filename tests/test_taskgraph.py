@@ -999,3 +999,23 @@ def test_futures_client_launches_in_one_place():
     ]
     assert len(launches(launch)) == 2
     assert launches(tree) == launches(launch)
+
+
+def test_cancel_finished_future_returns_false(spark):
+    """The stdlib contract: cancel() on a finished future returns False,
+    and the future keeps its result — for a submit future, a map element
+    and a compute future alike."""
+    c = WukongClient(spark)
+    try:
+        futures = {
+            "submit": (c.submit(_add, 6100, 1), 6101),
+            "map": (c.map(_inc, [6200, 6300])[1], 6301),
+            "compute": (c.compute(spark.range(6400, 6403)), [6400, 6401, 6402]),
+        }
+        for name, (f, want) in futures.items():
+            value = lambda: f.result() if name != "compute" else [r.id for r in f.result()]
+            assert value() == want
+            assert f.cancel() is False, name
+            assert value() == want
+    finally:
+        c.close()

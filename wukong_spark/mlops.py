@@ -1,12 +1,19 @@
-"""Distributed model inference (SURVEY.md §2.2 B-IV).
+"""Distributed model fitting and inference (SURVEY.md §2.2 B-IV).
 
 Reference capability: `ParallelPostFit(SVC).predict(X).compute()` — fit a
 model locally, broadcast it, predict in parallel over chunks
 (`/root/reference/README.md:273-305`,
 `docs/examples/examples.rst:119-141`).  Spark-first: broadcast the fitted
-model once, run Arrow-batched `mapInPandas` over feature columns — the
+model once, run Arrow-batched `mapInArrow` over feature columns — the
 cluster never re-serializes the model per row, and prediction is
 vectorized per batch.
+
+Every fit and fit check over a feature matrix is one sufficient-statistics
+pass, `batch_sums`: each Arrow batch becomes numpy arrays, a statistic
+maps them to a fixed-size partial, and the partials add up per partition
+and then on the driver (LMFAO's aggregate batches, SIGMOD 2019), so
+driver traffic is independent of row count.  The module imports no
+pandas.
 
 sklearn is optional in this environment: `predict_broadcast` takes ANY
 object with a `.predict(ndarray) -> ndarray` method; `LinearModel` is a
@@ -17,10 +24,9 @@ self-contained numpy implementation used by tests (and a realistic stand-in
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,6 +78,87 @@ class SoftmaxModel:
         return (x @ self.weights + self.bias).argmax(axis=1).astype(np.int32)
 
 
+def _decode(col) -> np.ndarray:
+    """One Arrow column as numpy: an ``array<…>`` column becomes an n×d
+    float64 matrix, any other column a 1-D array.  Either is a fresh
+    copy: a view of Arrow's values buffer can sit off the alignment
+    OpenBLAS blocks on, and then ``x @ w`` differs in the last bits."""
+    import pyarrow as pa
+
+    if pa.types.is_list(col.type):
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return np.array(flat, dtype=np.float64).reshape(len(col), -1)
+    return np.array(col.to_numpy(zero_copy_only=False))
+
+
+def batch_sums(
+    df: DataFrame,
+    stat: Callable,
+    cols: list[str],
+    by: str | None = None,
+    params=None,
+):
+    """THE sufficient-statistics pass: ``Σ stat(*arrays, params)`` over
+    the rows of `df`, in one `mapInArrow` job.
+
+    Each non-empty Arrow batch of `cols` is decoded by :func:`_decode`
+    (feature arrays to n×d float64 matrices, other columns to 1-D
+    arrays) and `stat` maps it to a fixed-shape float64 partial.
+    Partials add in batch order within a partition; the driver adds the
+    per-partition sums in collect order, starting from the first.
+    `params` (the current coefficients, say) is broadcast once and
+    unpersisted after the collect.
+
+    With `by`, each batch splits by the key column `by`, keys ascending,
+    and the result is ``{key: sum}`` in first-seen order; an empty input
+    gives ``{}``.  Without it the result is the summed array, or None
+    for an empty input."""
+    bc = df.sparkSession.sparkContext.broadcast(params)
+    keys = [] if by is None else [by]
+    key_ddl = "" if by is None else f"{by} {df.schema[by].dataType.simpleString()}, "
+
+    def partials(batches):
+        import pyarrow as pa
+
+        p, acc, key_type = bc.value, {}, None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            arrays = [_decode(rb.column(c)) for c in cols]
+            if by is None:
+                groups = [(None, arrays)]
+            else:
+                key_type = rb.schema.field(by).type
+                kv = rb.column(by).to_numpy(zero_copy_only=False)
+                groups = [(k, [a[kv == k] for a in arrays]) for k in np.unique(kv)]
+            for k, sub in groups:
+                m = np.asarray(stat(*sub, p), dtype=np.float64)
+                acc[k] = m if k not in acc else acc[k] + m
+        if acc:
+            out = [
+                pa.array([list(m.shape) for m in acc.values()], pa.list_(pa.int32())),
+                pa.array([m.tobytes() for m in acc.values()], pa.binary()),
+            ]
+            if by is not None:
+                out.insert(0, pa.array(list(acc), key_type))
+            yield pa.RecordBatch.from_arrays(out, names=keys + ["shape", "p"])
+
+    try:
+        rows = (
+            df.select(*keys, *cols)
+            .mapInArrow(partials, key_ddl + "shape array<int>, p binary")
+            .collect()
+        )
+    finally:
+        bc.unpersist()
+    sums: dict = {}
+    for row in rows:
+        k = None if by is None else row[by]
+        m = np.frombuffer(row.p).reshape(row.shape)
+        sums[k] = m.copy() if k not in sums else sums[k] + m
+    return sums if by is not None else sums.get(None)
+
+
 def predict_broadcast(
     df: DataFrame,
     model,
@@ -80,7 +167,7 @@ def predict_broadcast(
     id_cols: tuple[str, ...] = (),
     margin_col: str | None = None,
 ) -> DataFrame:
-    """Parallel inference: broadcast `model`, mapInPandas batched predict.
+    """Parallel inference: broadcast `model`, mapInArrow batched predict.
 
     Scale: model ships once per executor (broadcast, not per-task closure
     re-pickle); each Arrow batch becomes one vectorized `.predict` call —
@@ -93,7 +180,7 @@ def predict_broadcast(
     """
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(model)
-    keep = list(id_cols) + [features_col]
+    ids = list(id_cols)
     extra = [f"{output_col} int"]
     if margin_col is not None:
         if not hasattr(model, "decision_function"):
@@ -102,23 +189,30 @@ def predict_broadcast(
             )
         extra.append(f"{margin_col} double")
     schema = ", ".join(
-        [f"{c} {t}" for c, t in df.select(*keep).dtypes if c != features_col]
-        + extra
+        [f"{c} {t}" for c, t in df.select(*ids).dtypes] + extra
     )
+    names = ids + [output_col] + ([] if margin_col is None else [margin_col])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pyarrow as pa
+
         m = bc.value
-        for pdf in batches:
-            x = np.vstack(pdf[features_col].map(np.asarray).to_numpy())
-            out = pdf[[c for c in keep if c != features_col]].copy()
-            out[output_col] = m.predict(x).astype(np.int32)
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            x = _decode(rb.column(features_col))
+            out = [rb.column(c) for c in ids]
+            out.append(pa.array(m.predict(x).astype(np.int32)))
             if margin_col is not None:
-                out[margin_col] = np.abs(
-                    np.asarray(m.decision_function(x), dtype=np.float64)
-                )
-            yield out
+                margin = np.asarray(m.decision_function(x), dtype=np.float64)
+                out.append(pa.array(np.abs(margin)))
+            yield pa.RecordBatch.from_arrays(out, names=names)
 
-    return df.select(*keep).mapInPandas(run, schema)
+    return df.select(*ids, features_col).mapInArrow(run, schema)
+
+
+def _with_intercept(x: np.ndarray) -> np.ndarray:
+    return np.hstack([x, np.ones((len(x), 1))])
 
 
 def linreg_fit_normal(
@@ -142,35 +236,66 @@ def linreg_fit_normal(
     Returns (weights, intercept).
     """
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf[features_col].map(np.asarray).to_numpy()).astype(
-                np.float64
-            )
-            x = np.hstack([x, np.ones((len(x), 1))])
-            y = pdf[label_col].to_numpy(dtype=np.float64)
-            m = np.hstack([x.T @ x, (x.T @ y)[:, None]])
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"d": [g.shape[0]], "p": [g.tobytes()]})
+    def stat(x, y, _):
+        x = _with_intercept(x)
+        return np.hstack([x.T @ x, (x.T @ y.astype(np.float64))[:, None]])
 
-    rows = (
-        df.select(features_col, label_col).mapInPandas(partials, "d int, p binary")
-    ).collect()
-    if not rows:
+    total = batch_sums(df, stat, [features_col, label_col])
+    if total is None:
         raise ValueError("linreg_fit_normal: empty input")
-    d1 = rows[0].d
-    total = np.zeros((d1, d1 + 1))
-    for row in rows:
-        total += np.frombuffer(row.p).reshape(d1, d1 + 1)
+    d1 = total.shape[0]
     g, b = total[:, :d1], total[:, d1]
     reg = np.eye(d1) * l2
     reg[-1, -1] = 0.0  # never shrink the intercept
     beta = np.linalg.solve(g + reg, b)
     return beta[:-1], float(beta[-1])
+
+
+def _newton_partial(h: np.ndarray, g: np.ndarray, n: int) -> np.ndarray:
+    """[[H, g], [0, n]]: one Newton step's Hessian, gradient and row
+    count as a single (m+1)×(m+1) partial."""
+    m = np.zeros((len(g) + 1, len(g) + 1))
+    m[:-1, :-1], m[:-1, -1], m[-1, -1] = h, g, float(n)
+    return m
+
+
+def _newton(
+    df: DataFrame,
+    features_col: str,
+    label_col: str,
+    stat: Callable,
+    k: int,
+    l2: float,
+    iters: int,
+    tol: float,
+    damping: float,
+    name: str,
+) -> np.ndarray:
+    """The driver Newton loop of the logistic fits: one `batch_sums` pass
+    of `stat` per step, which sees the (d+1)×k coefficients (None before
+    the first step) and returns a :func:`_newton_partial` whose gradient
+    and Hessian are in column-major coefficient order.  λ applies to
+    every weight, never to the k intercept rows; `damping` on the
+    diagonal keeps the Hessian invertible when the probabilities
+    saturate.  Stops once max |gradient| per row drops below `tol`.
+    Returns the (d+1)×k coefficients, intercepts last."""
+    w = None
+    for _ in range(iters):
+        total = batch_sums(df, stat, [features_col, label_col], params=w)
+        if total is None:
+            raise ValueError(f"{name}: empty input")
+        dk = total.shape[0] - 1
+        h, grad, n = total[:dk, :dk], total[:dk, dk], total[dk, dk]
+        if w is None:
+            w = np.zeros((dk // k, k))
+        reg = np.full(dk, l2)
+        reg[dk // k - 1 :: dk // k] = 0.0
+        grad = grad - reg * w.ravel(order="F")
+        if np.abs(grad).max() / max(1.0, n) < tol:
+            break
+        step = np.linalg.solve(h + np.diag(reg) + np.eye(dk) * damping, grad)
+        w = w + step.reshape(-1, k, order="F")
+    return w
 
 
 def logreg_fit_newton(
@@ -188,7 +313,7 @@ def logreg_fit_newton(
 
     Per iteration, ONE distributed pass accumulates the gradient
     Xᵀ(y − σ(Xw)) − λw and Hessian XᵀSX + λI (S = σ(1−σ)) with an
-    intercept column appended; per-partition partials are (d+1)×(d+2)
+    intercept column appended; per-partition partials are (d+2)²
     doubles, so driver traffic is O(d²·partitions) per step — independent
     of row count.  The (d+1)² Newton solve runs on the driver; the
     updated coefficient vector re-broadcasts each step (the iterative
@@ -198,54 +323,19 @@ def logreg_fit_newton(
 
     Returns (weights, intercept).
     """
-    spark = df.sparkSession
-    src = df.select(features_col, label_col)
-    d1 = None
-    w = None
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(w)
 
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wv = bc.value
-            g = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.vstack(pdf[features_col].map(np.asarray).to_numpy()).astype(
-                    np.float64
-                )
-                x = np.hstack([x, np.ones((len(x), 1))])
-                y = pdf[label_col].to_numpy(dtype=np.float64)
-                wb = np.zeros(x.shape[1]) if wv is None else wv
-                z = x @ wb
-                p = 1.0 / (1.0 + np.exp(-z))
-                s = p * (1.0 - p)
-                # [XᵀSX | Xᵀ(y−p) | n] — one (d+1)×(d+2) partial + count
-                m = np.hstack([x.T @ (x * s[:, None]), (x.T @ (y - p))[:, None]])
-                m = np.vstack([m, np.zeros((1, m.shape[1]))])
-                m[-1, -1] = float(len(y))
-                g = m if g is None else g + m
-            if g is not None:
-                yield pd.DataFrame({"d": [g.shape[0] - 1], "p": [g.tobytes()]})
+    def stat(x, y, wv):
+        x = _with_intercept(x)
+        z = x @ (np.zeros(x.shape[1]) if wv is None else wv[:, 0])
+        p = 1.0 / (1.0 + np.exp(-z))
+        s = p * (1.0 - p)
+        return _newton_partial(x.T @ (x * s[:, None]), x.T @ (y - p), len(y))
 
-        rows = src.mapInPandas(partials, "d int, p binary").collect()
-        if not rows:
-            raise ValueError("logreg_fit_newton: empty input")
-        d1 = rows[0].d
-        total = np.zeros((d1 + 1, d1 + 1))
-        for row in rows:
-            total += np.frombuffer(row.p).reshape(d1 + 1, d1 + 1)
-        h, grad, n = total[:d1, :d1], total[:d1, d1], total[d1, d1]
-        if w is None:
-            w = np.zeros(d1)
-        reg = np.eye(d1) * l2
-        reg[-1, -1] = 0.0  # never shrink the intercept
-        grad = grad - reg @ w
-        if np.abs(grad).max() / max(1.0, n) < tol:
-            break
-        # damping floor keeps the Hessian invertible when σ saturates
-        w = w + np.linalg.solve(h + reg + np.eye(d1) * 1e-12, grad)
-    return w[:-1], float(w[-1])
+    w = _newton(
+        df, features_col, label_col, stat, 1, l2, iters, tol, 1e-12,
+        "logreg_fit_newton",
+    )
+    return w[:-1, 0], float(w[-1, 0])
 
 
 def softmax_fit_newton(
@@ -267,79 +357,43 @@ def softmax_fit_newton(
     gradient Xᵀ(Y − P) − λW (Y one-hot, P row-softmax, intercept column
     appended) and the FULL Newton Hessian: K×K blocks
     H[a,b] = Xᵀ diag(pₐ(δ_ab − p_b)) X + λδ_ab·I.  Per-partition
-    partials are ((d+1)K)² + (d+1)K doubles — independent of row count,
+    partials are ((d+1)K + 1)² doubles — independent of row count,
     ~0.9 MB at d=64, K=5 — so driver traffic stays O((dK)²·partitions)
     per step while the solve runs once on the driver.  λ > 0 also pins
     the softmax's sum-shift degeneracy (the unregularized problem is
     invariant to adding a constant column), so the optimum is unique;
-    intercept rows are not penalized.  Stops once max |gradient| per row
-    drops below `tol`.
+    intercept rows are not penalized, and a damping floor keeps the
+    only-PSD Hessian's solve well-posed.  Stops once max |gradient| per
+    row drops below `tol`.
 
     Returns (weights (d, K), intercepts (K,)).
     """
-    spark = df.sparkSession
-    src = df.select(features_col, label_col)
     k = int(n_classes)
-    w = None  # (d+1, K) once d is known
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(w)
 
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wv = bc.value
-            acc = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.vstack(pdf[features_col].map(np.asarray).to_numpy()).astype(
-                    np.float64
-                )
-                x = np.hstack([x, np.ones((len(x), 1))])
-                d1 = x.shape[1]
-                y = pdf[label_col].to_numpy(dtype=np.int64)
-                wb = np.zeros((d1, k)) if wv is None else wv
-                z = x @ wb
-                z -= z.max(axis=1, keepdims=True)
-                p = np.exp(z)
-                p /= p.sum(axis=1, keepdims=True)
-                onehot = np.zeros((len(y), k))
-                onehot[np.arange(len(y)), y] = 1.0
-                g = x.T @ (onehot - p)  # (d1, K)
-                h = np.zeros((d1 * k, d1 * k))
-                for a in range(k):
-                    for b in range(a, k):
-                        s = p[:, a] * ((1.0 if a == b else 0.0) - p[:, b])
-                        blk = x.T @ (x * s[:, None])
-                        h[a * d1 : (a + 1) * d1, b * d1 : (b + 1) * d1] += blk
-                        if b != a:  # Hessian is block-symmetric
-                            h[b * d1 : (b + 1) * d1, a * d1 : (a + 1) * d1] += blk
-                m = np.concatenate([h.ravel(), g.ravel(order="F"), [float(len(y))]])
-                acc = m if acc is None else acc + m
-            if acc is not None:
-                yield pd.DataFrame({"d": [d1], "p": [acc.tobytes()]})
+    def stat(x, y, wv):
+        x = _with_intercept(x)
+        d1 = x.shape[1]
+        y = y.astype(np.int64)
+        z = x @ (np.zeros((d1, k)) if wv is None else wv)
+        z -= z.max(axis=1, keepdims=True)
+        p = np.exp(z)
+        p /= p.sum(axis=1, keepdims=True)
+        onehot = np.zeros((len(y), k))
+        onehot[np.arange(len(y)), y] = 1.0
+        h = np.zeros((d1 * k, d1 * k))
+        for a in range(k):
+            for b in range(a, k):
+                s = p[:, a] * ((1.0 if a == b else 0.0) - p[:, b])
+                blk = x.T @ (x * s[:, None])
+                h[a * d1 : (a + 1) * d1, b * d1 : (b + 1) * d1] += blk
+                if b != a:  # Hessian is block-symmetric
+                    h[b * d1 : (b + 1) * d1, a * d1 : (a + 1) * d1] += blk
+        return _newton_partial(h, (x.T @ (onehot - p)).ravel(order="F"), len(y))
 
-        rows = src.mapInPandas(partials, "d int, p binary").collect()
-        if not rows:
-            raise ValueError("softmax_fit_newton: empty input")
-        d1 = rows[0].d
-        dk = d1 * k
-        total = np.zeros(dk * dk + dk + 1)
-        for row in rows:
-            total += np.frombuffer(row.p)
-        h = total[: dk * dk].reshape(dk, dk)
-        grad = total[dk * dk : dk * dk + dk]
-        n = total[-1]
-        if w is None:
-            w = np.zeros((d1, k))
-        # λ on every weight, never on the K intercept rows
-        reg = np.full(dk, l2)
-        reg[d1 - 1 :: d1] = 0.0
-        grad = grad - reg * w.ravel(order="F")
-        if np.abs(grad).max() / max(1.0, n) < tol:
-            break
-        # Hessian is only PSD (softmax shift degeneracy) — λ-regularized
-        # diagonal plus a damping floor keeps the solve well-posed
-        step = np.linalg.solve(h + np.diag(reg) + np.eye(dk) * 1e-10, grad)
-        w = w + step.reshape(d1, k, order="F")
+    w = _newton(
+        df, features_col, label_col, stat, k, l2, iters, tol, 1e-10,
+        "softmax_fit_newton",
+    )
     return w[:-1], np.asarray(w[-1])
 
 
@@ -370,42 +424,15 @@ def kfold_ridge(
     intercept, val_mse}, sorted by fold.
     """
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accum: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for fold, sub in pdf.groupby(fold_col):
-                x = np.vstack(sub[features_col].map(np.asarray).to_numpy()).astype(
-                    np.float64
-                )
-                z = np.hstack(
-                    [
-                        x,
-                        np.ones((len(x), 1)),
-                        sub[label_col].to_numpy(dtype=np.float64)[:, None],
-                    ]
-                )
-                m = z.T @ z
-                key = int(fold)
-                accum[key] = m if key not in accum else accum[key] + m
-        for fold, m in accum.items():
-            yield pd.DataFrame(
-                {"fold": [fold], "d": [m.shape[0]], "p": [m.tobytes()]}
-            )
+    def stat(x, y, _):
+        z = np.hstack([_with_intercept(x), y.astype(np.float64)[:, None]])
+        return z.T @ z
 
-    rows = df.select(fold_col, features_col, label_col).mapInPandas(
-        partials, "fold long, d int, p binary"
-    ).collect()
-    if not rows:
+    per = batch_sums(df, stat, [features_col, label_col], by=fold_col)
+    if not per:
         raise ValueError("kfold_ridge: empty input")
-    d2 = rows[0].d  # d + 2 (intercept + label)
-    per: dict[int, np.ndarray] = {}
-    for row in rows:
-        m = np.frombuffer(row.p).reshape(d2, d2)
-        per[row.fold] = m if row.fold not in per else per[row.fold] + m
     total = sum(per.values())
-    d1 = d2 - 1  # features + intercept
+    d1 = total.shape[0] - 1  # features + intercept
     reg = np.eye(d1) * l2
     reg[-1, -1] = 0.0  # never shrink the intercept
     out = []
@@ -443,26 +470,29 @@ def make_classification_blocks(
     """
     per = (n_samples + n_partitions - 1) // n_partitions
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for pid in pdf["id"]:
-                rng = np.random.default_rng(seed + int(pid))
-                n = min(per, n_samples - int(pid) * per)
+    def gen(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            for pid in rb.column(0).to_pylist():
+                rng = np.random.default_rng(seed + pid)
+                n = min(per, n_samples - pid * per)
                 if n <= 0:
                     continue
                 w = np.random.default_rng(seed).standard_normal(n_features)
                 x = rng.standard_normal((n, n_features))
-                y = (x @ w >= 0).astype(np.int32)
-                yield pd.DataFrame(
-                    {
-                        "sample_id": np.arange(int(pid) * per, int(pid) * per + n),
-                        "features": list(x),
-                        "label": y,
-                    }
+                offsets = np.arange(0, x.size + 1, n_features, dtype=np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.arange(pid * per, pid * per + n)),
+                        pa.ListArray.from_arrays(offsets, x.ravel()),
+                        pa.array((x @ w >= 0).astype(np.int32)),
+                    ],
+                    names=["sample_id", "features", "label"],
                 )
 
     # partition count fixed at range creation — no repartition shuffle
-    return spark.range(0, n_partitions, 1, n_partitions).mapInPandas(
+    return spark.range(0, n_partitions, 1, n_partitions).mapInArrow(
         gen, "sample_id long, features array<double>, label int"
     )
 

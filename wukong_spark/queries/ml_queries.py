@@ -1,7 +1,7 @@
 """ML inference through the driver contract (SURVEY.md §2.2 B-IV).
 
 `ml_predict_embeddings` runs the REAL distributed-inference path —
-broadcast model + Arrow-batched mapInPandas (wukong_spark.mlops) — with a
+broadcast model + Arrow-batched mapInArrow (wukong_spark.mlops) — with a
 fixed deterministic weight vector, so a DuckDB oracle can verify the
 decision function end-to-end: the parity test the reference itself uses
 (local predict vs distributed predict, README.md:294-304), with SQL as
@@ -401,37 +401,22 @@ def ml_linreg_check(spark: SparkSession, sf_dir: str):
       ridge bias, and λ=1e-6 is far below that slack.
 
     Only the verdicts leave the cluster."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from wukong_spark.mlops import linreg_fit_normal
+    from wukong_spark.mlops import batch_sums, linreg_fit_normal
 
     e = tbl(spark, sf_dir, "embeddings").selectExpr(
         "CAST(embedding AS array<double>) AS features", "CAST(label AS double) AS label"
     )
     e = e.persist()  # read by the fit pass and the verification pass
     w, b = linreg_fit_normal(e, l2=1e-6)
-    bc = spark.sparkContext.broadcast((w, b))
 
-    def verify(batches):
-        wv, bv = bc.value
-        g = None  # [Xᵀr (d) | Σr², Σy, Σy², n]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["features"].map(np.asarray).to_numpy()).astype(np.float64)
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            r = y - (x @ wv + bv)
-            m = np.concatenate(
-                [x.T @ r, [float(r @ r), float(y.sum()), float(y @ y), float(len(y))]]
-            )
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
+    def verify(x, y, wb):
+        r = y - (x @ wb[0] + wb[1])  # [Xᵀr (d) | Σr², Σy, Σy², n]
+        return np.concatenate(
+            [x.T @ r, [float(r @ r), float(y.sum()), float(y @ y), float(len(y))]]
+        )
 
-    parts = e.select("features", "label").mapInPandas(verify, "p binary").collect()
+    total = batch_sums(e, verify, ["features", "label"], params=(w, b))
     e.unpersist()
-    total = np.sum([np.frombuffer(row.p) for row in parts], axis=0)
     d = len(w)
     grad, sse, sy, syy, n = total[:d], total[d], total[d + 1], total[d + 2], total[d + 3]
     # ‖Xᵀy‖∞ = ‖Xᵀr + XᵀXβ-ish‖ scale anchor: use the gradient's natural
@@ -443,6 +428,35 @@ def ml_linreg_check(spark: SparkSession, sf_dir: str):
         [(bool(grad_rel < 1e-8), bool(sse < sse_mean), d)],
         "gradient_zero boolean, beats_mean_baseline boolean, n_features int",
     )
+
+
+def logreg_verdicts(df, w: np.ndarray, b: float, l2: float) -> tuple[bool, bool, float]:
+    """The logistic-fit contract, checked in one `batch_sums` pass over
+    the (features, label) rows of `df`, independent of the solver's
+    accumulators: (gradient_zero, beats_null_logloss, n).
+
+    - gradient_zero: ‖Xᵀ(y−σ(Xw)) − λw‖∞ / max(1, n) < 1e-8, recomputed
+      from per-row probabilities;
+    - beats_null_logloss: Σ logloss(model) < Σ logloss(ȳ), the
+      base-rate-only model's."""
+    from wukong_spark.mlops import batch_sums
+
+    def verify(x, y, wb):
+        z = x @ wb[0] + wb[1]  # [Xᵀ(y−p) (d) | Σ logloss, Σy, n]
+        p = 1.0 / (1.0 + np.exp(-z))
+        # numerically-stable per-row logloss: log(1+e^z) − y·z
+        ll = np.logaddexp(0.0, z) - y * z
+        return np.concatenate(
+            [x.T @ (y - p), [float(ll.sum()), float(y.sum()), float(len(y))]]
+        )
+
+    total = batch_sums(df, verify, ["features", "label"], params=(w, b))
+    d = len(w)
+    grad, ll_model, sy, n = total[:d], total[d], total[d + 1], total[d + 2]
+    grad_rel = float(np.abs(grad - l2 * w).max()) / max(1.0, float(n))
+    pbar = sy / n
+    ll_null = -n * (pbar * np.log(pbar) + (1 - pbar) * np.log(1 - pbar))
+    return bool(grad_rel < 1e-8), bool(ll_model < ll_null), n
 
 
 @query(
@@ -467,9 +481,6 @@ def ml_logreg_check(spark: SparkSession, sf_dir: str):
       at λ this small.
 
     Only the verdicts leave the cluster (la_gemm_check pattern)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     from wukong_spark.mlops import logreg_fit_newton
 
     e = tbl(spark, sf_dir, "embeddings").selectExpr(
@@ -478,40 +489,11 @@ def ml_logreg_check(spark: SparkSession, sf_dir: str):
     )
     e = e.persist()  # read by every Newton pass and the verification pass
     w, b = logreg_fit_newton(e, l2=1e-3)
-    bc = spark.sparkContext.broadcast((w, b))
-
-    def verify(batches):
-        wv, bv = bc.value
-        g = None  # [Xᵀ(y−p) (d) | Σ logloss_model, Σy, n]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["features"].map(np.asarray).to_numpy()).astype(
-                np.float64
-            )
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            z = x @ wv + bv
-            p = 1.0 / (1.0 + np.exp(-z))
-            # numerically-stable per-row logloss: log(1+e^z) − y·z
-            ll = np.logaddexp(0.0, z) - y * z
-            m = np.concatenate(
-                [x.T @ (y - p), [float(ll.sum()), float(y.sum()), float(len(y))]]
-            )
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
-
-    parts = e.select("features", "label").mapInPandas(verify, "p binary").collect()
+    gradient_zero, beats_null, _ = logreg_verdicts(e, w, b, 1e-3)
     e.unpersist()
-    total = np.sum([np.frombuffer(row.p) for row in parts], axis=0)
-    d = len(w)
-    grad, ll_model, sy, n = total[:d], total[d], total[d + 1], total[d + 2]
-    grad_rel = float(np.abs(grad - 1e-3 * w).max()) / max(1.0, float(n))
-    pbar = sy / n
-    ll_null = -n * (pbar * np.log(pbar) + (1 - pbar) * np.log(1 - pbar))
     return local_frame(
         spark,
-        [(bool(grad_rel < 1e-8), bool(ll_model < ll_null), d)],
+        [(gradient_zero, beats_null, len(w))],
         "gradient_zero boolean, beats_null_logloss boolean, n_features int",
     )
 
@@ -539,10 +521,7 @@ def ml_softmax_check(spark: SparkSession, sf_dir: str):
       frequency model at λ this small.
 
     Only the verdicts leave the cluster (ml_logreg_check pattern)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from wukong_spark.mlops import softmax_fit_newton
+    from wukong_spark.mlops import batch_sums, softmax_fit_newton
 
     k = 5
     e = tbl(spark, sf_dir, "embeddings").selectExpr(
@@ -551,37 +530,26 @@ def ml_softmax_check(spark: SparkSession, sf_dir: str):
     )
     e = e.persist()  # read by every Newton pass and the verification pass
     w, b = softmax_fit_newton(e, n_classes=k, l2=1e-3)
-    bc = spark.sparkContext.broadcast((w, b))
 
-    def verify(batches):
-        wv, bv = bc.value
-        g = None  # [Xᵀ(Y−P) ((d+1)·K) | Σ −log p(yᵢ) | per-class counts (K)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["features"].map(np.asarray).to_numpy()).astype(
-                np.float64
-            )
-            y = pdf["label"].to_numpy(dtype=np.int64)
-            xi = np.hstack([x, np.ones((len(x), 1))])
-            z = xi @ np.vstack([wv, bv])
-            z -= z.max(axis=1, keepdims=True)
-            p = np.exp(z)
-            p /= p.sum(axis=1, keepdims=True)
-            onehot = np.zeros((len(y), len(bv)))
-            onehot[np.arange(len(y)), y] = 1.0
-            ll = -np.log(np.maximum(p[np.arange(len(y)), y], 1e-300))
-            counts = np.bincount(y, minlength=len(bv)).astype(np.float64)
-            m = np.concatenate(
-                [(xi.T @ (onehot - p)).ravel(order="F"), [float(ll.sum())], counts]
-            )
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
+    def verify(x, y, wb):
+        # [Xᵀ(Y−P) ((d+1)·K) | Σ −log p(yᵢ) | per-class counts (K)]
+        wv, bv = wb
+        y = y.astype(np.int64)
+        xi = np.hstack([x, np.ones((len(x), 1))])
+        z = xi @ np.vstack([wv, bv])
+        z -= z.max(axis=1, keepdims=True)
+        p = np.exp(z)
+        p /= p.sum(axis=1, keepdims=True)
+        onehot = np.zeros((len(y), len(bv)))
+        onehot[np.arange(len(y)), y] = 1.0
+        ll = -np.log(np.maximum(p[np.arange(len(y)), y], 1e-300))
+        counts = np.bincount(y, minlength=len(bv)).astype(np.float64)
+        return np.concatenate(
+            [(xi.T @ (onehot - p)).ravel(order="F"), [float(ll.sum())], counts]
+        )
 
-    parts = e.select("features", "label").mapInPandas(verify, "p binary").collect()
+    total = batch_sums(e, verify, ["features", "label"], params=(w, b))
     e.unpersist()
-    total = np.sum([np.frombuffer(row.p) for row in parts], axis=0)
     d1 = w.shape[0] + 1
     grad = total[: d1 * k].reshape(d1, k, order="F")
     grad[:-1] -= 1e-3 * w

@@ -2352,10 +2352,8 @@ def text_quality_classifier_check(spark: SparkSession, sf_dir: str):
     Only verdict booleans and deterministic counts leave the cluster;
     training is one gradient/Hessian pass per Newton step with d=4, so
     driver traffic is O(d²·partitions·steps) at any corpus size."""
-    import numpy as np
-    import pandas as pd
-
     from wukong_spark.mlops import logreg_fit_newton
+    from wukong_spark.queries.ml_queries import logreg_verdicts
 
     d = tbl(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -2376,39 +2374,10 @@ def text_quality_classifier_check(spark: SparkSession, sf_dir: str):
     )
     feats = feats.persist()
     w, b = logreg_fit_newton(feats, l2=1e-3)
-    bc = spark.sparkContext.broadcast((w, b))
-
-    def verify(batches):
-        wv, bv = bc.value
-        g = None  # [Xᵀ(y−p) (d) | Σ logloss, Σy, n, n_correct]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["features"].map(np.asarray).to_numpy()).astype(
-                np.float64
-            )
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            z = x @ wv + bv
-            p = 1.0 / (1.0 + np.exp(-z))
-            ll = np.logaddexp(0.0, z) - y * z
-            m = np.concatenate(
-                [x.T @ (y - p), [float(ll.sum()), float(y.sum()), float(len(y))]]
-            )
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
-
-    parts = feats.mapInPandas(verify, "p binary").collect()
+    gradient_zero, beats_null, n = logreg_verdicts(feats, w, b, 1e-3)
     feats.unpersist()
-    total = np.sum([np.frombuffer(row.p) for row in parts], axis=0)
-    nd = len(w)
-    grad, ll_model = total[:nd], total[nd]
-    sy, n = total[nd + 1], total[nd + 2]
-    grad_rel = float(np.abs(grad - 1e-3 * w).max()) / max(1.0, float(n))
-    pbar = sy / n
-    ll_null = -n * (pbar * np.log(pbar) + (1 - pbar) * np.log(1 - pbar))
     return local_frame(spark,
-        [(bool(grad_rel < 1e-8), bool(ll_model < ll_null), nd, int(n))],
+        [(gradient_zero, beats_null, len(w), int(n))],
         "gradient_zero boolean, beats_null_logloss boolean,"
         " n_features int, n_docs long",
     )

@@ -1051,10 +1051,11 @@ def embed_pca_check(spark: SparkSession, sf_dir: str):
     """PCA projection contract — the dimension-reduction step a vector
     pipeline runs before ANN indexing (64 → 8 components here).
 
-    Fit: one distributed pass accumulates per-partition (n, Σx, XᵀX)
-    partials (the linreg_fit_normal scaling story — O(d²·partitions)
-    driver traffic); driver eigh gives the top-k components.  Project:
-    components broadcast, one vectorized mapInPandas pass.
+    Fit: one `mlops.batch_sums` pass accumulates per-partition
+    (n, Σx, XᵀX) partials (the linreg_fit_normal scaling story —
+    O(d²·partitions) driver traffic); driver eigh gives the top-k
+    components.  Project: the same moments statistic, with the mean and
+    components broadcast, over the projected vectors.
 
     Contracts, each verified by an INDEPENDENT second distributed pass
     over the PROJECTED vectors:
@@ -1065,7 +1066,7 @@ def embed_pca_check(spark: SparkSession, sf_dir: str):
     - variance_captured: top-8 eigenvalue mass / total variance matches
       the projected total variance ratio.
     Only verdicts leave the cluster."""
-    import pandas as pd
+    from wukong_spark.mlops import batch_sums
 
     k = 8
     e = tbl(spark, sf_dir, "embeddings").selectExpr(
@@ -1073,21 +1074,12 @@ def embed_pca_check(spark: SparkSession, sf_dir: str):
     )
     e = e.persist()  # read by the fit pass and the verification pass
 
-    def moments(batches):
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["v"].map(np.asarray).to_numpy()).astype(np.float64)
-            m = np.concatenate(
-                [[float(len(x))], x.sum(axis=0), (x.T @ x).ravel()]
-            )
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
+    def moments(x, proj):
+        # [n | Σz (d) | ZᵀZ (d²)] of z = x, or of its projection (x − μ)·W
+        z = x if proj is None else (x - proj[0]) @ proj[1]
+        return np.concatenate([[float(len(z))], z.sum(axis=0), (z.T @ z).ravel()])
 
-    rows = e.mapInPandas(moments, "p binary").collect()
-    total = np.sum([np.frombuffer(r.p) for r in rows], axis=0)
+    total = batch_sums(e, moments, ["v"])
     # payload layout is [n | Σx (d) | XᵀX (d²)] → d from the quadratic
     d = int((-1 + (1 + 4 * (len(total) - 1)) ** 0.5) / 2)
     n, sx, xtx = total[0], total[1 : 1 + d], total[1 + d :].reshape(d, d)
@@ -1097,25 +1089,8 @@ def embed_pca_check(spark: SparkSession, sf_dir: str):
     order = np.argsort(evals)[::-1]
     evals, evecs = evals[order], evecs[:, order]
     comp = evecs[:, :k]  # d×k
-    bc = e.sparkSession.sparkContext.broadcast((mean, comp))
-
-    def project_moments(batches):
-        mu, w = bc.value
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["v"].map(np.asarray).to_numpy()).astype(np.float64)
-            z = (x - mu) @ w
-            m = np.concatenate([[float(len(z))], z.sum(axis=0), (z.T @ z).ravel()])
-            g = m if g is None else g + m
-        if g is not None:
-            yield pd.DataFrame({"p": [g.tobytes()]})
-
-    rows = e.mapInPandas(project_moments, "p binary").collect()
+    ptotal = batch_sums(e, moments, ["v"], params=(mean, comp))
     e.unpersist()
-    bc.unpersist()  # release the (mean, components) broadcast on executors
-    ptotal = np.sum([np.frombuffer(r.p) for r in rows], axis=0)
     pn, psx, pzz = ptotal[0], ptotal[1 : 1 + k], ptotal[1 + k :].reshape(k, k)
     pcov = pzz / pn - np.outer(psx / pn, psx / pn)
     off = pcov - np.diag(np.diag(pcov))

@@ -282,9 +282,10 @@ class scoped_shuffle_partitions:
     latency: on a default 200-partition session a 10-round loop burns
     thousands of near-empty tasks regardless of data size.  Size the
     loop's exchanges to the per-iteration STATE (the label/survivor set),
-    not to the edge-scan default — same discipline as the streaming
-    state-store pin (`streaming._scoped_state_partitions`), which sizes
-    by state volume at stream start.
+    not to the edge-scan default.  The streaming runners
+    (`streaming.run_to_memory`, `streaming.run_foreach_batch`) wrap a
+    query's start in the same scope, which there fixes the state-store
+    partition count (`streaming.default_state_partitions`).
 
     Session confs are session-global: don't run concurrent queries on
     other threads of the same session inside the scope."""

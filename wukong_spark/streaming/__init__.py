@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wukong_spark.session import load_table
+from wukong_spark.session import load_table, scoped_shuffle_partitions
 
 EVENTS_SCHEMA = "event_id long, ts long, user_id long, event_type string, value double, props string"
 
@@ -158,41 +158,18 @@ def windowed_counts(
     )
 
 
-class _scoped_state_partitions:
-    """Pin `spark.sql.shuffle.partitions` around a streaming query START.
-
-    A streaming query bakes its state-store partition count from this
-    conf at .start() (it persists in the checkpoint thereafter), and
-    every stateful operator pays per-partition store init/commit on
-    EVERY micro-batch — on a 200-partition default session a two-store
-    stream-stream join burns ~25 s of pure state-store latency at any
-    data size.  Size it to the STATE volume, not the session default:
-    the availableNow verification default is the local core count;
-    production jobs with large keyed state pass their own value (or
-    None to inherit the session conf untouched)."""
-
-    KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get(self.KEY, None)
-            self.spark.conf.set(self.KEY, str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            if self.prev is None:
-                self.spark.conf.unset(self.KEY)
-            else:
-                self.spark.conf.set(self.KEY, self.prev)
-        return False
-
-
 def default_state_partitions(spark: SparkSession) -> int:
-    """Local core count — the availableNow gate default for state stores."""
+    """Local core count — the availableNow gate default for state stores.
+
+    A streaming query bakes its state-store partition count from
+    `spark.sql.shuffle.partitions` at .start() (it persists in the
+    checkpoint thereafter), and every stateful operator pays
+    per-partition store init/commit on EVERY micro-batch — on a
+    200-partition default session a two-store stream-stream join burns
+    ~25 s of pure state-store latency at any data size.  So the runners
+    below size it to the STATE volume under
+    `session.scoped_shuffle_partitions`; production jobs with large keyed
+    state pass their own value (or None to inherit the session conf)."""
     return spark.sparkContext.defaultParallelism
 
 
@@ -209,11 +186,11 @@ def run_to_memory(
     `mode` overrides the complete/append switch (e.g. "update" for
     applyInPandasWithState operators).  `state_partitions` sizes the
     query's state-store partition count (0 = local core count, None =
-    inherit the session conf — see _scoped_state_partitions)."""
+    inherit the session conf — see default_state_partitions)."""
     spark = stream_df.sparkSession
     if state_partitions == 0:
         state_partitions = default_state_partitions(spark)
-    with _scoped_state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
@@ -286,7 +263,7 @@ def run_foreach_batch(
     spark = stream_df.sparkSession
     if state_partitions == 0:
         state_partitions = default_state_partitions(spark)
-    with _scoped_state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             stream_df.writeStream.foreachBatch(handle)
             .trigger(availableNow=True)

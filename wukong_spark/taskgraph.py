@@ -477,6 +477,8 @@ class WukongClient:
         def cancel_hook() -> bool:
             if pf.cancel():
                 return True  # never started
+            if pf.done():
+                return False  # finished: keeps its result, as in the stdlib
             cancelled.set()
             try:
                 self.spark.sparkContext.cancelJobGroup(group)
